@@ -82,7 +82,7 @@ object Tables {
     *
     * The driver has shipped the `ts` column under two physical types
     * across rounds — TIMESTAMP(NANOS) (read as epoch-nanos BIGINT via
-    * the `nanosAsLong` session flag, floor-truncated by `div 1000`
+    * the `nanosAsLong` session flag, truncated toward zero by `div 1000`
     * exactly as DuckDB's `epoch_us` truncates TIMESTAMP_NS) and
     * TIMESTAMP(MICROS) (read as TIMESTAMP_NTZ) — so the reader branches
     * on the type it actually finds rather than assuming one. The

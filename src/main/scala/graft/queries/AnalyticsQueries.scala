@@ -111,10 +111,13 @@ object AnalyticsQueries {
     // AND the outlier count are all functions of the SAME per-segment
     // value multiset — so ONE sorted-values aggregate per segment
     // replaces three full fact scans plus two percentile
-    // broadcast-join rounds. The per-group state (the value list) is
-    // EXACTLY the buffer the exact `percentile` aggregate already
-    // kept per group, so the memory story is unchanged and the
-    // documented 100 TB swap point (approx_percentile) still applies.
+    // broadcast-join rounds. The per-group state is NOT the exact
+    // `percentile` buffer: that one keeps a (value → count) map, one
+    // entry per DISTINCT value, while `collect_list` buffers EVERY row
+    // of the segment (and ships every row through the exchange into
+    // the 5 reducer groups), so per-task memory grows with rows, not
+    // distinct values. The documented 100 TB swap point
+    // (approx_percentile) still applies.
     // `interp` replicates PercentileBase.getPercentile bit-for-bit:
     //   pos = p·(n−1); (ceil(pos)−pos)·lo + (pos−floor(pos))·hi
     // (o_totalprice is DECIMAL(12,2) — exact in double, so the cast

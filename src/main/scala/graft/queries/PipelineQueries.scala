@@ -5257,45 +5257,45 @@ object PipelineQueries {
     * shape none of the other graph operators exercise (pagerank/HITS
     * iterate over ALL nodes; BFS's working set is the frontier).
     *
-    * Scale shape: per round ONE equi-join frontier⋉edges (the frontier
-    * side is small and shrinks after the reachable set saturates —
-    * AQE broadcasts it) and one anti-join against the visited set,
-    * which is a union of per-round persisted frontiers (each bounded
-    * by the node set, never edge-sized). Depth is fixed (3 — the
-    * bipartite diameter here); distances are exact integers. The
-    * DuckDB oracle is a recursive CTE with UNION-dedup — a genuinely
-    * different evaluation strategy (semi-naive fixpoint) arriving at
-    * the identical level sets, which is the point of the check. */
+    * Scale shape: depth is fixed (3 — the bipartite diameter here), so
+    * the distributed form is ONE plan over the distinct (p, s) pairs,
+    * with no per-round persist or materialisation. On a bipartite graph
+    * a node can only be reached again at a level of the same parity, so
+    * the visited check per level is one anti-join against the level two
+    * back:
+    *   S1 = suppliers of the seed part;
+    *   P2 = parts ⋉ S1, minus the seed;
+    *   S3 = suppliers ⋉ P2, minus S1.
+    * Each level is a semi-join of the pair table against a frontier
+    * bounded by the node set (AQE broadcasts the small ones); distances
+    * are exact integers. The DuckDB oracle is a recursive CTE with
+    * UNION-dedup — a genuinely different evaluation strategy
+    * (semi-naive fixpoint) arriving at the identical level sets, which
+    * is the point of the check. */
   /** Dense-first dispatch — see [[graphPagerank]]. */
   def graphBfsLevels(s: SparkSession, d: String): DataFrame =
     graft.operators.BipartiteFixpoint.bfsLevels(s, d)
       .getOrElse(graphBfsLevelsDistributed(s, d))
 
   def graphBfsLevelsDistributed(s: SparkSession, d: String): DataFrame = {
-    val (pairs, edges) = partSupplierGraph(s, d)
-    val seed = Tables.lineitem(s, d)
-      .agg((min(col("l_partkey")) * 2).as("node_id"))
-      .withColumn("dist", lit(0))
-      .persist()
-    val frontiers = scala.collection.mutable.Buffer[DataFrame](seed)
-    var visited = seed
-    var frontier: DataFrame = seed.select("node_id")
-    for (k <- 1 to 3) {
-      val next = frontier.join(edges, col("node_id") === col("src"))
-        .select(col("dst").as("node_id")).distinct()
-        .join(visited, Seq("node_id"), "left_anti")
-        .withColumn("dist", lit(k))
-        .persist()
-      frontiers += next
-      visited = visited.unionByName(next)
-      frontier = next.select("node_id")
-    }
-    val out = visited
+    val pairs = Tables.lineitem(s, d)
+      .select(col("l_partkey").as("p"), col("l_suppkey").as("s"))
+      .distinct()
+    val seed = Tables.lineitem(s, d).agg(min(col("l_partkey")).as("p"))
+    val s1 = pairs.join(seed, Seq("p"), "left_semi").select("s")
+    val p2 = pairs.join(s1, Seq("s"), "left_semi").select("p").distinct()
+      .join(seed, Seq("p"), "left_anti")
+    val s3 = pairs.join(p2, Seq("p"), "left_semi").select("s").distinct()
+      .join(s1, Seq("s"), "left_anti")
+    def parts(df: DataFrame, k: Int) =
+      df.select((col("p") * 2).as("node_id"), lit(k).as("dist"))
+    def suppliers(df: DataFrame, k: Int) =
+      df.select((col("s") * 2 + 1).as("node_id"), lit(k).as("dist"))
+    parts(seed, 0).unionByName(suppliers(s1, 1))
+      .unionByName(parts(p2, 2)).unionByName(suppliers(s3, 3))
       .select(col("node_id"), (col("node_id") % 2 === 1).as("is_supplier"),
         col("dist"))
       .orderBy("node_id")
-    graft.pipeline.Caching.materializeAndRelease(
-      out, (Seq(pairs, edges) ++ frontiers): _*)
   }
 
   val graphBfsLevelsSql: String = """

@@ -355,26 +355,36 @@ object Relational {
     * sessions are 1 µs, still joinable); the match is emitted only in
     * the first overlap bucket, so no pair-set distinct exists in the
     * plan. */
-  def sessionWindowOverlap(s: SparkSession, d: String): DataFrame = {
+  def sessionWindowOverlap(s: SparkSession, d: String): DataFrame =
+    sessionWindowOverlapAt(s, d, footerT0(s, d))
+
+  /** t0 = min(ts_us) from the parquet FOOTER statistic (r18: zero jobs —
+    * the DenseGraph/BipartiteFixpoint longMinMax pattern — instead of a
+    * second full events scan + broadcast-build job); the stored unit
+    * (nanos under nanosAsLong ⇒ LongType, else micros) follows the same
+    * dispatch Tables.events uses, and nanos convert with the same
+    * truncating `div 1000` (pre-epoch nanos truncate toward zero, not
+    * down). None when the footer lacks the statistic. */
+  private[graft] def footerT0(s: SparkSession, d: String): Option[Long] =
+    graft.sources.ParquetStats
+      .longMinMax(s, s"$d/events.parquet", "ts").map { case (mn, _) =>
+        graft.Tables.table(s, d, "events").schema("ts").dataType match {
+          case org.apache.spark.sql.types.LongType =>
+            mn / 1000L // stored nanos → ts_us
+          case _ => mn // stored micros
+        }
+      }
+
+  /** [[sessionWindowOverlap]] with a known t0, or — given None — t0
+    * from a scan of events. */
+  private[graft] def sessionWindowOverlapAt(s: SparkSession, d: String,
+                                            t0Lit: Option[Long])
+      : DataFrame = {
     // r18: sessionizeCore, not sessionize — the output ORDER BY was
     // not eliminated under this consumer's explode+join and survived
     // as a range exchange + sampling job the overlap never needed.
     val sess = sessionizeCore(s, d).select(col("user_id"),
       col("session_idx"), col("start_ns"), (col("end_ns") + 1).as("end_x"))
-    // r18: t0 = min(ts_us) comes from the parquet FOOTER statistic
-    // (zero jobs — the DenseGraph/BipartiteFixpoint longMinMax
-    // pattern) instead of a second full events scan + broadcast-build
-    // job; the stored unit (nanos under nanosAsLong ⇒ LongType, else
-    // micros) follows the same dispatch Tables.events uses. Footers
-    // without the statistic fall back to the original scan.
-    val t0Lit: Option[Long] = graft.sources.ParquetStats
-      .longMinMax(s, s"$d/events.parquet", "ts").map { case (mn, _) =>
-        graft.Tables.table(s, d, "events").schema("ts").dataType match {
-          case org.apache.spark.sql.types.LongType =>
-            Math.floorDiv(mn, 1000L) // stored nanos → ts_us
-          case _ => mn               // stored micros
-        }
-      }
     val t0Row = t0Lit match {
       case Some(t0) => s.range(1).select(lit(t0).as("t0"))
       case None => Tables.events(s, d).agg(min(col("ts_us")).as("t0"))

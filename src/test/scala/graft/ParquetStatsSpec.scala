@@ -87,4 +87,43 @@ class ParquetStatsSpec extends SparkSpec {
     assert(ParquetStats.longMinMax(spark, s"$dir/t.parquet", "s").isEmpty)
     assert(ParquetStats.longMinMax(spark, s"$dir/t.parquet", "d").isEmpty)
   }
+
+  test("pre-epoch TIMESTAMP(NANOS) events: session_window_overlap gives " +
+      "the same rows from the footer t0 as from the scan t0") {
+    // Tables.events truncates nanos toward zero (`div 1000`); the footer
+    // t0 must too. Event 1 at −1500 ns is ts_us −1 (floor division would
+    // give −2); event 2 starts exactly 1 µs before the end of window 0
+    // under the true t0, so a 1 µs shift moves it out of that window.
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val schema = MessageTypeParser.parseMessageType("""message events {
+      optional int64 event_id; optional int64 ts (TIMESTAMP(NANOS,false));
+      optional int64 user_id; optional binary event_type (STRING);
+      optional double value; optional binary props (STRING); }""")
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-preepoch").toString
+    val w = ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(s"$dir/events.parquet"))
+      .withType(schema).build()
+    val f = new SimpleGroupFactory(schema)
+    Seq((0L, -1500L, 1L), (1L, -700L, 1L),
+        (2L, 5399999998123L, 2L)).foreach { case (id, ns, user) =>
+      w.write(f.newGroup().append("event_id", id).append("ts", ns)
+        .append("user_id", user).append("event_type", "view")
+        .append("value", 1.0).append("props", "{}"))
+    }
+    w.close()
+    try {
+      val rel = graft.queries.Relational
+      assert(rel.footerT0(spark, dir).contains(-1L))
+      val footer = rel.sessionWindowOverlapAt(spark, dir,
+        rel.footerT0(spark, dir)).collect().toSeq
+      val scan = rel.sessionWindowOverlapAt(spark, dir, None).collect().toSeq
+      assert(footer == scan)
+      assert(footer.head.getLong(0) == 0L && footer.head.getLong(1) == 2L,
+        s"window 0 must hold both sessions: $footer")
+    } finally org.apache.commons.io.FileUtils
+      .deleteDirectory(new java.io.File(dir))
+  }
 }
