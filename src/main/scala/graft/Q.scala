@@ -48,5 +48,6 @@ object Q {
 
   /** ISO-8601 UTC second-resolution formatting (reference F1 semantics,
     * xcube_server/utils.py:86-97). */
-  def iso(c: Column): Column = date_format(c, "yyyy-MM-dd'T'HH:mm:ss'Z'")
+  val IsoPattern = "yyyy-MM-dd'T'HH:mm:ss'Z'"
+  def iso(c: Column): Column = date_format(c, IsoPattern)
 }

@@ -63,10 +63,14 @@ final case class ExtraDim(name: String, values: Seq[Double],
   * standard): non-standard calendars (360_day, noleap, …) decode to
   * calendar-native epoch-us and their labels must format through
   * [[graft.sources.CfTime.isoLabel]], not java.time.
-  * `storePath` is set iff the DataFrame reads a chunked store
-  * (zarr/NetCDF) UNTRANSFORMED: the tile server may then serve windows
-  * by direct chunk reads (no Spark job). Every transform constructs a
-  * fresh CubeFrame, so derived frames drop it by default. */
+  * `storePath` is set iff the DataFrame reads a store (zarr/NetCDF/
+  * HDF5 chunks, or graft's parquet layout) UNTRANSFORMED. Two consumers
+  * then bypass the DataFrame and read the store directly, with no
+  * Spark job: the tile server's window reads, and the direct arm of
+  * the time-series operators ([[graft.operators.TimeSeries]], chunked
+  * stores only). Every transform constructs a fresh CubeFrame, so
+  * derived frames drop it by default; a `copy(df = …)` that filters or
+  * derives must drop it explicitly. */
 final case class CubeFrame(df: DataFrame, grid: CubeGrid,
                            variables: Seq[String],
                            timeAxis: Option[Seq[java.sql.Timestamp]] = None,

@@ -147,13 +147,15 @@ class GraftServer(ctx: ServiceContext, port: Int = 0) {
       case ("GET", "ts" :: ds :: v :: "point" :: Nil) =>
         withDataset(ex, ds) { d =>
           val trace = Perf.trace(tracePerf, s"GET /ts/$ds/$v/point")
-          val df = trace.stage("parse") {
+          val (cube, lon, lat, (start, end)) = trace.stage("parse") {
             val q = query(ex)
-            val (start, end) = dateRange(q, d.cube.timeCalendar)
-            TimeSeries.point(cubeFor(d, q), v,
-              q("lon").toDouble, q("lat").toDouble, start, end)
+            (cubeFor(d, q), q("lon").toDouble, q("lat").toDouble,
+              dateRange(q, d.cube.timeCalendar))
           }
-          val rows = trace.stage("query")(df.collect())
+          // the operator call is query work: its direct arm reads and
+          // aggregates before collect
+          val rows = trace.stage("query")(
+            TimeSeries.point(cube, v, lon, lat, start, end).collect())
           val body = trace.stage("encode")(
             Json.obj("results" -> Json.arr(rows.map(tsRowJson))))
           send(ex, 200, body, "application/json")
@@ -169,15 +171,15 @@ class GraftServer(ctx: ServiceContext, port: Int = 0) {
           // else is accepted as WKT — a graft extension, not reference
           // behavior.
           val trace = Perf.trace(tracePerf, s"POST /ts/$ds/$v/geometry")
-          val df = trace.stage("parse") {
+          val (cube, geom, (start, end)) = trace.stage("parse") {
             val geom =
               if (body.startsWith("{")) Geo.parseGeoJson(body)
               else Geo.parseWkt(body)
             val q = query(ex)
-            val (start, end) = dateRange(q, d.cube.timeCalendar)
-            TimeSeries.zonal(cubeFor(d, q), v, geom, start, end)
+            (cubeFor(d, q), geom, dateRange(q, d.cube.timeCalendar))
           }
-          val rows = trace.stage("query")(df.collect())
+          val rows = trace.stage("query")(
+            TimeSeries.zonal(cube, v, geom, start, end).collect())
           val respBody = trace.stage("encode")(
             Json.obj("results" -> Json.arr(rows.map(tsRowJson))))
           send(ex, 200, respBody, "application/json")
@@ -426,13 +428,16 @@ class GraftServer(ctx: ServiceContext, port: Int = 0) {
 
   /** one equality filter per extra dim from a resolved selection —
     * shared by the tile fallback and every ts route so plane-selection
-    * semantics can't diverge between them */
+    * semantics can't diverge between them. The filtered frame no longer
+    * reads the store untransformed, so it drops `storePath` (no direct
+    * arm may read around the filter). */
   private def planeFiltered(cube: graft.cube.CubeFrame,
                             sel: Seq[(String, Double, Int)])
       : graft.cube.CubeFrame =
     if (sel.isEmpty) cube
     else cube.copy(df = sel.foldLeft(cube.df) {
-      case (df, (n, vv, _)) => df.filter(col(n) === lit(vv)) })
+      case (df, (n, vv, _)) => df.filter(col(n) === lit(vv)) },
+      storePath = None)
 
   /** the dataset's cube with the request's extra-dim indexers applied
     * (one plane per extra dim — the equality predicate pushes to the
@@ -520,24 +525,25 @@ class GraftServer(ctx: ServiceContext, port: Int = 0) {
         // dispatch); values identical to the Spark scan by
         // construction. Anything transformed has no storePath and
         // keeps the Spark path.
-        val direct = cube.storePath.flatMap { p =>
-          try {
-            val us = t.getTime * 1000L + (t.getNanos / 1000) % 1000
-            graft.sources.DirectWindow
-              .read(p, v, us, y * 256, x * 256, 256, 256,
-                extra = extraSel)
-              .map(winVals => Render.renderWindow(winVals, 256, 256,
-                m, flipY = cube.grid.latAscending))
-          } catch { case scala.util.control.NonFatal(e) =>
-            System.err.println(s"[tile] direct read failed for $key: $e")
-            None
+        val png = trace.stage("render") {
+          val direct = cube.storePath.flatMap { p =>
+            try {
+              graft.sources.DirectWindow
+                .read(p, v, keyUs, y * 256, x * 256, 256, 256,
+                  extra = extraSel)
+                .map(winVals => Render.renderWindow(winVals, 256, 256,
+                  m, flipY = cube.grid.latAscending))
+            } catch { case scala.util.control.NonFatal(e) =>
+              System.err.println(s"[tile] direct read failed for $key: $e")
+              None
+            }
           }
+          direct.getOrElse(
+            // Spark path: one equality filter per extra dim — pushes to
+            // the store scan as a chunk-plane prune
+            Render.renderTile(planeFiltered(cube, extraSel), v, t, x, y,
+              256, 256, m, flipY = cube.grid.latAscending))
         }
-        val png = trace.stage("render")(direct.getOrElse(
-          // Spark path: one equality filter per extra dim — pushes to
-          // the store scan as a chunk-plane prune
-          Render.renderTile(planeFiltered(cube, extraSel), v, t, x, y,
-            256, 256, m, flipY = cube.grid.latAscending)))
         tileCache.put(key, png)
         trace.stage("send")(sendBytes(ex, 200, png, "image/png"))
     }
@@ -563,10 +569,6 @@ class GraftServer(ctx: ServiceContext, port: Int = 0) {
                         if (a.isNaN || a.isInfinite) "null" else a.toString
                       })))
 
-  /** Fan-out response: results = array of per-geometry result arrays
-    * (reference _get_time_series_for_geometries, time_series.py:208-219)
-    * — ONE Spark job over the unioned per-geometry plans, grouped back
-    * by geometry_index on the driver. */
   /** Shared find-places response for GET (WKT/bbox) and POST (GeoJSON
     * body): None = no query geometry → the WHOLE collection, exactly
     * like __find_places returning the raw place group
@@ -610,6 +612,11 @@ class GraftServer(ctx: ServiceContext, port: Int = 0) {
     }
   }
 
+  /** Fan-out response: results = array of per-geometry result arrays
+    * (reference _get_time_series_for_geometries, time_series.py:208-219)
+    * — one [[TimeSeries.zonalMany]] call (its direct arm, or one Spark
+    * job over all geometries), grouped back by geometry_index on the
+    * driver. */
   private def tsMany(ex: HttpExchange, d: RegisteredDataset, v: String,
                      geoms: Seq[graft.geo.Geo.Geometry],
                      range: (Option[java.sql.Timestamp],

@@ -37,7 +37,7 @@ class TileService(levels: Seq[CubeFrame], tileSize: Int = 256) {
       if (cube.extraDims.isEmpty) cube
       else cube.copy(df = cube.extraDims.foldLeft(cube.df)((df, ed) =>
         df.filter(org.apache.spark.sql.functions.col(ed.name) ===
-          ed.values.head)))
+          ed.values.head)), storePath = None)
     Render.renderTile(plane, variable, time, tileX, tileY, tileSize,
       tileSize, mapping, flipY = cube.grid.latAscending)
   }

@@ -152,8 +152,9 @@ private[graft] object ParquetWindow {
   // pooled open readers for the dense path: ParquetFileReader.open
   // costs ~10 ms even with a cached footer (codec/stream/allocator
   // setup) — random-access readFilteredRowGroup needs no cursor, so
-  // one long-lived reader per file serves every tile. Access is
-  // serialized per reader (decompressors are not thread-safe).
+  // one long-lived reader per file and variable serves every tile.
+  // Access is serialized per reader (decompressors are not
+  // thread-safe).
   //
   // BOUNDED (round-17): a long-running tile server over a daily-
   // partitioned multi-year store would otherwise accumulate one open
@@ -166,9 +167,14 @@ private[graft] object ParquetWindow {
   // membership inside their monitor and re-acquire if they lost the
   // race. Closing costs the next request on that file one ~10 ms
   // reopen — bounded fds beat unbounded.
+  //
+  // Keyed by (file, variable): parquet-mr builds a row group's column
+  // index store once, for the columns requested FIRST, and keeps it —
+  // a reader switched to another variable by setRequestedSchema finds
+  // no offset index for it and readFilteredRowGroup throws.
   private[graft] var ReaderPoolCap = 128 // var: test seam only
-  private val readers = TrieMap.empty[String, ParquetFileReader]
-  private val lastUsed = TrieMap.empty[String, Long]
+  private val readers = TrieMap.empty[(String, String), ParquetFileReader]
+  private val lastUsed = TrieMap.empty[(String, String), Long]
   private val useTick = new java.util.concurrent.atomic.AtomicLong
   private val poolLock = new Object
   // offset index per (file, column) — one footer-section parse; parsed
@@ -176,11 +182,13 @@ private[graft] object ParquetWindow {
   // reopened reader reuses it
   private val offsetIndexes = TrieMap.empty[(String, String), AnyRef]
 
-  /** get-or-open the pooled reader for `file`, touch its LRU stamp,
-    * and evict past the cap (never the reader just acquired). */
-  private def acquireReader(file: Path, conf: Configuration,
+  /** get-or-open the pooled reader for (`file`, `variable`), touch its
+    * LRU stamp, and evict past the cap (never the reader just
+    * acquired). */
+  private def acquireReader(file: Path, variable: String,
+                            conf: Configuration,
                             fm: FileMeta): ParquetFileReader = {
-    val k = file.toString
+    val k = (file.toString, variable)
     val (r, victims) = poolLock.synchronized {
       val got = readers.getOrElseUpdate(k, {
         val in = HadoopInputFile.fromPath(file, conf)
@@ -206,7 +214,7 @@ private[graft] object ParquetWindow {
   }
 
   private def dropReaders(pred: String => Boolean): Unit =
-    readers.keys.filter(pred).foreach { k =>
+    readers.keys.filter(k => pred(k._1)).foreach { k =>
       lastUsed.remove(k)
       readers.remove(k).foreach(r => r.synchronized {
         try r.close() catch { case scala.util.control.NonFatal(_) => () }
@@ -236,8 +244,9 @@ private[graft] object ParquetWindow {
     dropReaders(hit)
   }
 
-  /** test seam: paths of currently pooled open readers */
-  private[graft] def pooledReaderPaths: Set[String] = readers.keySet.toSet
+  /** test seam: the file path of each pooled open reader */
+  private[graft] def pooledReaderPaths: Seq[String] =
+    readers.keysIterator.map(_._1).toSeq
 
   private[graft] def clear(): Unit = {
     confs.clear(); fileLists.clear(); metas.clear(); storeMetas.clear()
@@ -563,9 +572,9 @@ private[graft] object ParquetWindow {
     // under us; one that lost the race (evicted between acquire and
     // lock — needs 128 other files touched in that window) is simply
     // re-acquired.
-    val r = acquireReader(file, conf, fm)
+    val r = acquireReader(file, variable, conf, fm)
     r.synchronized {
-      if (!readers.get(file.toString).exists(_ eq r))
+      if (!readers.get((file.toString, variable)).exists(_ eq r))
         return readFileDense(file, conf, fm, m, variable, planeBase,
           y0, x0, h, w, out)
       r.setRequestedSchema(proj)

@@ -30,7 +30,7 @@ private[graft] object StoreCache {
   // norm) binary-search; anything else falls back to a linear scan
   private val axisMap = TrieMap.empty[String, (Array[Long], Boolean)]
 
-  private val chunkCapacityBytes: Long =
+  private[graft] val chunkCapacityBytes: Long =
     sys.props.getOrElse("graft.chunkCache.mb", "256").toLong << 20
 
   private final case class ChunkKey(path: String, variable: String,

@@ -96,6 +96,12 @@ private[graft] object StoreWindow {
   * is unchanged — set iff the DataFrame reads the store untransformed,
   * so values are identical to the Spark path by construction. */
 private[graft] object DirectWindow {
+  /** zarr/NetCDF/HDF5 (read chunk by chunk through [[StoreWindow]]);
+    * anything else is graft's parquet layout */
+  def isChunkedStore(path: String): Boolean =
+    path.endsWith(".zarr") || path.endsWith(".nc") || path.endsWith(".h5") ||
+      java.nio.file.Files.isRegularFile(java.nio.file.Paths.get(path))
+
   /** `extra` selects one plane per extra non-spatial dim:
     * (name, coordinate value, axis index) — chunked stores address by
     * the index, the parquet reader by name+value (checked against its
@@ -104,10 +110,7 @@ private[graft] object DirectWindow {
            y0: Int, x0: Int, h: Int, w: Int,
            extra: Seq[(String, Double, Int)] = Nil)
       : Option[Array[Double]] = {
-    val chunkedStore = path.endsWith(".zarr") || path.endsWith(".nc") ||
-      path.endsWith(".h5") ||
-      java.nio.file.Files.isRegularFile(java.nio.file.Paths.get(path))
-    if (chunkedStore) StoreWindow.readWindow(path, variable, timeUs,
+    if (isChunkedStore(path)) StoreWindow.readWindow(path, variable, timeUs,
       y0, x0, h, w, extra.map(_._3))
     else {
       // parquet windows cache decoded (the block IS this layout's

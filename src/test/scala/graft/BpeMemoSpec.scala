@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-
 /** Pins the BPE merges-memo contract (r17 verdict ask #7, mirroring the
   * r16 IVF session-reuse pin):
   *
@@ -33,21 +29,12 @@ class BpeMemoSpec extends SparkSpec {
     // With the memo warm, bpe_train must STILL launch the trainer's
     // distributed jobs: ≥ 6 top-pair aggregations (one per merge step)
     // plus the vocab build — a memo hit would launch ~1.
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val trained = graft.queries.PipelineQueries.bpeTrain(spark, d)
-        .collect()
-      Thread.sleep(500) // listener events post async
-      assert(jobs.get >= 6,
-        s"bpe_train launched only ${jobs.get} jobs with the application " +
-          "memo warm — it must run the live 6-step trainer, never the memo")
-      assert(trained.length == 6, "6 learned merge rules")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (trained, jobs) = jobsDuring(
+      graft.queries.PipelineQueries.bpeTrain(spark, d).collect())
+    assert(jobs.size >= 6,
+      s"bpe_train launched only ${jobs.size} jobs with the application " +
+        "memo warm — it must run the live 6-step trainer, never the memo")
+    assert(trained.length == 6, "6 learned merge rules")
 
     // Application reuse is exact within a snapshot.
     assert(graft.queries.PipelineQueries

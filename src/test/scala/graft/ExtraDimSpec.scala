@@ -351,21 +351,10 @@ class ExtraDimSpec extends SparkSpec {
         "?vmin=0&vmax=13000"
       // warm once (footer caches), then count jobs over per-plane tiles
       getOk(base)
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(listener)
-      val (d0, d50) = try {
-        val a = getOk(base + "&depth=0")
-        val b = getOk(base + "&depth=50")
-        Thread.sleep(300)
-        (a, b)
-      } finally spark.sparkContext.removeSparkListener(listener)
-      assert(jobs.get() == 0,
-        s"4-D pyramid tiles scheduled ${jobs.get()} Spark job(s)")
+      val ((d0, d50), jobs) = jobsDuring(
+        (getOk(base + "&depth=0"), getOk(base + "&depth=50")))
+      assert(jobs.isEmpty,
+        s"4-D pyramid tiles scheduled ${jobs.size} Spark job(s)")
       assert(!d0.sameElements(d50), "planes must render distinct tiles")
     } finally srv.stop()
   }
@@ -531,14 +520,7 @@ class ExtraDimSpec extends SparkSpec {
         extra = Seq(("depth", 999.0))).isEmpty)
     // per-plane direct reads: values exact for every depth, no Spark
     // job on the serving path
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val (_, jobs) = jobsDuring {
       for (di <- 0 until nD) {
         val win = graft.sources.ParquetWindow
           .readWindow(s"$dir/c", "v0", us, 0, 0, nH, nW,
@@ -547,9 +529,8 @@ class ExtraDimSpec extends SparkSpec {
           assert(win(y * nW + x) == cell(0, di, y, x),
             s"parquet d=$di ($y,$x)")
       }
-      Thread.sleep(300)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get() == 0, "direct 4-D parquet reads must schedule no job")
+    }
+    assert(jobs.isEmpty, "direct 4-D parquet reads must schedule no job")
     // DESCENDING axis order: disk order is sorted-by-value regardless
     // (the ingest sorts the coordinate COLUMN), so the plane lookup
     // must rank by sorted value, not axis position

@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.cube.{Cube, CubeGrid, CubeIngest}
@@ -45,19 +42,9 @@ class ParquetWindowSpec extends SparkSpec {
         .flatMap(r => if (r.isNullAt(2)) None
           else Some((r.getInt(0), r.getInt(1)) -> r.getDouble(2))).toMap
       // serving read AFTER the Spark collect: count jobs around it
-      val jobs = new AtomicInteger(0)
-      val listener = new SparkListener {
-        override def onJobStart(s: SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(listener)
-      val win = try {
-        val got = graft.sources.ParquetWindow
-          .readWindow(s"$dir/c", v, us, y0, x0, h, w).get
-        Thread.sleep(300) // listener events post asynchronously
-        got
-      } finally spark.sparkContext.removeSparkListener(listener)
-      assert(jobs.get() == 0, "direct window read must schedule no job")
+      val (win, jobs) = jobsDuring(graft.sources.ParquetWindow
+        .readWindow(s"$dir/c", v, us, y0, x0, h, w).get)
+      assert(jobs.isEmpty, "direct window read must schedule no job")
       for (y <- 0 until h; x <- 0 until w) {
         val expected = viaSpark.getOrElse((y0 + y, x0 + x), Double.NaN)
         assert(java.lang.Double.compare(win(y * w + x), expected) == 0,
@@ -226,6 +213,56 @@ class ParquetWindowSpec extends SparkSpec {
       }
     } finally {
       graft.sources.ParquetWindow.ReaderPoolCap = capBefore
+      graft.sources.StoreCache.invalidate(store)
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
+  }
+
+  test("pooled readers serve page-pruned windows of several variables, " +
+      "in either order") {
+    // > 20,000 rows per date file: several 8192-row pages, so a tile
+    // window selects a subset of pages through the offset index (a
+    // one-page file reads its whole row group and never consults it)
+    val grid = CubeGrid(192, 128, 0.0, 10.0, 0.25, latAscending = true)
+    val cube = Cube.synthetic(spark, grid, numTimes = 2, Seq("v0", "v1"),
+      nanEvery = 7)
+    val dir = java.nio.file.Files.createTempDirectory("graft-pwvars").toString
+    val store = s"$dir/c"
+    try {
+      CubeIngest.writeCube(cube, store, tileSize = 32)
+      val opened = CubeIngest.open(spark, store)
+      val t = opened.timeAxis.get.last
+      val us = t.getTime * 1000L + (t.getNanos / 1000) % 1000
+      // first tile block (page 0 only), an interior block, a window
+      // crossing block and page boundaries
+      val windows = Seq((0, 0, 32, 32), (96, 160, 32, 32), (40, 50, 20, 70))
+      val expected = (for (v <- Seq("v0", "v1"); (y0, x0, h, w) <- windows)
+        yield (v, (y0, x0, h, w)) -> opened.df
+          .filter(col("time") === lit(t) &&
+            col("x_idx") >= x0 && col("x_idx") < x0 + w &&
+            col("y_idx") >= y0 && col("y_idx") < y0 + h)
+          .select(col("y_idx"), col("x_idx"), col(v)).collect()
+          .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap).toMap
+      for (order <- Seq(Seq("v0", "v1"), Seq("v1", "v0"))) {
+        // an empty pool: the first variable read opens the file's reader
+        graft.sources.StoreCache.invalidate(store)
+        val (wins, jobs) = jobsDuring(
+          for (v <- order; win <- windows) yield (v, win) -> {
+            val (y0, x0, h, w) = win
+            graft.sources.ParquetWindow.readWindow(store, v, us, y0, x0, h, w).get
+          })
+        assert(jobs.isEmpty, s"$order: direct reads scheduled ${jobs.size} job(s)")
+        assert(graft.sources.ParquetWindow.pooledReaderPaths
+          .count(_.contains("graft-pwvars")) == 2,
+          "the dense path pools one reader per (file, variable)")
+        for (((v, (y0, x0, h, w)), win) <- wins; y <- 0 until h; x <- 0 until w) {
+          val want = expected((v, (y0, x0, h, w)))
+            .getOrElse((y0 + y, x0 + x), Double.NaN)
+          assert(java.lang.Double.compare(win(y * w + x), want) == 0,
+            s"$order: $v cell (${y0 + y}, ${x0 + x})")
+        }
+      }
+    } finally {
       graft.sources.StoreCache.invalidate(store)
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }

@@ -2,8 +2,6 @@ package graft
 
 import java.sql.Timestamp
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.functions._
 
 import graft.cube.{Cube, CubeGrid, CubeIngest}
@@ -239,25 +237,17 @@ class ScaleSpec extends SparkSpec {
     val grid = CubeGrid(64, 32, 0.0, 40.0, 0.1, latAscending = true)
     val cube = Cube.synthetic(spark, grid, 3, Seq("v0"))
     CubeIngest.writeCube(cube, s"$dir/cube", tileSize = 16)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val ds = try {
+    val (ds, jobs) = jobsDuring {
       val opened = CubeIngest.open(spark, s"$dir/cube")
       val d = graft.server.RegisteredDataset("c", "C", opened, None)
       // force the lazily-resolved registration surface
       assert(d.timeCoords.size == 3)
       d.latestTime
       d.timeLabels
-      Thread.sleep(300) // listener events post asynchronously
       d
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get() == 0,
-      s"layout-2 registration scheduled ${jobs.get()} Spark job(s)")
+    }
+    assert(jobs.isEmpty,
+      s"layout-2 registration scheduled ${jobs.size} Spark job(s)")
     assert(ds.timeCoords == ds.cube.timeAxis.get)
   }
 
@@ -1099,37 +1089,19 @@ class ScaleSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_didx").toString
     spark.conf.set("spark.graft.dedup.indexDir", dir)
     val d = "/root/testdata/sf0.001"
-    // (job-group id, stage names) of every job, in arrival order
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.add((String.valueOf(
-          js.properties.getProperty("spark.jobGroup.id")),
-          js.stageInfos.map(_.name).mkString(";")))
-        ()
-      }
-    }
     try {
       val r1 = graft.queries.PipelineQueries.dedupIncremental(spark, d)
         .collect()
-      spark.sparkContext.addSparkListener(listener)
       // static plan for the scan inspection below (AQE hides children)
       spark.conf.set("spark.sql.adaptive.enabled", "false")
-      spark.sparkContext.setJobGroup("didx-build", "sidecar-reuse build")
-      val q2 = graft.queries.PipelineQueries.dedupIncremental(spark, d)
-      spark.sparkContext.clearJobGroup()
-      // fence: listener events arrive in order, so once the fence job
-      // (different group) is visible, every build-phase job is counted
-      spark.range(1).count()
-      val deadline = System.nanoTime + 5L * 1000 * 1000 * 1000
-      while (!jobs.asScala.exists(_._1 != "didx-build") &&
-        System.nanoTime < deadline) Thread.sleep(20)
-      val build = jobs.asScala.filter(_._1 == "didx-build").toSeq
+      val (q2, jobs) = jobsDuring(
+        graft.queries.PipelineQueries.dedupIncremental(spark, d))
+      // stage names of every job the build phase ran
+      val build = jobs.map(_.stageInfos.map(_.name).mkString(";"))
       // the ONLY job the build phase may run is the new-batch parquet
       // schema-inference footer read — no bloom aggregation, no
       // old-corpus scan, no sidecar rewrite
-      assert(build.forall(_._2.startsWith("parquet at")),
+      assert(build.forall(_.startsWith("parquet at")),
         s"sidecar miss: non-metadata job(s) during the second batch's " +
           s"build: ${build.mkString("; ")}")
       assert(build.size <= 1,
@@ -1146,7 +1118,6 @@ class ScaleSpec extends SparkSpec {
       assert(q2.collect() === r1, "sidecar reuse changed the result")
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", "true")
-      spark.sparkContext.removeSparkListener(listener)
       spark.conf.unset("spark.graft.dedup.indexDir")
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
@@ -1164,36 +1135,20 @@ class ScaleSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_ndidx").toString
     spark.conf.set("spark.graft.dedup.indexDir", dir)
     val d = "/root/testdata/sf0.01"
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.add((String.valueOf(
-          js.properties.getProperty("spark.jobGroup.id")),
-          js.stageInfos.map(_.name).mkString(";")))
-        ()
-      }
-    }
     try {
       val r1 = graft.queries.PipelineQueries
         .dedupIncrementalMinhash(spark, d).collect()
       assert(r1.nonEmpty, "fixture lost its cross-split near-dup pairs")
-      spark.sparkContext.addSparkListener(listener)
       spark.conf.set("spark.sql.adaptive.enabled", "false")
       // lazy-plan mode: without it materializeAndRelease localCheckpoints
       // (runs) the whole query at construction, drowning the build-phase
       // job assertion below in execution jobs
       graft.pipeline.Caching.inspectLazyPlans = true
-      spark.sparkContext.setJobGroup("ndidx-build", "near-dup sidecar reuse")
-      val q2 = graft.queries.PipelineQueries
-        .dedupIncrementalMinhash(spark, d)
-      spark.sparkContext.clearJobGroup()
-      spark.range(1).count() // fence (listener events arrive in order)
-      val deadline = System.nanoTime + 5L * 1000 * 1000 * 1000
-      while (!jobs.asScala.exists(_._1 != "ndidx-build") &&
-        System.nanoTime < deadline) Thread.sleep(20)
-      val build = jobs.asScala.filter(_._1 == "ndidx-build").toSeq
-      assert(build.forall(_._2.startsWith("parquet at")),
+      val (q2, jobs) = jobsDuring(graft.queries.PipelineQueries
+        .dedupIncrementalMinhash(spark, d))
+      // stage names of every job the build phase ran
+      val build = jobs.map(_.stageInfos.map(_.name).mkString(";"))
+      assert(build.forall(_.startsWith("parquet at")),
         s"sidecar miss: non-metadata job(s) during the second batch's " +
           s"build: ${build.mkString("; ")}")
       assert(build.size <= 1,
@@ -1220,7 +1175,6 @@ class ScaleSpec extends SparkSpec {
       graft.pipeline.Caching.inspectLazyPlans = false
       spark.sharedState.cacheManager.clearCache() // lazy mode released none
       spark.conf.set("spark.sql.adaptive.enabled", "true")
-      spark.sparkContext.removeSparkListener(listener)
       spark.conf.unset("spark.graft.dedup.indexDir")
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }

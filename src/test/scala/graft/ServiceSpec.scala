@@ -354,9 +354,29 @@ Styles:
         client.send(HttpRequest.newBuilder(URI.create(srv.address + p)).build(),
           HttpResponse.BodyHandlers.ofByteArray())
       assert(new String(get("/datasets").body()).contains("\"zr\""))
-      val ts = get("/ts/zr/v0/point?lon=1.2&lat=51.3")
+      // a zarr-backed time series takes the operators' direct arm
+      val (ts, tsJobs) = jobsDuring(get("/ts/zr/v0/point?lon=1.2&lat=51.3"))
       assert(ts.statusCode() == 200 &&
         new String(ts.body()).contains("\"totalCount\":1"))
+      assert(tsJobs.isEmpty, s"direct time series ran ${tsJobs.size} job(s)")
+      // a zarr tile reads its window directly, timed inside "render"
+      val captured = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val oldSink = graft.server.Perf.sink
+      graft.server.Perf.sink = line => captured.add(line)
+      try {
+        val (tile, tileJobs) = jobsDuring(
+          get("/datasets/zr/vars/v0/tiles/0/0/0.png?debug=1"))
+        assert(tile.statusCode() == 200)
+        assert(tileJobs.isEmpty, s"direct tile ran ${tileJobs.size} job(s)")
+        // trace.done() runs after the response is written
+        val deadline = System.nanoTime() + 5000L * 1000 * 1000
+        while (System.nanoTime() < deadline &&
+            !captured.toArray(Array.empty[String]).exists(_.contains("total:")))
+          Thread.sleep(10)
+        val lines = captured.toArray(Array.empty[String]).toSeq
+        assert(lines.exists(_.matches(
+          """\[perf\] tile zr\.v0/0/0/0 render: took \d+\.\d\dms""")), lines)
+      } finally graft.server.Perf.sink = oldSink
       assert(get("/datasets/pq/vars/v0/tiles/0/0/0.png").statusCode() == 200)
       assert(new String(get("/places/pts?geom=" + java.net.URLEncoder.encode(
         "POLYGON((0 50, 5 50, 5 53, 0 53, 0 50))", "UTF-8")).body())

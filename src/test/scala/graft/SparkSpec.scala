@@ -1,5 +1,9 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.graft.ListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -30,4 +34,23 @@ object TestSpark {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   def sf(dir: String): String = s"/root/testdata/$dir"
+
+  /** Runs `body` and returns its value with the Spark jobs it started,
+    * in start order. The listener bus is drained before the listener
+    * is added (no earlier job leaks in) and after the body (no late
+    * event is missed), so a zero-job assertion is deterministic. */
+  def jobsDuring[T](body: => T): (T, Seq[SparkListenerJobStart]) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.add(j)
+    }
+    ListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      ListenerBus.drain(sc)
+      (out, jobs.asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
 }
