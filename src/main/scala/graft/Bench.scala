@@ -2,8 +2,6 @@ package graft
 
 import java.lang.management.ManagementFactory
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs every registered query on
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line with per-query seconds.
   *
@@ -48,19 +46,7 @@ object Bench {
       Thread.sleep(10000); waitedSec += 10
     }
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // start wide so hot-key aggregations (the shingle self-join) keep
-      // per-task hash maps small; AQE coalesces the small stages back
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "256")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    LogFilters.muteSanctionedGlobalWindowWarning()
-    Tables.configure(spark)
+    val spark = Session(cpus)
 
     val os = ManagementFactory.getOperatingSystemMXBean
     def loadAvg: Double = os.getSystemLoadAverage

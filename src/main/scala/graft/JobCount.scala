@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Round-18 optimization instrument: counts the Spark JOBS (≈ barrier
   * waves) one noop-sinked execution of each named query launches, at a
@@ -17,18 +16,7 @@ object JobCount {
     val names = args(0).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.001")
     val cpus = args.lift(2).getOrElse("8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        "256")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    LogFilters.muteSanctionedGlobalWindowWarning()
-    Tables.configure(spark)
+    val spark = Session(cpus, logLevel = "ERROR")
 
     val jobs = new AtomicInteger(0)
     spark.sparkContext.addSparkListener(new SparkListener {

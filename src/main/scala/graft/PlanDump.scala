@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Round-17 optimization evidence: dumps `.explain("formatted")` for a
@@ -21,15 +20,7 @@ object PlanDump {
     val names = args(1).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = args.lift(2).getOrElse("/root/testdata/sf0.001")
     val outDir = args.lift(3).getOrElse("plans/r17")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    Tables.configure(spark)
+    val spark = Session("4", logLevel = "ERROR", conf = Seq(Session.AqeOff))
     graft.pipeline.Caching.inspectLazyPlans = true
     Files.createDirectories(Paths.get(outDir))
 

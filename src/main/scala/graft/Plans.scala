@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerates docs/PLANS.md: physical plans of representative queries
   * (the judge-facing evidence that scans prune, joins broadcast, and
   * aggregates combine map-side). Run:
@@ -101,19 +99,9 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.lift(1).getOrElse("docs/PLANS.md")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // static plans, not AdaptiveSparkPlan placeholders: with AQE on,
-    // cross-subtree exchange reuse (e.g. dsir_importance's shared
-    // corpus scan) only materializes at runtime, so the dumped plan
-    // would misleadingly show a duplicated scan
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    Tables.configure(spark)
+    // static plans: see Session.AqeOff (e.g. dsir_importance's shared
+    // corpus scan would show duplicated)
+    val spark = Session("4", logLevel = "ERROR", conf = Seq(Session.AqeOff))
     // document the operators' real query shapes: the shipped queries
     // eagerly localCheckpoint (to release their cached intermediates),
     // which would collapse every plan here to a Scan of the result RDD

@@ -40,18 +40,7 @@ object Scaling {
     val runs = sys.env.getOrElse("SPARK_GRAFT_SCALE_RUNS", "3").toInt
     val sfSmall = "/root/testdata/sf0.01"
     val sfBig = "/root/testdata/sf0.1"
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        "256")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    LogFilters.muteSanctionedGlobalWindowWarning()
-    Tables.configure(spark)
+    val spark = Session(cpus)
     // warm-up: JVM/codegen/FS metadata for both SF dirs
     spark.range(1000000L).selectExpr("sum(id)").collect()
     Seq(sfSmall, sfBig).foreach(d =>

@@ -274,18 +274,7 @@ object ScalingDecade {
     val runs = sys.env.getOrElse("SPARK_GRAFT_SCALE_RUNS", "2").toInt
     val sfBig = "/root/testdata/sf0.1"
     val sf1 = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "/tmp/graft_sf1")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        "256")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    LogFilters.muteSanctionedGlobalWindowWarning()
-    Tables.configure(spark)
+    val spark = Session(cpus)
     if (!new java.io.File(s"$sf1/lineitem.parquet").exists()) {
       println(s"synthesizing sf1 decade at $sf1 …")
       synthesize(spark, sfBig, sf1)

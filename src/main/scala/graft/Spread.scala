@@ -1,7 +1,5 @@
 package graft
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Scan-parallelism heal (r17-opt; optimization-guide §2.5's
@@ -41,7 +39,7 @@ object Spread {
     * reused exchange). */
   val EnabledConf = "spark.graft.spread"
 
-  private val memo = new ConcurrentHashMap[String, java.lang.Boolean]()
+  private val memo = new Lru[String, Boolean](Lru.Verdicts)
 
   /** Heal width: the session's advertised parallelism capped at the
     * cgroup-aware core count the JVM can actually use (r18, VERDICT
@@ -67,13 +65,8 @@ object Spread {
     val par = width(s)
     val key = path + "|" +
       sources.ParquetStats.snapshotToken(s, path) + "|" + par
-    Option(memo.get(key)).map(_.booleanValue).getOrElse {
-      val v = sources.ParquetStats.rowGroupCount(s, path)
-        .exists(_ < par / 2)
-      if (memo.size > 256) memo.clear()
-      memo.put(key, v)
-      v
-    }
+    memo.getOrLoad(key)(
+      sources.ParquetStats.rowGroupCount(s, path).exists(_ < par / 2))
   }
 
   /** `df` hash-redistributed across the heal width by `key` iff

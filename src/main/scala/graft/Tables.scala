@@ -44,11 +44,10 @@ object Tables {
     * (session, path, file length, mtime): no row data is cached — the
     * plan still scans parquet on every execution — and a republished
     * file (new length/mtime) misses the memo, the same snapshot-key
-    * discipline as ParquetStats/DedupIndex. Bounded: cleared wholesale
-    * past 64 entries (stopped test sessions would otherwise pin their
-    * plans). */
-  private val relCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Long, Long), DataFrame]()
+    * discipline as ParquetStats/DedupIndex. Bounded, because stopped
+    * test sessions would otherwise pin their plans. */
+  private val relCache =
+    new Lru[(SparkSession, String, Long, Long), DataFrame](64)
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     configure(spark)
@@ -60,10 +59,7 @@ object Tables {
       (spark, path, st.getLen, st.getModificationTime)
     } catch { case _: Throwable => (spark, path, -1L, -1L) }
     if (key._3 < 0) spark.read.parquet(path)
-    else {
-      if (relCache.size > 64) relCache.clear()
-      relCache.computeIfAbsent(key, _ => spark.read.parquet(path))
-    }
+    else relCache.getOrLoad(key)(spark.read.parquet(path))
   }
 
   def region(s: SparkSession, d: String): DataFrame   = table(s, d, "region")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Tile-path latency bench (the reference's only published performance
   * figure is ~0.025 s/tile, im/tiledimage.py:859-862): serve N tiles
   * across every pyramid level over HTTP — cold (each tile rendered
@@ -10,13 +8,7 @@ import org.apache.spark.sql.SparkSession
 object TileBench {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(cpus)
 
     // 1024x512 cube -> 3 advertised zoom levels of 256px tiles; cells
     // carry the synthetic noise profile the reference's own tile bench

@@ -51,8 +51,7 @@ object BipartiteFixpoint {
     * would otherwise re-collect a now-oversized distinct relation to
     * the driver — a heap risk, not a wrong answer. A snapshot change
     * is a clean memo miss. */
-  private val guardMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
+  private val guardMemo = new graft.Lru[String, Boolean](graft.Lru.Verdicts)
 
   /** Immutable driver-side bipartite graph: parity-encoded node ids
     * (sorted; index = dense id), CSR offsets + neighbor indices, and
@@ -82,13 +81,8 @@ object BipartiteFixpoint {
       : Option[(Array[Long], Array[Long])] = {
     import s.implicits._
     val path = s"$d/lineitem.parquet"
-    val fast = (for {
-      rows <- graft.sources.ParquetStats.rowCount(s, path)
-      pm <- graft.sources.ParquetStats.longMinMax(s, path, "l_partkey")
-      sm <- graft.sources.ParquetStats.longMinMax(s, path, "l_suppkey")
-    } yield rows <= RawCollectMax &&
-      pm._1 >= 0 && pm._2 < (1L << 31) &&
-      sm._1 >= 0 && sm._2 < (1L << 32)).getOrElse(false)
+    val fast = PackedPairs.footerFits(s, path, "l_partkey", "l_suppkey",
+      RawCollectMax).getOrElse(false)
     val key = "lineitem-bipartite|" + d + "|" +
       graft.sources.ParquetStats.snapshotToken(s, path) + "|" + maxPairs
     // a memoized REJECT short-circuits both paths: at sfs where the raw
@@ -97,43 +91,23 @@ object BipartiteFixpoint {
     // fixpoint call before falling back — one wasted collect per
     // (dir, bound) at most, and a stale verdict only routes between
     // row-identical plans (same contract as the accept memo below).
-    if (Option(guardMemo.get(key)).exists(!_.booleanValue)) return None
+    if (guardMemo.get(key).contains(false)) return None
     if (fast) {
-      val raw = graft.Tables.lineitem(s, d)
-        .select((col("l_partkey").cast("long") * lit(4294967296L) +
-          col("l_suppkey").cast("long")).as("x"))
-        .as[Long].collect()
+      val raw = PackedPairs.collectDistinct(graft.Tables.lineitem(s, d),
+        "l_partkey", "l_suppkey")
       if (raw.isEmpty) return None // empty: distributed form decides
-      java.util.Arrays.sort(raw)
-      var m = 0
-      var i = 0
-      while (i < raw.length) {
-        if (m == 0 || raw(m - 1) != raw(i)) { raw(m) = raw(i); m += 1 }
-        i += 1
-      }
-      if (m > maxPairs) { // distinct still too big for a CSR
-        guardMemo.put(key, java.lang.Boolean.FALSE)
+      if (raw.length > maxPairs) { // distinct still too big for a CSR
+        guardMemo.put(key, false)
         return None
       }
-      val ps = new Array[Long](m)
-      val ss = new Array[Long](m)
-      i = 0
-      while (i < m) {
-        ps(i) = raw(i) >>> 32
-        ss(i) = raw(i) & 0xffffffffL
-        i += 1
-      }
-      return Some((ps, ss))
+      return Some((raw.map(_ >>> 32), raw.map(_ & 0xffffffffL)))
     }
     val pairs = graft.Tables.lineitem(s, d)
       .select(col("l_partkey").cast("long").as("p"),
         col("l_suppkey").cast("long").as("s"))
       .distinct()
-    val fits = Option(guardMemo.get(key)).map(_.booleanValue).getOrElse {
-      val ok = pairs.limit((maxPairs + 1).toInt).count() <= maxPairs
-      guardMemo.put(key, ok)
-      ok
-    }
+    val fits = guardMemo.getOrLoad(key)(
+      pairs.limit((maxPairs + 1).toInt).count() <= maxPairs)
     if (!fits) None
     else {
       val rows = pairs.as[(Long, Long)].collect()

@@ -49,8 +49,7 @@ object DenseGraph {
     * row-identical plans (dense CSR vs distributed fallback), so a
     * stale entry can never change results; callers key it to an
     * immutable dataset snapshot. */
-  private val guardMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
+  private val guardMemo = new graft.Lru[String, Boolean](graft.Lru.Verdicts)
 
   /** Source-parquet footer hint for the zero-job guard:
     * (path, orderCol, partCol). With footers present, the row count
@@ -81,57 +80,36 @@ object DenseGraph {
                                   memoKey: Option[String],
                                   footer: Option[FooterHint])
       : Option[Array[Long]] = {
-    import s.implicits._
-    val fastVerdict: Option[Boolean] = footer.flatMap {
-      case (path, ocol, pcol) =>
-        for {
-          rows <- graft.sources.ParquetStats.rowCount(s, path)
-          om <- graft.sources.ParquetStats.longMinMax(s, path, ocol)
-          pm <- graft.sources.ParquetStats.longMinMax(s, path, pcol)
-        } yield rows <= DenseMaxPairs &&
-          om._1 >= 0 && om._2 < (1L << 31) &&
-          pm._1 >= 0 && pm._2 < (1L << 32)
+    val fastVerdict = footer.flatMap { case (path, ocol, pcol) =>
+      PackedPairs.footerFits(s, path, ocol, pcol, DenseMaxPairs)
     }
-    val fits = fastVerdict.getOrElse {
-      memoKey.flatMap(k => Option(guardMemo.get(k)))
-        .map(_.booleanValue).getOrElse {
-          // row guard caps k at 2²², so k·(k−1) stays far below Long
-          // overflow; the product is even, so the shift is exact
-          val st = pairs.groupBy(col("o"))
-            .agg(count(lit(1)).as("k"), max(col("p")).as("mp"),
-              min(col("p")).as("np"))
-            .agg(sum(col("k")),
-              sum(shiftright(col("k") * (col("k") - lit(1L)), 1)),
-              max(col("o")), min(col("o")), max(col("mp")),
-              min(col("np"))).first()
-          val ok = !st.isNullAt(0) &&
-            st.getLong(0) <= DenseMaxPairs &&
-            st.getLong(1) <= DenseMaxFanout &&
-            st.getLong(3) >= 0 && st.getLong(2) < (1L << 31) &&
-            st.getLong(5) >= 0 && st.getLong(4) < (1L << 32)
-          memoKey.foreach(k => guardMemo.put(k, ok))
-          ok
-        }
+    def guard: Boolean = {
+      // row guard caps k at 2²², so k·(k−1) stays far below Long
+      // overflow; the product is even, so the shift is exact
+      val st = pairs.groupBy(col("o"))
+        .agg(count(lit(1)).as("k"), max(col("p")).as("mp"),
+          min(col("p")).as("np"))
+        .agg(sum(col("k")),
+          sum(shiftright(col("k") * (col("k") - lit(1L)), 1)),
+          max(col("o")), min(col("o")), max(col("mp")),
+          min(col("np"))).first()
+      !st.isNullAt(0) &&
+        st.getLong(0) <= DenseMaxPairs &&
+        st.getLong(1) <= DenseMaxFanout &&
+        st.getLong(3) >= 0 && st.getLong(2) < (1L << 31) &&
+        st.getLong(5) >= 0 && st.getLong(4) < (1L << 32)
     }
+    val fits = fastVerdict.getOrElse(
+      memoKey.fold(guard)(k => guardMemo.getOrLoad(k)(guard)))
     if (!fits) return None
-    val raw = pairs
-      .select((col("o").cast("long") * lit(4294967296L) +
-        col("p").cast("long")).as("x"))
-      .as[Long].collect()
-    if (raw.isEmpty) return None // empty graph: distributed form decides
-    java.util.Arrays.sort(raw)
-    var m = 0
-    var i = 0
-    while (i < raw.length) {
-      if (m == 0 || raw(m - 1) != raw(i)) { raw(m) = raw(i); m += 1 }
-      i += 1
-    }
-    val op = java.util.Arrays.copyOf(raw, m)
+    val op = PackedPairs.collectDistinct(pairs, "o", "p")
+    if (op.isEmpty) return None // empty graph: distributed form decides
+    val m = op.length
     // true per-order fan-out over the DISTINCT relation (the CSR edge
     // expansion this actually bounds); reject = one wasted bounded
     // collect, never an unbounded driver build
     var fanout = 0L
-    i = 0
+    var i = 0
     while (i < m) {
       var j = i + 1
       while (j < m && (op(j) >>> 32) == (op(i) >>> 32)) j += 1

@@ -49,10 +49,9 @@ object GraphEdges {
   /** Memoized probe verdicts (hot orders present?) per `memoKey`. The
     * verdict only ROUTES between two row-identical plans, so a stale
     * entry can never change results — callers key it to an immutable
-    * dataset snapshot (here: the sf directory), which is also why the
-    * map needs no eviction at realistic key counts. */
-  private val probeMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
+    * dataset snapshot (here: the sf directory). */
+  private[graft] val probeMemo =
+    new graft.Lru[String, Boolean](graft.Lru.Verdicts)
 
   /** One row per (order, unordered part pair): columns (o, a, b) with
     * a < b — exactly what the naive self-join emits, hot-order-safe.
@@ -75,13 +74,8 @@ object GraphEdges {
                       memoKey: Option[String] = None)
       : (DataFrame, Seq[DataFrame]) = {
     val kRaw = probeRaw.groupBy(col("o")).agg(count(lit(1)).as("k"))
-    val anyHot = memoKey.flatMap(k => Option(probeMemo.get(k)))
-      .map(_.booleanValue).getOrElse {
-        val hot =
-          kRaw.filter(col("k") > HotOrderParts).limit(1).count() > 0
-        memoKey.foreach(k => probeMemo.put(k, hot))
-        hot
-      }
+    def probe = kRaw.filter(col("k") > HotOrderParts).limit(1).count() > 0
+    val anyHot = memoKey.fold(probe)(k => probeMemo.getOrLoad(k)(probe))
     if (!anyHot) {
       val pairs = op.as("x").join(op.as("y"),
           col("x.o") === col("y.o") && col("x.p") < col("y.p"))

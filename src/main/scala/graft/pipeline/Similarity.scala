@@ -245,20 +245,14 @@ object Similarity {
     * unchanged-corpus hit is exact, and with no key the probe simply
     * runs live. */
   private val overloadMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
+    new graft.Lru[String, Boolean](graft.Lru.Verdicts)
 
   def cosinePairsAuto(emb: DataFrame, idCol: String, vecCol: String,
                       threshold: Double,
                       probeMemoKey: Option[String] = None): DataFrame = {
-    val overloaded = probeMemoKey match {
-      case Some(k) =>
-        Option(overloadMemo.get(k)).map(_.booleanValue).getOrElse {
-          val v = bandsOverloaded(emb, idCol, vecCol)
-          overloadMemo.put(k, v)
-          v
-        }
-      case None => bandsOverloaded(emb, idCol, vecCol)
-    }
+    def probe = bandsOverloaded(emb, idCol, vecCol)
+    val overloaded =
+      probeMemoKey.fold(probe)(k => overloadMemo.getOrLoad(k)(probe))
     if (overloaded) cosinePairsCells(emb, idCol, vecCol, threshold)
     else cosinePairsLsh(emb, idCol, vecCol, threshold)
   }

@@ -2754,19 +2754,14 @@ object PipelineQueries {
     * stays on bpe_train's own row — it calls [[bpeLearnMerges]]
     * live, never this memo. A republished corpus changes the
     * snapshot token and retrains. */
-  private val bpeMergesMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[(Int, String, String, Long)]]()
+  private val bpeMergesMemo =
+    new graft.Lru[String, Seq[(Int, String, String, Long)]](64)
 
   private def bpeMergesFor(s: SparkSession, d: String)
       : Seq[(Int, String, String, Long)] = {
     val key = d + "|" + graft.sources.ParquetStats
       .snapshotToken(s, s"$d/documents.parquet")
-    Option(bpeMergesMemo.get(key)).getOrElse {
-      val v = bpeLearnMerges(s, d)
-      if (bpeMergesMemo.size > 64) bpeMergesMemo.clear()
-      bpeMergesMemo.put(key, v)
-      v
-    }
+    bpeMergesMemo.getOrLoad(key)(bpeLearnMerges(s, d))
   }
 
   /** The 6-step training loop shared by bpe_train and

@@ -6,6 +6,7 @@ import java.util.concurrent.Executors
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 import graft.Q
@@ -158,7 +159,7 @@ class GraftServer(ctx: ServiceContext, port: Int = 0) {
             TimeSeries.point(cube, v, lon, lat, start, end).collect())
           val body = trace.stage("encode")(
             Json.obj("results" -> Json.arr(rows.map(tsRowJson))))
-          send(ex, 200, body, "application/json")
+          trace.stage("send")(send(ex, 200, body, "application/json"))
           trace.done()
         }
       case ("POST", "ts" :: ds :: v :: "geometry" :: Nil) =>
@@ -182,39 +183,37 @@ class GraftServer(ctx: ServiceContext, port: Int = 0) {
             TimeSeries.zonal(cube, v, geom, start, end).collect())
           val respBody = trace.stage("encode")(
             Json.obj("results" -> Json.arr(rows.map(tsRowJson))))
-          send(ex, 200, respBody, "application/json")
+          trace.stage("send")(send(ex, 200, respBody, "application/json"))
           trace.done()
         }
       // GeoJSON GeometryCollection body → one series per geometry
       // (reference GetTimeSeriesForGeometriesHandler, app.py:99-100)
       case ("POST", "ts" :: ds :: v :: "geometries" :: Nil) =>
         withDataset(ex, ds) { d =>
-          val node = readJsonBody(ex)
-          val geomsNode = Option(node.get("geometries"))
-            .filter(_.isArray).getOrElse(
-              throw new IllegalArgumentException(
-                "Invalid GeoJSON geometry collection"))
-          val q = query(ex)
-          val geoms = (0 until geomsNode.size())
-            .map(i => Geo.parseGeoJson(geomsNode.get(i).toString))
-          tsMany(ex, d, v, geoms, dateRange(q, d.cube.timeCalendar), q)
+          tsMany(ex, d, v, s"POST /ts/$ds/$v/geometries") {
+            val geomsNode = Option(readJsonBody(ex).get("geometries"))
+              .filter(_.isArray).getOrElse(
+                throw new IllegalArgumentException(
+                  "Invalid GeoJSON geometry collection"))
+            (0 until geomsNode.size())
+              .map(i => Geo.parseGeoJson(geomsNode.get(i).toString))
+          }
         }
       // GeoJSON FeatureCollection body → one series per feature geometry
       // (reference GetTimeSeriesForFeaturesHandler, app.py:101-102)
       case ("POST", "ts" :: ds :: v :: "places" :: Nil) =>
         withDataset(ex, ds) { d =>
-          val node = readJsonBody(ex)
-          val feats = Option(node.get("features"))
-            .filter(_.isArray).getOrElse(
-              throw new IllegalArgumentException(
-                "Invalid GeoJSON feature collection"))
-          val q = query(ex)
-          val geoms = (0 until feats.size())
-            .map(i => Geo.parseGeoJson(Option(feats.get(i).get("geometry"))
-              .getOrElse(throw new IllegalArgumentException(
-                s"Invalid GeoJSON feature collection: feature $i has " +
-                  "no geometry")).toString))
-          tsMany(ex, d, v, geoms, dateRange(q, d.cube.timeCalendar), q)
+          tsMany(ex, d, v, s"POST /ts/$ds/$v/places") {
+            val feats = Option(readJsonBody(ex).get("features"))
+              .filter(_.isArray).getOrElse(
+                throw new IllegalArgumentException(
+                  "Invalid GeoJSON feature collection"))
+            (0 until feats.size())
+              .map(i => Geo.parseGeoJson(Option(feats.get(i).get("geometry"))
+                .getOrElse(throw new IllegalArgumentException(
+                  s"Invalid GeoJSON feature collection: feature $i has " +
+                    "no geometry")).toString))
+          }
         }
       // place-group listing (GetPlaceGroupsHandler → context.py:297-303);
       // nested sub-groups surface as a placeGroups member
@@ -616,22 +615,26 @@ class GraftServer(ctx: ServiceContext, port: Int = 0) {
     * (reference _get_time_series_for_geometries, time_series.py:208-219)
     * — one [[TimeSeries.zonalMany]] call (its direct arm, or one Spark
     * job over all geometries), grouped back by geometry_index on the
-    * driver. */
+    * driver. `geometries` parses the request body, inside the traced
+    * `parse` stage. */
   private def tsMany(ex: HttpExchange, d: RegisteredDataset, v: String,
-                     geoms: Seq[graft.geo.Geo.Geometry],
-                     range: (Option[java.sql.Timestamp],
-                             Option[java.sql.Timestamp]),
-                     q: Map[String, String] = Map.empty): Unit = {
-    if (geoms.isEmpty) {
-      send(ex, 200, Json.obj("results" -> "[]"), "application/json"); return
+                     route: String)
+                    (geometries: => Seq[graft.geo.Geo.Geometry]): Unit = {
+    val trace = Perf.trace(tracePerf, route)
+    val (geoms, q, (start, end)) = trace.stage("parse") {
+      val geoms = geometries
+      val q = query(ex)
+      (geoms, q, dateRange(q, d.cube.timeCalendar))
     }
-    val rows = TimeSeries.zonalMany(cubeFor(d, q), v, geoms,
-      range._1, range._2)
-      .collect().groupBy(_.getAs[Int]("geometry_index"))
-    val arrays = geoms.indices.map(i =>
-      Json.arr(rows.getOrElse(i, Array.empty).sortBy(_.getAs[String]("date"))
-        .map(tsRowJson)))
-    send(ex, 200, Json.obj("results" -> Json.arr(arrays)), "application/json")
+    val rows = trace.stage("query")(
+      if (geoms.isEmpty) Map.empty[Int, Array[Row]]
+      else TimeSeries.zonalMany(cubeFor(d, q), v, geoms, start, end)
+        .collect().groupBy(_.getAs[Int]("geometry_index")))
+    val body = trace.stage("encode")(Json.obj("results" -> Json.arr(
+      geoms.indices.map(i => Json.arr(rows.getOrElse(i, Array.empty[Row])
+        .sortBy(_.getAs[String]("date")).map(tsRowJson))))))
+    trace.stage("send")(send(ex, 200, body, "application/json"))
+    trace.done()
   }
 
   /** GET /ts — layer info: per dataset×variable name, ISO time stamps

@@ -34,14 +34,8 @@ object Main {
     val cfgPath = pos(0)
     val port = pos.lift(1).map(_.toInt).getOrElse(8080)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .appName("graft-server")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session(cpus, master = sys.env.get("SPARK_MASTER"),
+      appName = Some("graft-server"))
     val (ctx, server) = build(spark, cfgPath, port)
     server.tracePerf = tracePerf
     server.start()

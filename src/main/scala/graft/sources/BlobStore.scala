@@ -220,36 +220,11 @@ private[graft] final class CachingBlobStore(private[graft] val inner: BlobStore,
   /** inner-store fetches actually performed — tests assert on this */
   private[graft] val fetches = new AtomicLong
 
-  private val lock = new Object
-  private var used = 0L
-  // access-ordered: iteration starts at the least recently used entry
-  private val map =
-    new java.util.LinkedHashMap[String, Option[Array[Byte]]](64, 0.75f, true)
+  private val map = new graft.Lru[String, Option[Array[Byte]]](maxBytes,
+    _.fold(0L)(_.length.toLong) + 64L) // key + entry overhead estimate
 
-  private def weight(v: Option[Array[Byte]]): Long =
-    v.fold(0L)(_.length.toLong) + 64L // key + entry overhead estimate
-
-  def read(key: String): Option[Array[Byte]] = {
-    lock.synchronized {
-      val hit = map.get(key)
-      if (hit != null) return hit
-    }
-    fetches.incrementAndGet()
-    val v = inner.read(key)
-    lock.synchronized {
-      if (!map.containsKey(key)) {
-        map.put(key, v)
-        used += weight(v)
-        val it = map.entrySet().iterator()
-        while (used > maxBytes && map.size() > 1) {
-          val e = it.next()
-          used -= weight(e.getValue)
-          it.remove()
-        }
-      }
-    }
-    v
-  }
+  def read(key: String): Option[Array[Byte]] =
+    map.getOrLoad(key) { fetches.incrementAndGet(); inner.read(key) }
 
   @volatile private var dirs: Seq[String] = _
   def listDirs: Seq[String] = {
@@ -263,19 +238,16 @@ private[graft] final class CachingBlobStore(private[graft] val inner: BlobStore,
     all
   }
 
-  // sizes are tiny: cache them alongside objects, bounded so the map
-  // can't leak over a JVM lifetime; RANGES are not cached (a shard's
-  // inner chunks are read once each — ZarrStore caches the one hot
-  // range, the footer index, itself)
-  private val sizes = TrieMap.empty[String, Option[Long]]
-  def size(key: String): Option[Long] = {
-    if (sizes.size > (1 << 17)) sizes.clear()
-    sizes.getOrElseUpdate(key, { fetches.incrementAndGet(); inner.size(key) })
-  }
+  // sizes are tiny: cache them alongside objects; RANGES are not cached
+  // (a shard's inner chunks are read once each — ZarrStore caches the
+  // one hot range, the footer index, itself)
+  private val sizes = new graft.Lru[String, Option[Long]](1L << 17)
+  def size(key: String): Option[Long] =
+    sizes.getOrLoad(key) { fetches.incrementAndGet(); inner.size(key) }
   def readRange(key: String, off: Long, len: Int): Option[Array[Byte]] = {
     fetches.incrementAndGet()
     inner.readRange(key, off, len)
   }
 
-  private[graft] def cachedBytes: Long = lock.synchronized(used)
+  private[graft] def cachedBytes: Long = map.weight
 }

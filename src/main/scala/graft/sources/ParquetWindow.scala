@@ -156,69 +156,37 @@ private[graft] object ParquetWindow {
   // Access is serialized per reader (decompressors are not
   // thread-safe).
   //
-  // BOUNDED (round-17): a long-running tile server over a daily-
-  // partitioned multi-year store would otherwise accumulate one open
-  // fd per part file ever served, for the process lifetime, until
-  // EMFILE. The pool holds at most [[ReaderPoolCap]] readers; beyond
-  // it the least-recently-acquired are evicted. Eviction protocol:
-  // membership changes under [[poolLock]]; the evicted reader is
-  // closed under ITS OWN monitor (in-flight reads hold it, so a read
-  // always finishes on an open reader); readers re-check pool
-  // membership inside their monitor and re-acquire if they lost the
-  // race. Closing costs the next request on that file one ~10 ms
-  // reopen — bounded fds beat unbounded.
+  // Bounded at [[ReaderPoolCap]] readers: a long-running tile server
+  // over a daily-partitioned multi-year store would otherwise keep one
+  // open fd per part file ever served until EMFILE. An evicted reader
+  // (or one that lost an open race) is closed under ITS OWN monitor,
+  // outside the pool lock: in-flight reads hold that monitor, so a
+  // read always finishes on an open reader, and readers re-check pool
+  // membership inside it and re-acquire if they lost the race. Closing
+  // costs the next request on that file one ~10 ms reopen.
   //
   // Keyed by (file, variable): parquet-mr builds a row group's column
   // index store once, for the columns requested FIRST, and keeps it —
   // a reader switched to another variable by setRequestedSchema finds
   // no offset index for it and readFilteredRowGroup throws.
   private[graft] var ReaderPoolCap = 128 // var: test seam only
-  private val readers = TrieMap.empty[(String, String), ParquetFileReader]
-  private val lastUsed = TrieMap.empty[(String, String), Long]
-  private val useTick = new java.util.concurrent.atomic.AtomicLong
-  private val poolLock = new Object
+  private val readers = new graft.Lru[(String, String), ParquetFileReader](
+    ReaderPoolCap, release = rd => rd.synchronized {
+      try rd.close() catch { case scala.util.control.NonFatal(_) => () }
+    })
   // offset index per (file, column) — one footer-section parse; parsed
   // DATA (not an open resource), so it survives reader eviction and a
   // reopened reader reuses it
   private val offsetIndexes = TrieMap.empty[(String, String), AnyRef]
 
-  /** get-or-open the pooled reader for (`file`, `variable`), touch its
-    * LRU stamp, and evict past the cap (never the reader just
-    * acquired). */
+  /** get-or-open the pooled reader for (`file`, `variable`) */
   private def acquireReader(file: Path, variable: String,
                             conf: Configuration,
-                            fm: FileMeta): ParquetFileReader = {
-    val k = (file.toString, variable)
-    val (r, victims) = poolLock.synchronized {
-      val got = readers.getOrElseUpdate(k, {
-        val in = HadoopInputFile.fromPath(file, conf)
-        ParquetFileReader.open(in, fm.footer,
-          ParquetReadOptions.builder().build(), in.newStream())
-      })
-      lastUsed.put(k, useTick.incrementAndGet())
-      val vs =
-        if (readers.size <= ReaderPoolCap) Nil
-        else readers.keys.toSeq.filter(_ != k)
-          .sortBy(x => lastUsed.getOrElse(x, 0L))
-          .take(readers.size - ReaderPoolCap)
-          .flatMap { v =>
-            lastUsed.remove(v)
-            readers.remove(v)
-          }
-      (got, vs)
-    }
-    victims.foreach(rd => rd.synchronized {
-      try rd.close() catch { case scala.util.control.NonFatal(_) => () }
-    })
-    r
-  }
-
-  private def dropReaders(pred: String => Boolean): Unit =
-    readers.keys.filter(k => pred(k._1)).foreach { k =>
-      lastUsed.remove(k)
-      readers.remove(k).foreach(r => r.synchronized {
-        try r.close() catch { case scala.util.control.NonFatal(_) => () }
-      })
+                            fm: FileMeta): ParquetFileReader =
+    readers.getOrLoad((file.toString, variable)) {
+      val in = HadoopInputFile.fromPath(file, conf)
+      ParquetFileReader.open(in, fm.footer,
+        ParquetReadOptions.builder().build(), in.newStream())
     }
 
   private[graft] def invalidate(path: String): Unit = {
@@ -241,18 +209,18 @@ private[graft] object ParquetWindow {
     storeMetas.keys.filter(hit).foreach(storeMetas.remove)
     sidecarExtras.keys.filter(hit).foreach(sidecarExtras.remove)
     offsetIndexes.keys.filter(k => hit(k._1)).foreach(offsetIndexes.remove)
-    dropReaders(hit)
+    readers.removeIf((k, _) => hit(k._1))
   }
 
   /** test seam: the file path of each pooled open reader */
   private[graft] def pooledReaderPaths: Seq[String] =
-    readers.keysIterator.map(_._1).toSeq
+    readers.keys.map(_._1)
 
   private[graft] def clear(): Unit = {
     confs.clear(); fileLists.clear(); metas.clear(); storeMetas.clear()
     sidecarExtras.clear()
     offsetIndexes.clear()
-    dropReaders(_ => true)
+    readers.clear()
   }
 
   // memoized per store: a fresh Configuration lazily re-parses the
@@ -574,7 +542,7 @@ private[graft] object ParquetWindow {
     // re-acquired.
     val r = acquireReader(file, variable, conf, fm)
     r.synchronized {
-      if (!readers.get((file.toString, variable)).exists(_ eq r))
+      if (!readers.holds((file.toString, variable), r))
         return readFileDense(file, conf, fm, m, variable, planeBase,
           y0, x0, h, w, out)
       r.setRequestedSchema(proj)

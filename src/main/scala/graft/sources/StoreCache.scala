@@ -14,10 +14,11 @@ import scala.collection.concurrent.TrieMap
   *     parses its header once, lazily);
   *  2. the DECODED time axis per store (CF units arithmetic done once),
   *     with binary search for the request's time step;
-  *  3. a byte-bounded LRU of DECODED chunks keyed (store, variable,
-  *     chunk index) — the blob LRU under it caches compressed bytes,
-  *     so before this cache a hot tile crossing several chunks paid
-  *     decompress + mask-and-scale on every PNG-cache miss.
+  *  3. a byte-bounded [[graft.Lru]] of DECODED chunks keyed (store,
+  *     variable, chunk index), weighed at 8 bytes a value — the blob
+  *     LRU under it caches compressed bytes, so before this cache a hot
+  *     tile crossing several chunks paid decompress + mask-and-scale on
+  *     every PNG-cache miss.
   *
   * Writers and config reloads call [[invalidate]]/[[clear]] (wired into
   * `ZarrStore.invalidateMeta` and `BlobStore.dropAll`), so a reload
@@ -42,9 +43,8 @@ private[graft] object StoreCache {
                                      timeUs: Long, y0: Int, x0: Int,
                                      h: Int, w: Int,
                                      extra: Seq[(String, Double)])
-  private val chunkMap =
-    new java.util.LinkedHashMap[AnyRef, Array[Double]](256, 0.75f, true)
-  private var chunkBytes = 0L
+  private val chunks =
+    new graft.Lru[AnyRef, Array[Double]](chunkCapacityBytes, _.length * 8L)
 
   private def keyPath(k: AnyRef): String = k match {
     case c: ChunkKey => c.path
@@ -73,47 +73,23 @@ private[graft] object StoreCache {
     } else ax.indexOf(timeUs)
   }
 
-  /** decoded chunk through the byte-bounded LRU; duplicate concurrent
-    * loads are possible and harmless (last write wins) */
+  /** decoded chunk through the byte-bounded LRU */
   def chunk(path: String, variable: String, meta: ZarrStore.ArrayMeta,
             idx: Seq[Int]): Array[Double] =
-    cached(ChunkKey(path, variable, idx))(
-      ops(path).readChunk(variable, meta, idx)).get
+    chunks.getOrLoad(ChunkKey(path, variable, idx))(
+      ops(path).readChunk(variable, meta, idx))
 
   /** decoded parquet tile window through the same LRU (consumers treat
     * the returned array as read-only — the renderer only reads) */
   def window(path: String, variable: String, timeUs: Long, y0: Int,
              x0: Int, h: Int, w: Int,
              extra: Seq[(String, Double)] = Nil)
-            (load: => Option[Array[Double]]): Option[Array[Double]] =
-    cached(WindowKey(path, variable, timeUs, y0, x0, h, w, extra))(
-      load.orNull)
-
-  private def cached(key: AnyRef)
-                    (load: => Array[Double]): Option[Array[Double]] = {
-    chunkMap.synchronized {
-      val hit = chunkMap.get(key)
-      if (hit != null) return Some(hit)
-    }
-    val data = load
-    if (data == null) return None
-    chunkMap.synchronized {
-      if (!chunkMap.containsKey(key)) {
-        chunkMap.put(key, data)
-        chunkBytes += data.length * 8L
-        while (chunkBytes > chunkCapacityBytes && chunkMap.size > 1) {
-          val it = chunkMap.entrySet().iterator()
-          val eldest = it.next()
-          chunkBytes -= eldest.getValue.length * 8L
-          it.remove()
-        }
-      }
-    }
-    Some(data)
+            (load: => Option[Array[Double]]): Option[Array[Double]] = {
+    val key = WindowKey(path, variable, timeUs, y0, x0, h, w, extra)
+    chunks.get(key).orElse(load.map(chunks.put(key, _)))
   }
 
-  private[graft] def cachedChunkBytes: Long =
-    chunkMap.synchronized(chunkBytes)
+  private[graft] def cachedChunkBytes: Long = chunks.weight
 
   /** drop everything cached under one store path (writers re-writing a
     * fixture, metadata invalidation hooks). This is THE invalidation
@@ -125,16 +101,7 @@ private[graft] object StoreCache {
   def invalidate(path: String): Unit = {
     opsMap.remove(path)
     axisMap.remove(path)
-    chunkMap.synchronized {
-      val it = chunkMap.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        if (keyPath(e.getKey) == path) {
-          chunkBytes -= e.getValue.length * 8L
-          it.remove()
-        }
-      }
-    }
+    chunks.removeIf((k, _) => keyPath(k) == path)
     ParquetWindow.invalidate(path)
     Hdf5.invalidateUnder(path)
     ZarrStore.invalidateMetaUnder(path)
@@ -143,7 +110,7 @@ private[graft] object StoreCache {
   def clear(): Unit = {
     opsMap.clear()
     axisMap.clear()
-    chunkMap.synchronized { chunkMap.clear(); chunkBytes = 0L }
+    chunks.clear()
     ParquetWindow.clear()
     Hdf5.clearCaches()
     ZarrStore.clearMetaCaches()

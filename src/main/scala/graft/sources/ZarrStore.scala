@@ -90,8 +90,7 @@ object ZarrStore {
 
   private[graft] def invalidateMeta(store: String): Unit = {
     zmetaCache.remove(store)
-    shardIndexCache.keys.filter(_._1 == store)
-      .foreach(shardIndexCache.remove)
+    shardIndexCache.removeIf((k, _) => k._1 == store)
     BlobStore.drop(store)
     StoreCache.invalidate(store)
   }
@@ -105,8 +104,7 @@ object ZarrStore {
   private[graft] def invalidateMetaUnder(prefix: String): Unit = {
     def under(k: String) = k == prefix || k.startsWith(prefix + "/")
     zmetaCache.keys.filter(under).foreach(zmetaCache.remove)
-    shardIndexCache.keys.filter(k => under(k._1))
-      .foreach(shardIndexCache.remove)
+    shardIndexCache.removeIf((k, _) => under(k._1))
   }
 
   /** the [[StoreCache.clear]] (config reload) hook */
@@ -358,10 +356,10 @@ object ZarrStore {
     * wants exactly its chunk. Missing shard or unallocated inner chunk
     * (index entry 2^64-1) reads as fill. */
   /** shard footer indexes are ~KB and read once per inner chunk
-    * without this cache; entries vanish on [[invalidateMeta]] and the
-    * map self-clears past a bound (64 Ki indexes ≈ tens of MB) */
+    * without this cache; entries vanish on [[invalidateMeta]] (64 Ki
+    * indexes ≈ tens of MB) */
   private val shardIndexCache =
-    new scala.collection.concurrent.TrieMap[(String, String), Array[Byte]]
+    new graft.Lru[(String, String), Array[Byte]](1L << 16)
 
   private def readShardedChunk(store: String, name: String, meta: ArrayMeta,
                                chunkIdx: Seq[Int]): Array[Double] = {
@@ -383,8 +381,7 @@ object ZarrStore {
     if (total < indexBytes) throw new IllegalStateException(
       s"$store/$key: shard is $total bytes, smaller than its " +
         s"$indexBytes-byte index — truncated object")
-    if (shardIndexCache.size > (1 << 16)) shardIndexCache.clear()
-    val idxRaw = shardIndexCache.getOrElseUpdate((store, key), {
+    val idxRaw = shardIndexCache.getOrLoad((store, key)) {
       val raw = b.readRange(key, total - indexBytes, indexBytes).getOrElse(
         throw new IllegalStateException(s"$store/$key vanished mid-read"))
       if (meta.shardIndexCrc) {
@@ -396,7 +393,7 @@ object ZarrStore {
           s"$store/$key: shard index crc32c mismatch — corrupt shard")
       }
       raw
-    })
+    }
     // linear inner index, C order over the shard's chunk grid
     val li = inner.zip(chunksPerShard).foldLeft(0L) {
       case (acc, (i, d)) => acc * d + i }

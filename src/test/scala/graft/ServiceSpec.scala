@@ -264,6 +264,20 @@ Styles:
           assert(tsLines.exists(_.matches(
             s"""\\[perf\\] GET /ts/local/v0/point $stage: took \\d+\\.\\d\\dms""")),
             s"missing $stage in $tsLines")
+        // the fan-out routes trace the same stages, plus send
+        captured.clear()
+        val many = client.send(HttpRequest.newBuilder(
+            URI.create(srv.address + "/ts/local/v0/geometries"))
+          .POST(HttpRequest.BodyPublishers.ofString(
+            """{"type":"GeometryCollection","geometries":[
+                 {"type":"Point","coordinates":[1.2,51.3]}]}""")).build(),
+          HttpResponse.BodyHandlers.ofString())
+        assert(many.statusCode() == 200)
+        val manyLines = awaitLines()
+        for (stage <- Seq("parse", "query", "encode", "send", "total"))
+          assert(manyLines.exists(_.matches(
+            s"""\\[perf\\] POST /ts/local/v0/geometries $stage: took \\d+\\.\\d\\dms""")),
+            s"missing $stage in $manyLines")
         srv.tracePerf = false
         Thread.sleep(100) // drain any in-flight done() before the off-check
         captured.clear()

@@ -9,26 +9,20 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session for suites (one per JVM — local[4], UTC, AQE on). */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .config("spark.ui.enabled", "false")
+  lazy val spark: SparkSession = Session("4", logLevel = "ERROR",
+    appName = Some("graft-test"), conf = Seq(
+      // AQE starts at the 4 shuffle partitions the plan-shape tests pin,
+      // not the mains' 256
+      "spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> "4",
+      "spark.sql.warehouse.dir" ->
+        java.nio.file.Files.createTempDirectory("graft-wh").toString,
       // The plan-shape suites pin AT-SCALE contracts, where the
       // Spread scan-parallelism heal is a footer-guarded structural
       // no-op (row groups >= cores/2) — so it is off here and its
       // local firing behavior (guard verdicts, result equality, the
       // reused exchange) is owned by SpreadSpec, which re-enables it
       // per test.
-      .config(Spread.EnabledConf, "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+      Spread.EnabledConf -> "false"))
 }
 
 abstract class SparkSpec extends AnyFunSuite {
