@@ -65,18 +65,23 @@ case class ColorMapArgb(child: Expression,
     val childGen = child.genCode(ctx)
     val palRef = ctx.addReferenceObj("palette", pal, "int[]")
     val v = ctx.freshName("v")
+    val invalid = ctx.freshName("invalid")
     val idx = ctx.freshName("idx")
     val fillCheck = fillValue.map(f => s" || $v == ${dbl(f)}").getOrElse("")
     val minCheck = validMin.map(m => s" || $v < ${dbl(m)}").getOrElse("")
     val maxCheck = validMax.map(m => s" || $v > ${dbl(m)}").getOrElse("")
+    // the invalid test goes into a boolean local: Janino rejects the
+    // negated compound `!(java.lang.Double.isNaN(v) || …)` ("… is not a
+    // type"), and Spark then drops the whole stage to interpreted mode
     val code =
       code"""
         ${childGen.code}
         int ${ev.value} = 0;
         if (!${childGen.isNull}) {
           double $v = ${childGen.value};
-          if (!(java.lang.Double.isNaN($v) || java.lang.Double.isInfinite($v)
-              $fillCheck$minCheck$maxCheck)) {
+          boolean $invalid = java.lang.Double.isNaN($v) ||
+            java.lang.Double.isInfinite($v)$fillCheck$minCheck$maxCheck;
+          if (!$invalid) {
             int $idx = (int)(($v - ${dbl(vmin)}) * ${dbl(scale)});
             if ($idx < 0) $idx = 0;
             else if ($idx >= ${pal.length}) $idx = ${pal.length - 1};

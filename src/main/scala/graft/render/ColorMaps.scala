@@ -1,10 +1,7 @@
 package graft.render
 
 import java.awt.image.BufferedImage
-import java.io.ByteArrayOutputStream
 import java.util.Base64
-
-import javax.imageio.ImageIO
 
 /** The colormap catalog behind the Color Bars API (reference K5:
   * xcube_server/im/cmaps.py:46-93 category table, 97-191 loading +
@@ -183,9 +180,7 @@ object ColorMaps {
       img.setRGB(x, 0, c); img.setRGB(x, 1, c)
       x += 1
     }
-    val os = new ByteArrayOutputStream()
-    ImageIO.write(img, "png", os)
-    Base64.getEncoder.encodeToString(os.toByteArray)
+    Base64.getEncoder.encodeToString(Render.png(img))
   }
 
   /** Catalog entries for one map. The reference registers the `_alpha`

@@ -1,11 +1,11 @@
 package graft.render
 
-import java.awt.image.BufferedImage
+import java.awt.image.{BufferedImage, RenderedImage}
 import java.io.ByteArrayOutputStream
 
-import javax.imageio.ImageIO
+import javax.imageio.{ImageIO, ImageTypeSpecifier}
+import javax.imageio.stream.MemoryCacheImageOutputStream
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.cube.CubeFrame
@@ -18,6 +18,18 @@ import graft.cube.CubeFrame
   * tiles a driver-local path over (cached) level data — Spark jobs are
   * for pyramid BUILDS and zonal analytics, not per-tile requests. The
   * colormap kernel itself is a tight primitive loop either way.
+  *
+  * A tile is read, then rendered. The read yields a row-major value
+  * window in index order; the server takes it from its PNG cache's
+  * miss path in one of three ways: a direct chunk window (zarr, NetCDF,
+  * HDF5), a parquet row-group window, or [[sparkWindow]] for a level
+  * with no store behind it, memoized per distinct window in the chunk
+  * LRU (`graft.sources.StoreCache.frameWindow`). [[renderWindow]] then
+  * colour-maps and encodes whichever window it gets. Windows are
+  * shared read-only: [[renderWindow]] flips into a copy and
+  * [[mapColors]] only reads. [[renderTile]] is the two steps with no
+  * cache in between, the reference the served bytes are checked
+  * against.
   */
 object Render {
 
@@ -79,19 +91,39 @@ object Render {
   def toPng(pixels: Array[Int], width: Int, height: Int): Array[Byte] = {
     val img = new BufferedImage(width, height, BufferedImage.TYPE_INT_ARGB)
     img.setRGB(0, 0, width, height, pixels, 0, width)
+    png(img)
+  }
+
+  /** PNG bytes of an image, written in memory: the writer
+    * `ImageIO.write(img, "png", out)` picks, onto a
+    * [[MemoryCacheImageOutputStream]]. `ImageIO.write` to an
+    * `OutputStream` spools every image through a temp file in
+    * `java.io.tmpdir` while ImageIO's global `useCache` is on (its
+    * default); the bytes are the same either way. */
+  def png(img: RenderedImage): Array[Byte] = {
+    val writer = ImageIO.getImageWriters(
+      ImageTypeSpecifier.createFromRenderedImage(img), "png").next()
     val bos = new ByteArrayOutputStream()
-    ImageIO.write(img, "png", bos)
+    val out = new MemoryCacheImageOutputStream(bos)
+    try {
+      writer.setOutput(out)
+      writer.write(img)
+    } finally {
+      writer.dispose()
+      out.close()
+    }
     bos.toByteArray
   }
 
-  /** Render one tile from a cube: filter the tile's index window (P7),
-    * collect the (tileW × tileH) cell values — absent rows are NaN
-    * padding (F8 trim/pad semantics) — then colormap + PNG encode.
-    * Flip-y (F7) honors inv_y grids. */
-  def renderTile(cube: CubeFrame, variable: String,
-                 timeValue: java.sql.Timestamp,
-                 tileX: Int, tileY: Int, tileW: Int, tileH: Int,
-                 mapping: ColorMapping, flipY: Boolean = false): Array[Byte] = {
+  /** The Spark read of one tile's value window: filter the tile's index
+    * window (P7) and collect its cells, one Spark job. Returns the
+    * (tileW × tileH) values row-major in index order (y_idx rows, not
+    * flipped); absent rows and nulls are NaN padding (F8 trim/pad
+    * semantics). */
+  def sparkWindow(cube: CubeFrame, variable: String,
+                  timeValue: java.sql.Timestamp,
+                  tileX: Int, tileY: Int, tileW: Int, tileH: Int)
+      : Array[Double] = {
     val x0 = tileX * tileW
     val y0 = tileY * tileH
     val rows = cube.df
@@ -100,20 +132,31 @@ object Render {
         col("y_idx") >= y0 && col("y_idx") < y0 + tileH)
       .select(col("y_idx"), col("x_idx"), col(variable).cast("double"))
       .collect()
-    val grid = Array.fill(tileH * tileW)(Double.NaN)
+    val window = Array.fill(tileH * tileW)(Double.NaN)
     rows.foreach { r =>
-      val ry = r.getInt(0) - y0
-      val rx = r.getInt(1) - x0
-      val py = if (flipY) tileH - 1 - ry else ry
-      if (!r.isNullAt(2)) grid(py * tileW + rx) = r.getDouble(2)
+      if (!r.isNullAt(2))
+        window((r.getInt(0) - y0) * tileW + r.getInt(1) - x0) = r.getDouble(2)
     }
-    toPng(mapColors(grid, mapping), tileW, tileH)
+    window
   }
 
-  /** PNG from an already-assembled row-major value window (the direct
-    * chunk-read serving path, [[graft.sources.StoreWindow]]): same
-    * colormap + flip semantics as [[renderTile]], so the two paths are
-    * byte-identical for the same values. */
+  /** Render one tile from a cube: [[sparkWindow]], then colormap + PNG
+    * encode. Flip-y (F7) honors inv_y grids. */
+  def renderTile(cube: CubeFrame, variable: String,
+                 timeValue: java.sql.Timestamp,
+                 tileX: Int, tileY: Int, tileW: Int, tileH: Int,
+                 mapping: ColorMapping, flipY: Boolean = false): Array[Byte] =
+    renderWindow(sparkWindow(cube, variable, timeValue, tileX, tileY, tileW,
+      tileH), tileW, tileH, mapping, flipY)
+
+  /** PNG from a row-major value window in index order, whichever read
+    * produced it: a direct store window ([[graft.sources.DirectWindow]])
+    * or a [[sparkWindow]], memoized or not. Every tile goes through
+    * here, so the read arms are byte-identical for the same values.
+    *
+    * `window` is only read, never written: the server shares memoized
+    * windows between requests, so the flip writes a copy and
+    * [[mapColors]] only reads its input. */
   def renderWindow(window: Array[Double], tileW: Int, tileH: Int,
                    mapping: ColorMapping, flipY: Boolean): Array[Byte] = {
     val grid =
@@ -158,7 +201,12 @@ object Render {
     * matplotlib figure. Transparent background (fig.patch alpha 0.0,
     * tiles.py:177-178). */
   def legend(mapping: ColorMapping, label: Option[String] = None,
-             width: Int = 160, height: Int = 320): Array[Byte] = {
+             width: Int = 160, height: Int = 320): Array[Byte] =
+    png(legendImage(mapping, label, width, height))
+
+  /** The [[legend]] image before PNG encoding. */
+  private[graft] def legendImage(mapping: ColorMapping, label: Option[String],
+                                 width: Int, height: Int): BufferedImage = {
     val img = new BufferedImage(width, height, BufferedImage.TYPE_INT_ARGB)
     val g = img.createGraphics()
     g.setRenderingHint(java.awt.RenderingHints.KEY_TEXT_ANTIALIASING,
@@ -200,9 +248,7 @@ object Render {
       g2.dispose()
     }
     g.dispose()
-    val os = new ByteArrayOutputStream()
-    ImageIO.write(img, "png", os)
-    os.toByteArray
+    img
   }
 
   /** 'nice' tick values covering [vmin, vmax] (the 1-2-5 ladder

@@ -81,10 +81,14 @@ class GraftServer(ctx: ServiceContext, port: Int = 0) {
     }
   }
 
-  /** Invalidate all cached tiles — must be called whenever the dataset
-    * registry changes (config hot reload), or stale tiles from the old
-    * data are served indefinitely. */
-  def invalidateTiles(): Unit = tileCache.clear()
+  /** Invalidate all cached tiles and the memoized Spark value windows
+    * behind them — must be called whenever the dataset registry changes
+    * (config hot reload), or stale tiles from the old data are served
+    * indefinitely. */
+  def invalidateTiles(): Unit = {
+    tileCache.clear()
+    graft.sources.StoreCache.dropFrameWindows()
+  }
 
   server.createContext("/", (ex: HttpExchange) => {
     try route(ex)
@@ -454,8 +458,16 @@ class GraftServer(ctx: ServiceContext, port: Int = 0) {
         cm.map(_.colorBar).getOrElse("jet"))) // DEFAULT_CMAP_CBAR, defaults.py:36
   }
 
-  /** Tile request: cache probe → tile render, keyed like the reference
-    * image cache (controllers/tiles.py:57-61). `?time=` selects the
+  /** Tile request: PNG cache probe, keyed like the reference image
+    * cache (controllers/tiles.py:57-61); on a miss, read → render →
+    * send. The read is [[readWindow]]: a direct chunk or parquet window
+    * for a store-backed level, else the Spark read memoized as a value
+    * window (the reference caches its `NdarrayImage` value tile apart
+    * from the colour-mapped PNG), so a colour-range change re-renders
+    * without reading again. The render is [[Render.renderWindow]]
+    * (colour map + PNG) for every arm. Under `?debug=1` or
+    * `--traceperf` the stages are timed as `parse`, `read`, `render`
+    * and `send`, and one line names the read arm. `?time=` selects the
     * NEAREST axis step (the reference's dimension indexers,
     * tiles.py:46 → `var.sel(method='nearest')`); the default is the
     * latest step (the 'current' J5 convention). `cbar`/`vmin`/`vmax`
@@ -517,41 +529,61 @@ class GraftServer(ctx: ServiceContext, port: Int = 0) {
         val levels = d.levelSeq
         val cube = levels(math.max(0, math.min(levels.length - 1,
           d.tileGrid.numLevels - 1 - z)))
-        // store-backed level: direct window read on the serving thread
-        // (the reference's own tile path is an in-process array slice)
-        // — no Spark job; chunked stores slice their chunks, graft's
-        // ingested parquet levels decode ~one row group (DirectWindow
-        // dispatch); values identical to the Spark scan by
-        // construction. Anything transformed has no storePath and
-        // keeps the Spark path.
-        val png = trace.stage("render") {
-          val direct = cube.storePath.flatMap { p =>
-            try {
-              graft.sources.DirectWindow
-                .read(p, v, keyUs, y * 256, x * 256, 256, 256,
-                  extra = extraSel)
-                .map(winVals => Render.renderWindow(winVals, 256, 256,
-                  m, flipY = cube.grid.latAscending))
-            } catch { case scala.util.control.NonFatal(e) =>
-              System.err.println(s"[tile] direct read failed for $key: $e")
-              None
-            }
-          }
-          direct.getOrElse(
-            // Spark path: one equality filter per extra dim — pushes to
-            // the store scan as a chunk-plane prune
-            Render.renderTile(planeFiltered(cube, extraSel), v, t, x, y,
-              256, 256, m, flipY = cube.grid.latAscending))
-        }
+        val (window, arm) =
+          trace.stage("read")(readWindow(cube, v, t, keyUs, x, y, extraSel))
+        trace.info(s"<<< tile ${d.id}.$v/$z/$x/$y: read $arm")
+        val png = trace.stage("render")(Render.renderWindow(window, 256, 256,
+          m, flipY = cube.grid.latAscending))
         tileCache.put(key, png)
         trace.stage("send")(sendBytes(ex, 200, png, "image/png"))
     }
     trace.done()
   }
 
-  /** time-series rows → reference JSON shape (time_series.py:133-145) */
-  private def tsJson(df: org.apache.spark.sql.DataFrame): String =
-    Json.obj("results" -> Json.arr(df.collect().map(tsRowJson)))
+  /** One tile's value window (row-major, index order, NaN padded) and
+    * the name of the read arm that produced it:
+    *  - `direct`: a store-backed level (`storePath`) reads its window on
+    *    the serving thread with no Spark job ([[graft.sources.DirectWindow]]:
+    *    chunked stores slice their decoded chunks, graft's parquet levels
+    *    decode ~one row group), values identical to the Spark scan by
+    *    construction (the reference's own tile path is an in-process
+    *    array slice);
+    *  - `spark window hit` / `spark window load`: a level with no store
+    *    behind it (persisted, derived or transformed frames) reads
+    *    through [[Render.sparkWindow]], one Spark job, memoized in the
+    *    chunk LRU by [[graft.sources.StoreCache.frameWindow]] — a repeat
+    *    with another colour range (`vmin`/`vmax`/`cbar`) runs no job;
+    *  - `spark scan`: a store-backed level whose direct read declines or
+    *    fails takes the same Spark read, not memoized (the store's own
+    *    invalidation seam would not reach it).
+    * The Spark reads filter one plane per extra dim, which pushes to the
+    * store scan as a chunk-plane prune. The returned window is shared:
+    * read it, never write it. */
+  private def readWindow(cube: graft.cube.CubeFrame, v: String,
+                         t: java.sql.Timestamp, keyUs: Long, x: Int, y: Int,
+                         extraSel: Seq[(String, Double, Int)])
+      : (Array[Double], String) = {
+    val direct = cube.storePath.flatMap { p =>
+      try graft.sources.DirectWindow.read(p, v, keyUs, y * 256, x * 256,
+        256, 256, extra = extraSel)
+      catch { case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[tile] direct read failed for $p $v/$keyUs/" +
+          s"$x/$y: $e")
+        None
+      }
+    }
+    def scan(): Array[Double] =
+      Render.sparkWindow(planeFiltered(cube, extraSel), v, t, x, y, 256, 256)
+    direct.map(_ -> "direct").getOrElse {
+      if (cube.storePath.isDefined) (scan(), "spark scan")
+      else {
+        val (win, hit) = graft.sources.StoreCache.frameWindow(cube.df, v,
+          keyUs, y * 256, x * 256, 256, 256,
+          extraSel.map { case (n, vv, _) => (n, vv) })(scan())
+        (win, if (hit) "spark window hit" else "spark window load")
+      }
+    }
+  }
 
   private def tsRowJson(r: org.apache.spark.sql.Row): String =
     Json.obj(
@@ -675,7 +707,7 @@ class GraftServer(ctx: ServiceContext, port: Int = 0) {
 
   private def readJsonBody(ex: HttpExchange)
       : com.fasterxml.jackson.databind.JsonNode =
-    try new com.fasterxml.jackson.databind.ObjectMapper().readTree(
+    try GraftServer.JsonMapper.readTree(
       new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8))
     catch {
       // malformed bodies are CLIENT errors (reference handlers.py
@@ -719,4 +751,8 @@ object GraftServer {
   /** Library version surfaced by the `GET /` info document; kept in
     * sync with build.sbt's `ThisBuild / version`. */
   val Version = "0.1.0"
+
+  /** request-body parser, shared: an `ObjectMapper` is thread-safe once
+    * configured, and building one per request is not cheap */
+  private val JsonMapper = new com.fasterxml.jackson.databind.ObjectMapper()
 }

@@ -30,8 +30,9 @@ object Perf {
         finally stages += ((tag, (System.nanoTime() - t0) / 1e6))
       }
 
-    /** Free-form trace line (the reference's `>>> tile …` markers). */
-    def info(line: String): Unit = if (enabled) sink(s"[perf] $line")
+    /** Free-form trace line (the reference's `>>> tile …` markers),
+      * built only when enabled. */
+    def info(line: => String): Unit = if (enabled) sink(s"[perf] $line")
 
     /** Emit one line per stage plus the total. */
     def done(): Unit = if (enabled) {
@@ -42,8 +43,10 @@ object Perf {
     }
   }
 
-  def trace(enabled: Boolean, prefix: String): Trace =
-    new Trace(enabled, prefix)
+  /** A trace for one request; disabled, it is the shared [[off]] and
+    * the prefix is never built. */
+  def trace(enabled: Boolean, prefix: => String): Trace =
+    if (enabled) new Trace(true, prefix) else off
 
   /** Shared disabled instance for paths that never trace. */
   val off: Trace = new Trace(false, "")

@@ -2,6 +2,8 @@ package graft.sources
 
 import scala.collection.concurrent.TrieMap
 
+import org.apache.spark.sql.DataFrame
+
 /** Serving-path caches for direct (no-Spark-job) store reads.
   *
   * [[StoreWindow]] originally called `StoreOps.forPath` + decoded the
@@ -18,7 +20,9 @@ import scala.collection.concurrent.TrieMap
   *     variable, chunk index), weighed at 8 bytes a value — the blob
   *     LRU under it caches compressed bytes, so before this cache a hot
   *     tile crossing several chunks paid decompress + mask-and-scale on
-  *     every PNG-cache miss.
+  *     every PNG-cache miss. The same LRU and byte budget hold the
+  *     parquet path's decoded tile windows and the value windows of
+  *     Spark tile reads ([[frameWindow]]).
   *
   * Writers and config reloads call [[invalidate]]/[[clear]] (wired into
   * `ZarrStore.invalidateMeta` and `BlobStore.dropAll`), so a reload
@@ -43,12 +47,21 @@ private[graft] object StoreCache {
                                      timeUs: Long, y0: Int, x0: Int,
                                      h: Int, w: Int,
                                      extra: Seq[(String, Double)])
+  /** value windows of the Spark tile read over a level with no store
+    * behind it, keyed by the level's unfiltered frame: `Dataset` keeps
+    * Object's identity `equals`/`hashCode`, and a registration's levels
+    * are fixed objects */
+  private final case class FrameWindowKey(df: DataFrame, variable: String,
+                                          timeUs: Long, y0: Int, x0: Int,
+                                          h: Int, w: Int,
+                                          extra: Seq[(String, Double)])
   private val chunks =
     new graft.Lru[AnyRef, Array[Double]](chunkCapacityBytes, _.length * 8L)
 
   private def keyPath(k: AnyRef): String = k match {
     case c: ChunkKey => c.path
     case w: WindowKey => w.path
+    case _: FrameWindowKey => null // no store behind it
   }
 
   def ops(path: String): StoreOps =
@@ -88,6 +101,27 @@ private[graft] object StoreCache {
     val key = WindowKey(path, variable, timeUs, y0, x0, h, w, extra)
     chunks.get(key).orElse(load.map(chunks.put(key, _)))
   }
+
+  /** The Spark tile read of a level with no store behind it, memoized
+    * in the same LRU: `df` is the level's UNFILTERED frame (compared by
+    * reference), `extra` the resolved extra-dim plane, and `load` runs
+    * the read with its plane filter. Returns the window and whether it
+    * was cached. The window is shared read-only between requests. */
+  def frameWindow(df: DataFrame, variable: String,
+                  timeUs: Long, y0: Int, x0: Int, h: Int, w: Int,
+                  extra: Seq[(String, Double)])
+                 (load: => Array[Double]): (Array[Double], Boolean) = {
+    val key = FrameWindowKey(df, variable, timeUs, y0, x0, h, w, extra)
+    chunks.get(key) match {
+      case Some(win) => (win, true)
+      case None => (chunks.put(key, load), false)
+    }
+  }
+
+  /** drops every memoized [[frameWindow]] (the server's tile
+    * invalidation: a reloaded registration reads its levels again) */
+  def dropFrameWindows(): Unit =
+    chunks.removeIf((k, _) => k.isInstanceOf[FrameWindowKey])
 
   private[graft] def cachedChunkBytes: Long = chunks.weight
 

@@ -131,6 +131,75 @@ class RenderSpec extends SparkSpec {
           flipY = true)), s"masked tile ($tx,$ty)")
   }
 
+  test("PNGs written in memory are the bytes ImageIO.write gives, for a " +
+      "tile and a legend") {
+    def viaImageIoWrite(img: java.awt.image.RenderedImage): Array[Byte] = {
+      val bos = new java.io.ByteArrayOutputStream()
+      assert(javax.imageio.ImageIO.write(img, "png", bos))
+      bos.toByteArray
+    }
+    val w = 256
+    val values = Array.tabulate(w * w)(i =>
+      if (i % 97 == 0) Double.NaN else (i % 1031).toDouble / 10)
+    val pixels = Render.mapColors(values, ColorMapping(0.0, 100.0,
+      graft.render.ColorMaps.paletteOrDefault("jet")))
+    val tile = new java.awt.image.BufferedImage(w, w,
+      java.awt.image.BufferedImage.TYPE_INT_ARGB)
+    tile.setRGB(0, 0, w, w, pixels, 0, w)
+    assert(Render.toPng(pixels, w, w).sameElements(viaImageIoWrite(tile)))
+    val m = ColorMapping(-5.0, 42.0, Render.ViridisLike)
+    assert(Render.legend(m, Some("chl_a")).sameElements(
+      viaImageIoWrite(Render.legendImage(m, Some("chl_a"), 160, 320))))
+    assert(javax.imageio.ImageIO.getUseCache, "the global ImageIO cache " +
+      "setting is left alone")
+  }
+
+  test("ColorMapArgb: generated code compiles and matches interpreted " +
+      "evaluation bit for bit (NaN, ±Inf, -0.0, null, fill, valid range)") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types._
+    // None is a null cell
+    val cells: Seq[Option[Double]] = Seq(Double.NaN,
+      Double.PositiveInfinity, Double.NegativeInfinity, -0.0, 0.0, -1.0,
+      -3.5, -2.5, 3.3, 9.5, 9.75, 10.0, 42.0, Double.MinPositiveValue,
+      Double.MaxValue, -Double.MaxValue).map(Some(_)) :+ None
+    val masked = ColorMapping(-2.0, 10.0, Render.ViridisLike,
+      fillValue = Some(-1.0), validMin = Some(-3.0), validMax = Some(9.5))
+    val plain = ColorMapping(0.0, 8.0, Render.GrayLike)
+    val schema = StructType(Seq(StructField("i", IntegerType),
+      StructField("v", DoubleType, nullable = true)))
+    // the exchange keeps the projection out of the local relation, which
+    // the optimizer would otherwise evaluate (interpreted) at plan time
+    val df = spark.createDataFrame(java.util.Arrays.asList(
+        cells.zipWithIndex.map { case (v, i) => Row(i, v.orNull) }: _*),
+        schema)
+      .repartition(1)
+    def run(conf: (String, String)*): Seq[(Int, Int, Int)] = {
+      val old = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      try df.select(col("i"),
+          graft.functions.ColorMapArgb(col("v"), masked),
+          graft.functions.ColorMapArgb(col("v"), plain))
+        .collect().map(r => (r.getInt(0), r.getInt(1), r.getInt(2)))
+        .sortBy(_._1).toSeq
+      finally old.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+    val generated = run("spark.sql.codegen.wholeStage" -> "true",
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+      "spark.sql.codegen.fallback" -> "false")
+    val interpreted = run("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    assert(generated == interpreted)
+    // and both are the driver kernel's pixels (a null cell is NaN there)
+    val asDoubles = cells.map(_.getOrElse(Double.NaN)).toArray
+    assert(generated.map(_._2) == Render.mapColors(asDoubles, masked).toSeq)
+    assert(generated.map(_._3) == Render.mapColors(asDoubles, plain).toSeq)
+  }
+
   test("tick labels: mantissa-only zero trim keeps exponents intact") {
     assert(Render.tickLabel(5.0) == "5")
     assert(Render.tickLabel(0.25) == "0.25")
