@@ -121,7 +121,7 @@ object TileBench {
       val parquetWarm = (System.nanoTime() - t0pw) / 1e9
       // 4-D ingested store (time × depth × y × x): per-plane direct
       // window reads with the extra-dim predicate / dense plane shift
-      import org.apache.spark.sql.functions.{explode, lit, typedLit}
+      import org.apache.spark.sql.functions.{explode, typedLit}
       val depths = Seq(0.0, 10.0, 50.0)
       val p4dir = java.nio.file.Files.createTempDirectory("graft-tb4").toString
       val cube4 = cube.copy(
@@ -152,7 +152,6 @@ object TileBench {
       // the batch. Timed twice: the first run carries the one-time
       // codegen/JIT cost, the second is the steady-state throughput a
       // long-lived pre-render job sees — both recorded.
-      val d = ctx.dataset("bench").get
       import org.apache.spark.sql.functions.col
       val times = cube.df.select(col("time")).distinct()
         .collect().map(_.getTimestamp(0)).sortBy(_.getTime)

@@ -1,6 +1,6 @@
 package graft.cube
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Pyramid
@@ -82,8 +82,8 @@ object CubeIngest {
     * through the generic per-row path. */
   private def writeMeta(path: String, grid: CubeGrid,
                         variables: Seq[String], tileSize: Int,
-                        schemaJson: Option[String] = None,
-                        extraDims: Seq[graft.cube.ExtraDim] = Nil): Unit = {
+                        schemaJson: Option[String],
+                        extraDims: Seq[graft.cube.ExtraDim]): Unit = {
     val g = grid
     // the exact written schema (Spark's own StructType JSON, p_date
     // included) makes open() a pure metadata read: a schema-less

@@ -321,7 +321,6 @@ object DenseGraph {
     if (opOpt.isEmpty) return None
     val csr = buildCsr(opOpt.get)
     val bc = s.sparkContext.broadcast(csr)
-    val n = csr.ids.length
     val par = math.max(1, s.sparkContext.defaultParallelism)
     val local = s.range(0, par.toLong, 1, par)
       .mapPartitions { it =>
@@ -473,7 +472,6 @@ object DenseGraph {
                        memoKey: Option[String] = None,
                        footer: Option[FooterHint] = None)
       : Option[DataFrame] = {
-    import s.implicits._
     val opOpt = collectPackedIfFits(s, pairs, memoKey, footer)
     if (opOpt.isEmpty) return None
     val csr = buildCsr(opOpt.get)
@@ -544,7 +542,6 @@ object DenseGraph {
     if (opOpt.isEmpty) return None
     val csr = buildCsr(opOpt.get)
     val bc = s.sparkContext.broadcast(csr)
-    val n = csr.ids.length
     val par = math.max(1, s.sparkContext.defaultParallelism)
     val partials = s.range(0, par.toLong, 1, par)
       .mapPartitions { it =>

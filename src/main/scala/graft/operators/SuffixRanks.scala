@@ -327,7 +327,7 @@ object SuffixRanks {
     }
     val sigma = vocab + nd
     // --- suffix order capped at Cap tokens: counting-sort doubling ---
-    var rank = seqIds.clone()
+    val rank = seqIds.clone()
     val sa = new Array[Int](n)
     if (n > 0) {
       val cnt0 = new Array[Int](sigma)

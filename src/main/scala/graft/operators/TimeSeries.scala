@@ -3,7 +3,6 @@ package graft.operators
 import java.sql.Timestamp
 
 import scala.jdk.CollectionConverters._
-import scala.util.DynamicVariable
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.util.{DateTimeUtils, LegacyDateFormats, TimestampFormatter}
@@ -43,7 +42,7 @@ import graft.sources.{DirectWindow, StoreCache, StoreWindow}
   * the variable is a served 3-D array matching the grid, the cube has
   * no extra dims, the store's time axis ascends strictly, and the
   * chunks the windows touch over the requested steps fit
-  * [[directBudgetBytes]]. Every other input — parquet levels,
+  * `StoreCache.directBudgetBytes`. Every other input — parquet levels,
   * transformed or 4-D frames, huge polygons — takes the Spark arm, as
   * does any read that comes back empty.
   *
@@ -261,18 +260,6 @@ object TimeSeries {
 
   // ---- the direct arm ------------------------------------------------
 
-  private val budget = new DynamicVariable[Long](StoreCache.chunkCapacityBytes / 4)
-
-  /** Decoded-chunk bytes one direct request may touch: a quarter of the
-    * chunk LRU, so a request never evicts most of the tiles' working
-    * set. Larger requests take the Spark arm. */
-  private[graft] def directBudgetBytes: Long = budget.value
-
-  /** runs `body` with the direct-arm budget narrowed to `bytes` on this
-    * thread (tests reach the over-budget fallback through it) */
-  private[graft] def withDirectBudget[T](bytes: Long)(body: => T): T =
-    budget.withValue(bytes)(body)
-
   /** The direct arm: one row per (geometry index, window) and time step
     * in range, sorted as the Spark arm sorts, as a local relation (its
     * collect runs no job) — or None when the request is not eligible
@@ -305,7 +292,7 @@ object TimeSeries {
     }.distinct.size
     val bytes = spatialChunks.toLong * steps.map(_ / ct).distinct.size *
       ct * cy * cx * 8L
-    if (bytes > directBudgetBytes) return None
+    if (bytes > StoreCache.directBudgetBytes) return None
     val spark = cube.df.sparkSession
     val fmt = TimestampFormatter(Q.IsoPattern, DateTimeUtils.getZoneId(
       spark.conf.get(SQLConf.SESSION_LOCAL_TIMEZONE.key)),

@@ -111,7 +111,7 @@ object Adpcm {
       }
       var s = written + 1
       val blockEnd = math.min(block + blockAlign, dOff + dSz)
-      var p = block + 4 * nCh
+      val p = block + 4 * nCh
       // nibble payload: 4 bytes (8 samples) per channel, interleaved
       while (s < math.min(written + spb, totalSamples) && p < blockEnd) {
         val group = s - (written + 1) // 0-based within nibble area

@@ -511,7 +511,7 @@ object Flac {
     * [2, -1] shift 0 (numerically the fixed-2 predictor, but through
     * the LPC bitstream layout — decoder-coverage for the LPC path). */
   private def encodeSubframe(w: BitWriter, x: Array[Long], bps: Int,
-                             lpc: Boolean = false): Unit = {
+                             lpc: Boolean): Unit = {
     val n = x.length
     if (lpc && n >= 3) {
       val res = new Array[Long](n - 2)

@@ -1,14 +1,17 @@
 package graft.render
 
-import java.awt.image.{BufferedImage, RenderedImage}
+import java.awt.image.{BufferedImage, DataBufferInt, RenderedImage}
 import java.io.ByteArrayOutputStream
+
+import scala.collection.mutable.ArrayBuilder
 
 import javax.imageio.{ImageIO, ImageTypeSpecifier}
 import javax.imageio.stream.MemoryCacheImageOutputStream
 
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
 
-import graft.cube.CubeFrame
+import graft.cube.{CubeFrame, CubeGrid}
 
 /** Tile rendering: value grid → RGBA → PNG (reference F3/F4/K1:
   * the numba `map_colors` kernel at xcube_server/im/tiledimage.py:638-665
@@ -22,14 +25,19 @@ import graft.cube.CubeFrame
   * A tile is read, then rendered. The read yields a row-major value
   * window in index order; the server takes it from its PNG cache's
   * miss path in one of three ways: a direct chunk window (zarr, NetCDF,
-  * HDF5), a parquet row-group window, or [[sparkWindow]] for a level
-  * with no store behind it, memoized per distinct window in the chunk
-  * LRU (`graft.sources.StoreCache.frameWindow`). [[renderWindow]] then
+  * HDF5), a parquet row-group window, or [[sparkRead]] for a level
+  * with no store behind it, memoized in the chunk LRU
+  * (`graft.sources.StoreCache.frameRead`). [[sparkRead]] has two
+  * [[Extent]]s: a small level (every time step of it fits the driver's
+  * per-request budget, `StoreCache.directBudgetBytes`) is read whole
+  * once and each tile is a [[slice]] of it, as the reference opens a
+  * pyramid level once and slices it (mldataset.py:87-109); a larger
+  * level is read one tile window at a time. [[renderWindow]] then
   * colour-maps and encodes whichever window it gets. Windows are
   * shared read-only: [[renderWindow]] flips into a copy and
-  * [[mapColors]] only reads. [[renderTile]] is the two steps with no
-  * cache in between, the reference the served bytes are checked
-  * against.
+  * [[mapColors]] only reads. [[renderTile]] is the window read and the
+  * render with no cache in between, the reference the served bytes
+  * are checked against.
   */
 object Render {
 
@@ -88,10 +96,18 @@ object Render {
 
   /** ARGB pixel array → PNG bytes (fast path — ImageIO's PNG writer at
     * default settings; reference uses compress_level=1, K1). */
-  def toPng(pixels: Array[Int], width: Int, height: Int): Array[Byte] = {
+  def toPng(pixels: Array[Int], width: Int, height: Int): Array[Byte] =
+    png(argbImage(pixels, width, height))
+
+  /** A `TYPE_INT_ARGB` image holding `pixels` row-major. The pixels are
+    * copied straight into its raster: `setRGB` would convert each one
+    * through the colour model, which for this type is the identity. */
+  private def argbImage(pixels: Array[Int], width: Int,
+                        height: Int): BufferedImage = {
     val img = new BufferedImage(width, height, BufferedImage.TYPE_INT_ARGB)
-    img.setRGB(0, 0, width, height, pixels, 0, width)
-    png(img)
+    val data = img.getRaster.getDataBuffer.asInstanceOf[DataBufferInt].getData
+    System.arraycopy(pixels, 0, data, 0, width * height)
+    img
   }
 
   /** PNG bytes of an image, written in memory: the writer
@@ -115,44 +131,113 @@ object Render {
     bos.toByteArray
   }
 
-  /** The Spark read of one tile's value window: filter the tile's index
-    * window (P7) and collect its cells, one Spark job. Returns the
-    * (tileW × tileH) values row-major in index order (y_idx rows, not
-    * flipped); absent rows and nulls are NaN padding (F8 trim/pad
-    * semantics). */
-  def sparkWindow(cube: CubeFrame, variable: String,
-                  timeValue: java.sql.Timestamp,
-                  tileX: Int, tileY: Int, tileW: Int, tileH: Int)
-      : Array[Double] = {
-    val x0 = tileX * tileW
-    val y0 = tileY * tileH
-    val rows = cube.df
-      .filter(col("time") === lit(timeValue) &&
-        col("x_idx") >= x0 && col("x_idx") < x0 + tileW &&
-        col("y_idx") >= y0 && col("y_idx") < y0 + tileH)
-      .select(col("y_idx"), col("x_idx"), col(variable).cast("double"))
-      .collect()
-    val window = Array.fill(tileH * tileW)(Double.NaN)
-    rows.foreach { r =>
-      if (!r.isNullAt(2))
-        window((r.getInt(0) - y0) * tileW + r.getInt(1) - x0) = r.getDouble(2)
-    }
-    window
+  /** The cells one [[sparkRead]] collects: the time `steps` × the index
+    * window [y0, y0 + h) × [x0, x0 + w). A read returns them as one
+    * array, step-major, then row-major in index order (y_idx rows, not
+    * flipped). */
+  final case class Extent(steps: Seq[java.sql.Timestamp], y0: Int, x0: Int,
+                          h: Int, w: Int) {
+    def cells: Long = steps.length.toLong * h * w
   }
 
-  /** Render one tile from a cube: [[sparkWindow]], then colormap + PNG
-    * encode. Flip-y (F7) honors inv_y grids. */
+  object Extent {
+    /** one tile: one time step × one tile window */
+    def window(timeValue: java.sql.Timestamp, tileX: Int, tileY: Int,
+               tileW: Int, tileH: Int): Extent =
+      Extent(Seq(timeValue), tileY * tileH, tileX * tileW, tileH, tileW)
+
+    /** a whole level: every step × the grid rounded up to whole tiles,
+      * so every cell any tile window of the level shows is inside it */
+    def level(steps: Seq[java.sql.Timestamp], grid: CubeGrid,
+              tile: Int): Extent =
+      Extent(steps, 0, 0, (grid.height + tile - 1) / tile * tile,
+        (grid.width + tile - 1) / tile * tile)
+  }
+
+  /** The Spark read of an [[Extent]] of `cube`: one job. A one-step
+    * extent filters its time step and window (P7), so the scan prunes;
+    * a level reads every row. Each partition scatters its rows into
+    * (cell index, value) arrays on the executor, and the driver writes
+    * them into a NaN-filled array in partition order, the order
+    * `collect` returns rows in, so a duplicated cell keeps the same
+    * last value. Rows outside the extent and null values are skipped:
+    * those cells stay NaN padding (F8 trim/pad semantics), as does a
+    * step with no rows. Each step is matched at its first position in
+    * `steps`. */
+  def sparkRead(cube: CubeFrame, variable: String, e: Extent): Array[Double] = {
+    require(e.cells <= Int.MaxValue, s"extent of ${e.cells} cells")
+    val (y0, x0, h, w) = (e.y0, e.x0, e.h, e.w)
+    val inWindow = col("x_idx") >= x0 && col("x_idx") < x0 + w &&
+      col("y_idx") >= y0 && col("y_idx") < y0 + h
+    val rows = e.steps match {
+      case Seq(t) => cube.df.filter(col("time") === lit(t) && inWindow)
+      case _ => cube.df
+    }
+    // steps sorted by their internal micros, each at its first position
+    val (stepUs, stepAt) = e.steps.map(DateTimeUtils.fromJavaTimestamp)
+      .zipWithIndex.reverse.toMap.toArray.sortBy(_._1).unzip
+    val parts = rows.select(col("time").cast("timestamp"),
+        col("y_idx").cast("int"), col("x_idx").cast("int"),
+        col(variable).cast("double"))
+      .queryExecution.toRdd.mapPartitions { it =>
+        val idx = new ArrayBuilder.ofInt
+        val vals = new ArrayBuilder.ofDouble
+        it.foreach { r =>
+          if (!r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2) &&
+              !r.isNullAt(3)) {
+            val s = java.util.Arrays.binarySearch(stepUs, r.getLong(0))
+            val y = r.getInt(1) - y0
+            val x = r.getInt(2) - x0
+            if (s >= 0 && y >= 0 && y < h && x >= 0 && x < w) {
+              idx += (stepAt(s) * h + y) * w + x
+              vals += r.getDouble(3)
+            }
+          }
+        }
+        Iterator.single((idx.result(), vals.result()))
+      }.collect()
+    val out = Array.fill(e.cells.toInt)(Double.NaN)
+    parts.foreach { case (idx, vals) =>
+      var i = 0
+      while (i < idx.length) { out(idx(i)) = vals(i); i += 1 }
+    }
+    out
+  }
+
+  /** One (h × w) window at [y0, y0 + h) × [x0, x0 + w) of step `step`
+    * out of a [[sparkRead]] of extent `e`, row-major; cells outside `e`
+    * are NaN. A new array: `read` is not written. */
+  def slice(read: Array[Double], e: Extent, step: Int, y0: Int, x0: Int,
+            h: Int, w: Int): Array[Double] = {
+    val out = Array.fill(h * w)(Double.NaN)
+    val xa = math.max(x0, e.x0)
+    val xb = math.min(x0 + w, e.x0 + e.w)
+    var y = math.max(y0, e.y0)
+    val yb = math.min(y0 + h, e.y0 + e.h)
+    while (xa < xb && y < yb) {
+      System.arraycopy(read, (step * e.h + y - e.y0) * e.w + xa - e.x0,
+        out, (y - y0) * w + xa - x0, xb - xa)
+      y += 1
+    }
+    out
+  }
+
+  /** Render one tile from a cube: the [[sparkRead]] of its
+    * [[Extent.window]], then colormap + PNG encode. Flip-y (F7) honors
+    * inv_y grids. */
   def renderTile(cube: CubeFrame, variable: String,
                  timeValue: java.sql.Timestamp,
                  tileX: Int, tileY: Int, tileW: Int, tileH: Int,
                  mapping: ColorMapping, flipY: Boolean = false): Array[Byte] =
-    renderWindow(sparkWindow(cube, variable, timeValue, tileX, tileY, tileW,
-      tileH), tileW, tileH, mapping, flipY)
+    renderWindow(sparkRead(cube, variable,
+      Extent.window(timeValue, tileX, tileY, tileW, tileH)), tileW, tileH,
+      mapping, flipY)
 
   /** PNG from a row-major value window in index order, whichever read
-    * produced it: a direct store window ([[graft.sources.DirectWindow]])
-    * or a [[sparkWindow]], memoized or not. Every tile goes through
-    * here, so the read arms are byte-identical for the same values.
+    * produced it: a direct store window ([[graft.sources.DirectWindow]]),
+    * a [[sparkRead]] window or a [[slice]] of a level read, memoized or
+    * not. Every tile goes through here, so the read arms are
+    * byte-identical for the same values.
     *
     * `window` is only read, never written: the server shares memoized
     * windows between requests, so the flip writes a copy and
@@ -179,8 +264,7 @@ object Render {
     * over the rendered RGBA pixels — the pyramid path for pre-rendered
     * imagery, vs the value-space aggregation of operators.Pyramid. */
   def downsample2x(pixels: Array[Int], width: Int, height: Int): Array[Int] = {
-    val src = new BufferedImage(width, height, BufferedImage.TYPE_INT_ARGB)
-    src.setRGB(0, 0, width, height, pixels, 0, width)
+    val src = argbImage(pixels, width, height)
     val w2 = (width + 1) / 2
     val h2 = (height + 1) / 2
     val dst = new BufferedImage(w2, h2, BufferedImage.TYPE_INT_ARGB)

@@ -1,6 +1,6 @@
 package graft.render
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 
 import graft.cube.CubeFrame

@@ -9,7 +9,6 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
-import graft.Q
 import graft.geo.Geo
 import graft.operators.{Places, TimeSeries}
 import graft.render.Render
@@ -81,13 +80,13 @@ class GraftServer(ctx: ServiceContext, port: Int = 0) {
     }
   }
 
-  /** Invalidate all cached tiles and the memoized Spark value windows
-    * behind them — must be called whenever the dataset registry changes
-    * (config hot reload), or stale tiles from the old data are served
-    * indefinitely. */
+  /** Invalidate all cached tiles and the memoized Spark reads (level
+    * stacks and value windows) behind them — must be called whenever
+    * the dataset registry changes (config hot reload), or stale tiles
+    * from the old data are served indefinitely. */
   def invalidateTiles(): Unit = {
     tileCache.clear()
-    graft.sources.StoreCache.dropFrameWindows()
+    graft.sources.StoreCache.dropFrameReads()
   }
 
   server.createContext("/", (ex: HttpExchange) => {
@@ -366,7 +365,7 @@ class GraftServer(ctx: ServiceContext, port: Int = 0) {
             withDataset(ex, ds)(d => tile(ex, d, v,
               q("tilematrix").toInt, q("tilecol").toInt,
               q("tilerow").toInt, q))
-          case other => throw new IllegalArgumentException(
+          case _ => throw new IllegalArgumentException(
             s"Value for \"request\" parameter must be " +
               "\"GetCapabilities\" or \"GetTile\"")
         }
@@ -461,11 +460,12 @@ class GraftServer(ctx: ServiceContext, port: Int = 0) {
   /** Tile request: PNG cache probe, keyed like the reference image
     * cache (controllers/tiles.py:57-61); on a miss, read → render →
     * send. The read is [[readWindow]]: a direct chunk or parquet window
-    * for a store-backed level, else the Spark read memoized as a value
-    * window (the reference caches its `NdarrayImage` value tile apart
-    * from the colour-mapped PNG), so a colour-range change re-renders
-    * without reading again. The render is [[Render.renderWindow]]
-    * (colour map + PNG) for every arm. Under `?debug=1` or
+    * for a store-backed level, else a memoized Spark read of the whole
+    * level or of the tile's window (the reference caches its
+    * `NdarrayImage` value tile apart from the colour-mapped PNG), so a
+    * colour-range change re-renders without reading again. The render
+    * is [[Render.renderWindow]] (colour map + PNG) for every arm. Under
+    * `?debug=1` or
     * `--traceperf` the stages are timed as `parse`, `read`, `render`
     * and `send`, and one line names the read arm. `?time=` selects the
     * NEAREST axis step (the reference's dimension indexers,
@@ -478,7 +478,7 @@ class GraftServer(ctx: ServiceContext, port: Int = 0) {
     * full-resolution data. */
   private def tile(ex: HttpExchange, d: RegisteredDataset, v: String,
                    z: Int, x: Int, y: Int,
-                   q: Map[String, String] = Map.empty): Unit = {
+                   q: Map[String, String]): Unit = {
     // per-tile timing under ?debug=1 (tiles.py:33-35: the query param
     // overrides the service-level flag in either direction)
     val trace = Perf.trace(
@@ -530,7 +530,7 @@ class GraftServer(ctx: ServiceContext, port: Int = 0) {
         val cube = levels(math.max(0, math.min(levels.length - 1,
           d.tileGrid.numLevels - 1 - z)))
         val (window, arm) =
-          trace.stage("read")(readWindow(cube, v, t, keyUs, x, y, extraSel))
+          trace.stage("read")(readWindow(d, cube, v, t, keyUs, x, y, extraSel))
         trace.info(s"<<< tile ${d.id}.$v/$z/$x/$y: read $arm")
         val png = trace.stage("render")(Render.renderWindow(window, 256, 256,
           m, flipY = cube.grid.latAscending))
@@ -548,20 +548,29 @@ class GraftServer(ctx: ServiceContext, port: Int = 0) {
     *    decode ~one row group), values identical to the Spark scan by
     *    construction (the reference's own tile path is an in-process
     *    array slice);
-    *  - `spark window hit` / `spark window load`: a level with no store
-    *    behind it (persisted, derived or transformed frames) reads
-    *    through [[Render.sparkWindow]], one Spark job, memoized in the
-    *    chunk LRU by [[graft.sources.StoreCache.frameWindow]] — a repeat
+    *  - `spark level load` / `spark level hit`: a level with no store
+    *    behind it (persisted, derived or transformed frames) whose every
+    *    time step, over the grid rounded up to whole tiles, fits
+    *    `StoreCache.directBudgetBytes` (the budget the time-series direct
+    *    arm uses too). One Spark job reads the whole level
+    *    ([[Render.Extent.level]]), memoized in the chunk LRU by
+    *    [[graft.sources.StoreCache.frameRead]]; every tile of it, at any
+    *    time step and colour range, is then a [[Render.slice]] with no
+    *    job. `T` is the registration's time axis (`d.timeCoords`);
+    *  - `spark window load` / `spark window hit`: such a level too large
+    *    for the budget reads one tile window per job
+    *    ([[Render.Extent.window]]), memoized the same way, so a repeat
     *    with another colour range (`vmin`/`vmax`/`cbar`) runs no job;
     *  - `spark scan`: a store-backed level whose direct read declines or
-    *    fails takes the same Spark read, not memoized (the store's own
+    *    fails takes the window read, not memoized (the store's own
     *    invalidation seam would not reach it).
     * The Spark reads filter one plane per extra dim, which pushes to the
-    * store scan as a chunk-plane prune. The returned window is shared:
-    * read it, never write it. */
-  private def readWindow(cube: graft.cube.CubeFrame, v: String,
-                         t: java.sql.Timestamp, keyUs: Long, x: Int, y: Int,
-                         extraSel: Seq[(String, Double, Int)])
+    * store scan as a chunk-plane prune; the plane is part of the memo
+    * key. At most one load per key runs at a time. The returned window
+    * is shared: read it, never write it. */
+  private def readWindow(d: RegisteredDataset, cube: graft.cube.CubeFrame,
+                         v: String, t: java.sql.Timestamp, keyUs: Long,
+                         x: Int, y: Int, extraSel: Seq[(String, Double, Int)])
       : (Array[Double], String) = {
     val direct = cube.storePath.flatMap { p =>
       try graft.sources.DirectWindow.read(p, v, keyUs, y * 256, x * 256,
@@ -572,15 +581,26 @@ class GraftServer(ctx: ServiceContext, port: Int = 0) {
         None
       }
     }
-    def scan(): Array[Double] =
-      Render.sparkWindow(planeFiltered(cube, extraSel), v, t, x, y, 256, 256)
+    val window = Render.Extent.window(t, x, y, 256, 256)
+    def read(e: Render.Extent): Array[Double] =
+      Render.sparkRead(planeFiltered(cube, extraSel), v, e)
+    def memo(e: Render.Extent): (Array[Double], Boolean) =
+      graft.sources.StoreCache.frameRead(cube.df, v, e,
+        extraSel.map { case (n, vv, _) => (n, vv) })(read(e))
     direct.map(_ -> "direct").getOrElse {
-      if (cube.storePath.isDefined) (scan(), "spark scan")
+      if (cube.storePath.isDefined) (read(window), "spark scan")
       else {
-        val (win, hit) = graft.sources.StoreCache.frameWindow(cube.df, v,
-          keyUs, y * 256, x * 256, 256, 256,
-          extraSel.map { case (n, vv, _) => (n, vv) })(scan())
-        (win, if (hit) "spark window hit" else "spark window load")
+        val level = Render.Extent.level(d.timeCoords, cube.grid, 256)
+        val step = d.timeCoords.indexOf(t)
+        if (step >= 0 &&
+            level.cells * 8 <= graft.sources.StoreCache.directBudgetBytes) {
+          val (stack, hit) = memo(level)
+          (Render.slice(stack, level, step, y * 256, x * 256, 256, 256),
+            if (hit) "spark level hit" else "spark level load")
+        } else {
+          val (win, hit) = memo(window)
+          (win, if (hit) "spark window hit" else "spark window load")
+        }
       }
     }
   }

@@ -626,11 +626,8 @@ object ArrowIpc {
       "compressed Arrow IPC body (RecordBatch.compression is set — " +
         "LZ4_FRAME/ZSTD): unsupported by this reader; write the " +
         "shards uncompressed")
-    val (nNodes, nodeP) = rb.vectorField(1).get
+    rb.vectorField(1).get // field nodes: lengths come from the offsets
     val (nBufs, bufP) = rb.vectorField(2).get
-    val nodes = (0 until nNodes).map { i =>
-      (rb.i64(nodeP + i * 16), rb.i64(nodeP + i * 16 + 8))
-    }
     val bufs = (0 until nBufs).map { i =>
       (rb.i64(bufP + i * 16).toInt, rb.i64(bufP + i * 16 + 8).toInt)
     }

@@ -144,7 +144,7 @@ private[graft] final class LocalBlobStore(root: String) extends BlobStore {
   * cluster credentials/endpoints apply), else the classpath default. */
 private[graft] final class HadoopBlobStore(root: String,
     extraConf: Map[String, String] = Map.empty) extends BlobStore {
-  import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+  import org.apache.hadoop.fs.{Path => HPath}
 
   /** the effective Hadoop configuration (session conf + per-store
     * overrides like fs.s3a.endpoint) — tests assert on this */

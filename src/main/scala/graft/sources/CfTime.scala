@@ -90,7 +90,7 @@ private[graft] object CfTime {
       (y - 1970L) * 365L + Cum365(mo - 1) + (d - 1L)
     def fromDays(days: Long): (Int, Int, Int) = {
       val y = Math.floorDiv(days, 365L)
-      var r = Math.floorMod(days, 365L).toInt
+      val r = Math.floorMod(days, 365L).toInt
       var mo = 11
       while (Cum365(mo) > r) mo -= 1
       ((1970L + y).toInt, mo + 1, r - Cum365(mo) + 1)
@@ -104,7 +104,7 @@ private[graft] object CfTime {
       (y - 1970L) * 366L + Cum366(mo - 1) + (d - 1L)
     def fromDays(days: Long): (Int, Int, Int) = {
       val y = Math.floorDiv(days, 366L)
-      var r = Math.floorMod(days, 366L).toInt
+      val r = Math.floorMod(days, 366L).toInt
       var mo = 11
       while (Cum366(mo) > r) mo -= 1
       ((1970L + y).toInt, mo + 1, r - Cum366(mo) + 1)

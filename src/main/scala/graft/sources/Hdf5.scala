@@ -354,7 +354,7 @@ object Hdf5 {
     val h = r.bytes(fheapAddr, 4 + 1 + 2 + 2 + 1 + 4 + 12 * 8 + 2 + 8 + 8 + 2 + 2 + 8 + 2 + 4)
     h.position(4)
     require((h.get() & 0xFF) == 0, "fractal heap version 0 expected")
-    val idLen = h.getShort() & 0xFFFF
+    h.getShort() // heap ID length: unused, read to advance the buffer
     val filterLen = h.getShort() & 0xFFFF
     require(filterLen == 0, "filtered fractal heaps unsupported")
     val heapFlags = h.get() & 0xFF
@@ -1402,8 +1402,6 @@ object Hdf5 {
       .collect().map(_.getTimestamp(0))
     val (nt, nh, nw) = (times.length, g.height, g.width)
     val tIdx = times.zipWithIndex.toMap
-    val cy = math.min(chunkY, nh)
-    val cx = math.min(chunkX, nw)
 
     val timeUs = times.map(t =>
       (t.getTime * 1000L + (t.getNanos / 1000) % 1000).toDouble)

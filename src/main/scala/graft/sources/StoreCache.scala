@@ -1,8 +1,12 @@
 package graft.sources
 
 import scala.collection.concurrent.TrieMap
+import scala.concurrent.{Await, Future, Promise}
+import scala.concurrent.duration.Duration
 
 import org.apache.spark.sql.DataFrame
+
+import graft.render.Render
 
 /** Serving-path caches for direct (no-Spark-job) store reads.
   *
@@ -21,8 +25,13 @@ import org.apache.spark.sql.DataFrame
   *     LRU under it caches compressed bytes, so before this cache a hot
   *     tile crossing several chunks paid decompress + mask-and-scale on
   *     every PNG-cache miss. The same LRU and byte budget hold the
-  *     parquet path's decoded tile windows and the value windows of
-  *     Spark tile reads ([[frameWindow]]).
+  *     parquet path's decoded tile windows and the Spark reads of
+  *     levels with no store behind them ([[frameRead]]): whole level
+  *     stacks, or single tile windows.
+  *
+  * [[directBudgetBytes]] is the one driver-side budget of a single
+  * request's read: the time-series direct arm and the whole-level
+  * Spark read both stay under it.
   *
   * Writers and config reloads call [[invalidate]]/[[clear]] (wired into
   * `ZarrStore.invalidateMeta` and `BlobStore.dropAll`), so a reload
@@ -38,6 +47,22 @@ private[graft] object StoreCache {
   private[graft] val chunkCapacityBytes: Long =
     sys.props.getOrElse("graft.chunkCache.mb", "256").toLong << 20
 
+  /** Decoded bytes one request may read on the driver: a quarter of the
+    * chunk LRU, so one read never evicts most of the tiles' working
+    * set. A time-series request whose chunks exceed it takes the Spark
+    * arm; a Spark-only level larger than it is read one tile window at
+    * a time instead of whole. A `var` only as a test seam, seen by
+    * every thread (the server's handler threads too). */
+  @volatile private[graft] var directBudgetBytes: Long = chunkCapacityBytes / 4
+
+  /** runs `body` with [[directBudgetBytes]] set to `bytes`, process-wide
+    * (tests reach the over-budget arms through it) */
+  private[graft] def withDirectBudget[T](bytes: Long)(body: => T): T = {
+    val before = directBudgetBytes
+    directBudgetBytes = bytes
+    try body finally directBudgetBytes = before
+  }
+
   private final case class ChunkKey(path: String, variable: String,
                                     idx: Seq[Int])
   /** decoded tile windows of the parquet serving path — the parquet
@@ -47,21 +72,23 @@ private[graft] object StoreCache {
                                      timeUs: Long, y0: Int, x0: Int,
                                      h: Int, w: Int,
                                      extra: Seq[(String, Double)])
-  /** value windows of the Spark tile read over a level with no store
-    * behind it, keyed by the level's unfiltered frame: `Dataset` keeps
-    * Object's identity `equals`/`hashCode`, and a registration's levels
-    * are fixed objects */
-  private final case class FrameWindowKey(df: DataFrame, variable: String,
-                                          timeUs: Long, y0: Int, x0: Int,
-                                          h: Int, w: Int,
-                                          extra: Seq[(String, Double)])
+  /** Spark reads of a level with no store behind it, keyed by the
+    * level's unfiltered frame: `Dataset` keeps Object's identity
+    * `equals`/`hashCode`, and a registration's levels are fixed
+    * objects */
+  private final case class FrameKey(df: DataFrame, variable: String,
+                                    extent: Render.Extent,
+                                    extra: Seq[(String, Double)])
   private val chunks =
     new graft.Lru[AnyRef, Array[Double]](chunkCapacityBytes, _.length * 8L)
+  /** the [[frameRead]] loads running now, one per key (entries live only
+    * while their load runs) */
+  private val frameLoads = TrieMap.empty[FrameKey, Future[Array[Double]]]
 
   private def keyPath(k: AnyRef): String = k match {
     case c: ChunkKey => c.path
     case w: WindowKey => w.path
-    case _: FrameWindowKey => null // no store behind it
+    case _: FrameKey => null // no store behind it
   }
 
   def ops(path: String): StoreOps =
@@ -102,26 +129,42 @@ private[graft] object StoreCache {
     chunks.get(key).orElse(load.map(chunks.put(key, _)))
   }
 
-  /** The Spark tile read of a level with no store behind it, memoized
-    * in the same LRU: `df` is the level's UNFILTERED frame (compared by
-    * reference), `extra` the resolved extra-dim plane, and `load` runs
-    * the read with its plane filter. Returns the window and whether it
-    * was cached. The window is shared read-only between requests. */
-  def frameWindow(df: DataFrame, variable: String,
-                  timeUs: Long, y0: Int, x0: Int, h: Int, w: Int,
-                  extra: Seq[(String, Double)])
-                 (load: => Array[Double]): (Array[Double], Boolean) = {
-    val key = FrameWindowKey(df, variable, timeUs, y0, x0, h, w, extra)
+  /** The Spark read of `extent` of a level with no store behind it,
+    * memoized in the same LRU: `df` is the level's UNFILTERED frame
+    * (compared by reference), `extra` the resolved extra-dim plane, and
+    * `load` runs the read with its plane filter. Returns the read and
+    * whether this call found it cached, or waited for another call's
+    * load of it: at most one load per key runs at a time (the
+    * reference opens a level once, under a lock, mldataset.py:87-109).
+    * The read is shared read-only between requests. */
+  def frameRead(df: DataFrame, variable: String, extent: Render.Extent,
+                extra: Seq[(String, Double)])
+               (load: => Array[Double]): (Array[Double], Boolean) = {
+    val key = FrameKey(df, variable, extent, extra)
     chunks.get(key) match {
-      case Some(win) => (win, true)
-      case None => (chunks.put(key, load), false)
+      case Some(read) => (read, true)
+      case None =>
+        val mine = Promise[Array[Double]]()
+        frameLoads.putIfAbsent(key, mine.future) match {
+          case Some(running) => (Await.result(running, Duration.Inf), true)
+          case None =>
+            try {
+              // a load that finished since the probe above is cached
+              val got = chunks.get(key)
+              val read = got.getOrElse(chunks.put(key, load))
+              mine.success(read)
+              (read, got.isDefined)
+            } catch {
+              case e: Throwable => mine.failure(e); throw e
+            } finally frameLoads.remove(key)
+        }
     }
   }
 
-  /** drops every memoized [[frameWindow]] (the server's tile
+  /** drops every memoized [[frameRead]] (the server's tile
     * invalidation: a reloaded registration reads its levels again) */
-  def dropFrameWindows(): Unit =
-    chunks.removeIf((k, _) => k.isInstanceOf[FrameWindowKey])
+  def dropFrameReads(): Unit =
+    chunks.removeIf((k, _) => k.isInstanceOf[FrameKey])
 
   private[graft] def cachedChunkBytes: Long = chunks.weight
 

@@ -429,7 +429,7 @@ object ZarrStore {
       case "f4" => while (i < n) { out(i) = buf.getFloat(i * 4).toDouble; i += 1 }
       case "i8" => while (i < n) { out(i) = buf.getLong(i * 8).toDouble; i += 1 }
       case "i4" => while (i < n) { out(i) = buf.getInt(i * 4).toDouble; i += 1 }
-      case other => throw new IllegalArgumentException(
+      case _ => throw new IllegalArgumentException(
         s"dtype ${meta.dtype} undecodable")
     }
     out
@@ -524,19 +524,29 @@ object ZarrStore {
       out
   }
 
-  private def inflate(data: Array[Byte], hint: Int): Array[Byte] = {
+  /** Inflates a zlib chunk of `size` decoded bytes straight into an
+    * array of that size. A stream that ends early is a truncated chunk
+    * (EOFException); one that holds more than `size` bytes is corrupt
+    * (IOException). */
+  private[sources] def inflate(data: Array[Byte], size: Int): Array[Byte] = {
     val inf = new java.util.zip.Inflater()
-    inf.setInput(data)
-    val out = new java.io.ByteArrayOutputStream(hint)
-    val buf = new Array[Byte](8192)
-    while (!inf.finished()) {
-      val k = inf.inflate(buf)
-      if (k == 0 && inf.needsInput())
-        throw new java.io.EOFException("truncated zlib chunk")
-      out.write(buf, 0, k)
-    }
-    inf.end()
-    out.toByteArray
+    try {
+      inf.setInput(data)
+      val out = new Array[Byte](size)
+      var n = 0
+      while (!inf.finished()) {
+        // once `size` bytes are out, only the stream's end may follow
+        val k = if (n < size) inf.inflate(out, n, size - n)
+                else inf.inflate(new Array[Byte](1))
+        if (n == size && k > 0)
+          throw new java.io.IOException(
+            s"zlib chunk inflates past its $size bytes")
+        if (k == 0 && inf.needsInput())
+          throw new java.io.EOFException("truncated zlib chunk")
+        n += k
+      }
+      if (n == size) out else java.util.Arrays.copyOf(out, n)
+    } finally inf.end()
   }
 
   private def deflate(data: Array[Byte]): Array[Byte] = {
@@ -724,7 +734,7 @@ object ZarrStore {
 
   private def writeArray(dir: Path, name: String, data: Array[Double],
                          shape: Seq[Int], chunks: Seq[Int],
-                         codec: String, dims: Seq[String] = Nil): Unit = {
+                         codec: String, dims: Seq[String]): Unit = {
     val sub = dir.resolve(name)
     Files.createDirectories(sub)
     Files.writeString(sub.resolve(".zarray"),

@@ -139,14 +139,25 @@ class RenderSpec extends SparkSpec {
       bos.toByteArray
     }
     val w = 256
-    val values = Array.tabulate(w * w)(i =>
-      if (i % 97 == 0) Double.NaN else (i % 1031).toDouble / 10)
-    val pixels = Render.mapColors(values, ColorMapping(0.0, 100.0,
-      graft.render.ColorMaps.paletteOrDefault("jet")))
-    val tile = new java.awt.image.BufferedImage(w, w,
-      java.awt.image.BufferedImage.TYPE_INT_ARGB)
-    tile.setRGB(0, 0, w, w, pixels, 0, w)
-    assert(Render.toPng(pixels, w, w).sameElements(viaImageIoWrite(tile)))
+    val jet = ColorMapping(0.0, 100.0,
+      graft.render.ColorMaps.paletteOrDefault("jet"))
+    // toPng copies pixels into the raster; the reference goes through
+    // setRGB and ImageIO.write
+    def samePng(values: Array[Double], what: String): Unit = {
+      val pixels = Render.mapColors(values, jet)
+      val tile = new java.awt.image.BufferedImage(w, w,
+        java.awt.image.BufferedImage.TYPE_INT_ARGB)
+      tile.setRGB(0, 0, w, w, pixels, 0, w)
+      assert(Render.toPng(pixels, w, w).sameElements(viaImageIoWrite(tile)),
+        what)
+    }
+    samePng(Array.tabulate(w * w)(i =>
+      if (i % 97 == 0) Double.NaN else (i % 1031).toDouble / 10), "pattern")
+    val rnd = new scala.util.Random(17)
+    samePng(Array.fill(w * w)(
+      if (rnd.nextInt(20) == 0) Double.NaN else rnd.nextDouble() * 120 - 10),
+      "random values")
+    samePng(Array.fill(w * w)(Double.NaN), "all NaN")
     val m = ColorMapping(-5.0, 42.0, Render.ViridisLike)
     assert(Render.legend(m, Some("chl_a")).sameElements(
       viaImageIoWrite(Render.legendImage(m, Some("chl_a"), 160, 320))))

@@ -9,6 +9,7 @@ import graft.cube.{Cube, CubeFrame, CubeGrid, CubeIngest}
 import graft.geo.Geo
 import graft.geo.Geo.{Point, Pt}
 import graft.operators.TimeSeries
+import graft.sources.StoreCache
 
 /** The direct arm of the time-series operators (chunk windows read and
   * aggregated on the calling thread) against the Spark arm over the
@@ -139,15 +140,14 @@ class TimeSeriesDirectSpec extends SparkSpec {
       Seq(bigBox, triangle))
     val (direct, directJobs) = jobsDuring(request(cube).collect())
     assert(directJobs.isEmpty)
-    assert(TimeSeries.directBudgetBytes ==
-      graft.sources.StoreCache.chunkCapacityBytes / 4)
+    assert(StoreCache.directBudgetBytes == StoreCache.chunkCapacityBytes / 4)
     // the windows touch 5 × 3 spatial chunks in each of 3 time chunks,
     // each 2 steps × 8 × 8 doubles: 45 KB decoded
-    val (fallback, jobs) = TimeSeries.withDirectBudget(45L * 1024 - 1)(
+    val (fallback, jobs) = StoreCache.withDirectBudget(45L * 1024 - 1)(
       jobsDuring(request(cube).collect()))
     assert(jobs.nonEmpty, "an over-budget request must take the Spark arm")
     assertSameRows(fallback, direct, "over budget")
-    val (_, exactJobs) = TimeSeries.withDirectBudget(45L * 1024)(
+    val (_, exactJobs) = StoreCache.withDirectBudget(45L * 1024)(
       jobsDuring(request(cube).collect()))
     assert(exactJobs.isEmpty, "a request at the budget stays direct")
   }

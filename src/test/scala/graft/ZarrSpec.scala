@@ -77,6 +77,49 @@ class ZarrSpec extends SparkSpec {
     assert(e.getMessage.contains("absent"))
   }
 
+  test("zlib chunks inflate to their exact size; truncated and over-long " +
+      "chunks fail loudly") {
+    val grid = CubeGrid(8, 4, 0.0, 0.0, 1.0, latAscending = true)
+    val cube = Cube.synthetic(spark, grid, numTimes = 2, Seq("v0"))
+    val dir = java.nio.file.Files.createTempDirectory("graft-zlib").toString
+    for (codec <- Seq("zlib", "null"))
+      ZarrStore.writeZarr(cube, s"$dir/$codec.zarr", chunkT = 1, chunkY = 4,
+        chunkX = 4, codec = codec)
+    val z = s"$dir/zlib.zarr"
+    def chunk(store: String, idx: Int*): Array[Double] =
+      ZarrStore.readChunk(store, "v0", ZarrStore.readArrayMeta(store, "v0"),
+        idx)
+    def rewrite(key: String)(f: Array[Byte] => Array[Byte]): Unit = {
+      val p = java.nio.file.Paths.get(s"$z/v0/$key")
+      java.nio.file.Files.write(p, f(java.nio.file.Files.readAllBytes(p)))
+    }
+    // corrupt before the first read, so no cache holds the good bytes
+    rewrite("0.0.0")(b => b.take(b.length - 6))
+    rewrite("0.0.1") { b =>
+      val inf = new java.util.zip.Inflater()
+      inf.setInput(b)
+      val raw = new Array[Byte](4 * 4 * 8)
+      assert(inf.inflate(raw) == raw.length && inf.finished())
+      inf.end()
+      val d = new java.util.zip.Deflater()
+      d.setInput(raw ++ Array[Byte](1, 2, 3)); d.finish()
+      val out = new Array[Byte](1024)
+      val n = d.deflate(out)
+      assert(d.finished())
+      d.end()
+      out.take(n)
+    }
+    intercept[java.io.EOFException](chunk(z, 0, 0, 0))
+    val e = intercept[java.io.IOException](chunk(z, 0, 0, 1))
+    assert(e.getMessage.contains("past its 128 bytes"), e.getMessage)
+    // intact chunks decode to the uncompressed store's values
+    for (idx <- Seq(Seq(1, 0, 0), Seq(1, 0, 1))) {
+      val (a, b) = (chunk(z, idx: _*), chunk(s"$dir/null.zarr", idx: _*))
+      assert(a.length == 16 && a.zip(b).forall { case (x, y) =>
+        java.lang.Double.compare(x, y) == 0 }, idx)
+    }
+  }
+
   test("zarr missing chunks read as fill value (NaN)") {
     val grid = CubeGrid(8, 4, 0.0, 0.0, 1.0, latAscending = true)
     val cube = Cube.synthetic(spark, grid, numTimes = 1, Seq("v0"),
