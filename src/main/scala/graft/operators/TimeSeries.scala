@@ -4,7 +4,8 @@ import java.sql.Timestamp
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.catalyst.util.{DateTimeUtils, LegacyDateFormats, TimestampFormatter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
@@ -26,8 +27,10 @@ import graft.sources.{DirectWindow, StoreCache, StoreWindow}
   *    in-process. For each time step on the store's axis within
   *    [start, end] it reads each window with [[StoreWindow.readWindow]]
   *    (the tiles' decoded-chunk LRU and CF decoding) and aggregates on
-  *    the calling thread. The result is a local relation: collecting
-  *    it runs no Spark job.
+  *    the calling thread. Its result is the rows themselves: the
+  *    `…Rows` calls return them with no Spark job, analysis or
+  *    optimisation, and the `DataFrame` calls wrap the same rows in a
+  *    local relation.
   *  - **Spark** — one DataFrame query per request:
   *
   *      scan(cube) → filter(bbox ∧ time∈[s,e]) → join(broadcast mask)
@@ -45,6 +48,12 @@ import graft.sources.{DirectWindow, StoreCache, StoreWindow}
   * `StoreCache.directBudgetBytes`. Every other input — parquet levels,
   * transformed or 4-D frames, huge polygons — takes the Spark arm, as
   * does any read that comes back empty.
+  *
+  * Each operator has a `DataFrame` form ([[point]], [[zonal]],
+  * [[zonalMany]]) and a rows form ([[pointRows]], [[zonalRows]],
+  * [[zonalManyRows]]) for callers that want the answer, not a plan (the
+  * server's `/ts` routes). Both take the same arm with the same rows;
+  * the rows form `collect`s the Spark arm.
   *
   * Summation-order contract: the direct arm adds values in the scan's
   * order, so its averages are bit-identical to the Spark arm's. The
@@ -93,20 +102,39 @@ object TimeSeries {
     df.select(col("date"), col("total_count"), col("valid_count"),
       col("average")).orderBy("date")
 
-  private def emptyResult(spark: SparkSession): DataFrame =
-    spark.createDataFrame(java.util.Collections.emptyList[Row](), Schema)
+  /** A request's answer from one of the two arms: the direct arm's
+    * rows (sorted as the Spark arm sorts; no rows when the geometry
+    * misses the cube) or the Spark arm's plan. */
+  private type Arm = Either[Seq[Row], DataFrame]
+
+  private def frame(cube: CubeFrame, schema: StructType, arm: Arm): DataFrame =
+    arm.fold(rows => cube.df.sparkSession.createDataFrame(rows.asJava, schema),
+      identity)
+
+  private def rows(arm: Arm): Seq[Row] =
+    arm.fold(identity, _.collect().toSeq)
 
   /** Point time series (time_series.py:122-145): nearest-cell lookup
     * resolved on the driver from grid arithmetic (P3), then an equality
     * filter that prunes partitions/row-groups. totalCount == 1. */
   def point(cube: CubeFrame, variable: String, lon: Double, lat: Double,
-            start: Option[Timestamp] = None, end: Option[Timestamp] = None): DataFrame = {
-    val spark = cube.df.sparkSession
+            start: Option[Timestamp] = None, end: Option[Timestamp] = None): DataFrame =
+    frame(cube, Schema, pointArm(cube, variable, lon, lat, start, end))
+
+  /** [[point]]'s rows, with no Spark job, analysis or optimisation on
+    * the direct arm */
+  def pointRows(cube: CubeFrame, variable: String, lon: Double, lat: Double,
+                start: Option[Timestamp] = None,
+                end: Option[Timestamp] = None): Seq[Row] =
+    rows(pointArm(cube, variable, lon, lat, start, end))
+
+  private def pointArm(cube: CubeFrame, variable: String, lon: Double,
+                       lat: Double, start: Option[Timestamp],
+                       end: Option[Timestamp]): Arm = {
     // bounds pre-check (time_series.py:126-128): outside bbox → []
-    val win = windowCells(cube, Point(Pt(lon, lat)))
-      .getOrElse(return emptyResult(spark))
+    val win = windowCells(cube, Point(Pt(lon, lat))).getOrElse(return Left(Nil))
     direct(cube, variable, Seq(0 -> win), start, end, exactMaskMean = false,
-      many = false).getOrElse {
+      many = false).toLeft {
         val v = Cube.nanToNull(col(variable))
         val base = cube.df
           .filter(col("x_idx") === win.x0 && col("y_idx") === win.y0)
@@ -128,15 +156,29 @@ object TimeSeries {
     */
   def zonal(cube: CubeFrame, variable: String, geometry: Geometry,
             start: Option[Timestamp] = None, end: Option[Timestamp] = None,
-            exactMaskMean: Boolean = false): DataFrame = {
+            exactMaskMean: Boolean = false): DataFrame =
+    frame(cube, Schema,
+      zonalArm(cube, variable, geometry, start, end, exactMaskMean))
+
+  /** [[zonal]]'s rows, with no Spark job, analysis or optimisation on
+    * the direct arm */
+  def zonalRows(cube: CubeFrame, variable: String, geometry: Geometry,
+                start: Option[Timestamp] = None,
+                end: Option[Timestamp] = None,
+                exactMaskMean: Boolean = false): Seq[Row] =
+    rows(zonalArm(cube, variable, geometry, start, end, exactMaskMean))
+
+  private def zonalArm(cube: CubeFrame, variable: String, geometry: Geometry,
+                       start: Option[Timestamp], end: Option[Timestamp],
+                       exactMaskMean: Boolean): Arm = {
     geometry match {
-      case Point(p) => return point(cube, variable, p.x, p.y, start, end)
+      case Point(p) => return pointArm(cube, variable, p.x, p.y, start, end)
       case _ =>
     }
     val spark = cube.df.sparkSession
-    val win = windowCells(cube, geometry).getOrElse(return emptyResult(spark))
+    val win = windowCells(cube, geometry).getOrElse(return Left(Nil))
     direct(cube, variable, Seq(0 -> win), start, end, exactMaskMean,
-      many = false).getOrElse {
+      many = false).toLeft {
         // the mask as a broadcast include-list (SURVEY J3)
         import spark.implicits._
         val maskCells = win.cells.collect { case (y, x, true) => (y, x) }
@@ -215,16 +257,30 @@ object TimeSeries {
     * one scan + one broadcast join, not a 1,000-branch union plan. */
   def zonalMany(cube: CubeFrame, variable: String, geometries: Seq[Geometry],
                 start: Option[Timestamp] = None, end: Option[Timestamp] = None,
-                exactMaskMean: Boolean = false): DataFrame = {
+                exactMaskMean: Boolean = false): DataFrame =
+    frame(cube, ManySchema,
+      zonalManyArm(cube, variable, geometries, start, end, exactMaskMean))
+
+  /** [[zonalMany]]'s rows, with no Spark job, analysis or optimisation
+    * on the direct arm */
+  def zonalManyRows(cube: CubeFrame, variable: String,
+                    geometries: Seq[Geometry],
+                    start: Option[Timestamp] = None,
+                    end: Option[Timestamp] = None,
+                    exactMaskMean: Boolean = false): Seq[Row] =
+    rows(zonalManyArm(cube, variable, geometries, start, end, exactMaskMean))
+
+  private def zonalManyArm(cube: CubeFrame, variable: String,
+                           geometries: Seq[Geometry],
+                           start: Option[Timestamp], end: Option[Timestamp],
+                           exactMaskMean: Boolean): Arm = {
     val spark = cube.df.sparkSession
     val windows = geometries.zipWithIndex.flatMap { case (geom, i) =>
       windowCells(cube, geom).map(i -> _)
     }
-    if (windows.isEmpty)
-      return spark.createDataFrame(java.util.Collections.emptyList[Row](),
-        ManySchema)
+    if (windows.isEmpty) return Left(Nil)
     direct(cube, variable, windows, start, end, exactMaskMean, many = true)
-      .getOrElse {
+      .toLeft {
         import spark.implicits._
         val cellRows = windows.flatMap { case (i, win) =>
           win.cells.map { case (y, x, m) => (i, y, x, m, win.total) }
@@ -261,14 +317,15 @@ object TimeSeries {
   // ---- the direct arm ------------------------------------------------
 
   /** The direct arm: one row per (geometry index, window) and time step
-    * in range, sorted as the Spark arm sorts, as a local relation (its
-    * collect runs no job) — or None when the request is not eligible
-    * (see the object doc). `many` adds the geometry_index column. */
+    * in range, sorted as the Spark arm sorts, each carrying its schema
+    * so fields read by name as in collected rows — or None when the
+    * request is not eligible (see the object doc). `many` adds the
+    * geometry_index column. */
   private def direct(cube: CubeFrame, variable: String,
                      windows: Seq[(Int, Window)],
                      start: Option[Timestamp], end: Option[Timestamp],
                      exactMaskMean: Boolean,
-                     many: Boolean): Option[DataFrame] = {
+                     many: Boolean): Option[Seq[Row]] = {
     val path = cube.storePath.filter(DirectWindow.isChunkedStore)
       .getOrElse(return None)
     if (cube.extraDims.nonEmpty || !cube.variables.contains(variable))
@@ -293,10 +350,10 @@ object TimeSeries {
     val bytes = spatialChunks.toLong * steps.map(_ / ct).distinct.size *
       ct * cy * cx * 8L
     if (bytes > StoreCache.directBudgetBytes) return None
-    val spark = cube.df.sparkSession
     val fmt = TimestampFormatter(Q.IsoPattern, DateTimeUtils.getZoneId(
-      spark.conf.get(SQLConf.SESSION_LOCAL_TIMEZONE.key)),
+      cube.df.sparkSession.conf.get(SQLConf.SESSION_LOCAL_TIMEZONE.key)),
       LegacyDateFormats.SIMPLE_DATE_FORMAT, isParsing = false)
+    val schema = if (many) ManySchema else Schema
     val rows = for {
       i <- steps
       date = fmt.format(axis(i))
@@ -305,11 +362,12 @@ object TimeSeries {
       val values = StoreWindow.readWindow(path, variable, axis(i),
         w.y0, w.x0, w.h, w.w).getOrElse(return None)
       val (valid, average) = aggregate(w, values, cy, cx, exactMaskMean)
-      (id, date, if (many) Row(date, w.total, valid, average, id)
-                 else Row(date, w.total, valid, average))
+      val fields: Array[Any] =
+        if (many) Array(date, w.total, valid, average, id)
+        else Array(date, w.total, valid, average)
+      (id, date, new GenericRowWithSchema(fields, schema): Row)
     }
-    Some(spark.createDataFrame(rows.sortBy(r => (r._1, r._2)).map(_._3).asJava,
-      if (many) ManySchema else Schema))
+    Some(rows.sortBy(r => (r._1, r._2)).map(_._3))
   }
 
   /** (valid_count, average) of one window at one time step, summed in

@@ -18,9 +18,14 @@ import java.util.Base64
   */
 object ColorMaps {
 
-  /** discrete = qualitative (ListedColormap): nearest stop, no blend */
+  /** discrete = qualitative (ListedColormap): nearest stop, no blend.
+    * Each palette is expanded once, at first use, and then shared. */
   final case class CMap(name: String, stops: Array[Int],
-                        discrete: Boolean = false)
+                        discrete: Boolean = false) {
+    private[render] lazy val opaque: Array[Int] = expand(this, alphaRamp = false)
+    private[render] lazy val alphaRamped: Array[Int] =
+      expand(this, alphaRamp = true)
+  }
 
   private def m(name: String, hex: String*): CMap =
     CMap(name, hex.map(h => Integer.parseInt(h, 16)).toArray)
@@ -134,17 +139,19 @@ object ColorMaps {
   val names: Seq[String] = categories.flatMap(_._3).map(_.name)
 
   /** 256-entry ARGB palette for `name` or `name_alpha`; None when
-    * unknown. */
+    * unknown. Every call for a name returns the same array, shared by
+    * all requests: read it, never write it. */
   def palette(name: String): Option[Array[Int]] = {
     val (base, alphaRamp) =
       if (name.endsWith("_alpha")) (name.dropRight(6), true) else (name, false)
-    byName.get(base).map(c => expand(c, alphaRamp))
+    byName.get(base).map(c => if (alphaRamp) c.alphaRamped else c.opaque)
   }
 
   /** palette or viridis when the name is unknown (the reference falls
-    * back to a default colormap rather than erroring a tile request) */
+    * back to a default colormap rather than erroring a tile request);
+    * shared and read-only like [[palette]] */
   def paletteOrDefault(name: String): Array[Int] =
-    palette(name).getOrElse(expand(byName("viridis"), alphaRamp = false))
+    palette(name).getOrElse(byName("viridis").opaque)
 
   /** Interpolate stops to 256 ARGB entries. Alpha ramp (cmaps.py:139-142):
     * a = min(1, 2·t), i.e. transparent→opaque across the first half. */
@@ -188,7 +195,7 @@ object ColorMaps {
     * (cmaps.py:186 appends `cmap_name`, never `new_name`) — so one
     * entry per map here; `_alpha` stays resolvable via [[palette]]. */
   private def entries(c: CMap): Seq[(String, String)] = Seq(
-    c.name -> gradientPngBase64(expand(c, alphaRamp = false)))
+    c.name -> gradientPngBase64(c.opaque))
 
   /** GET /colorbars — the reference's JSON shape: an array of
     * [category, description, [[name, pngBase64], ...]] records

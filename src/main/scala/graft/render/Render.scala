@@ -12,6 +12,7 @@ import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
 
 import graft.cube.{CubeFrame, CubeGrid}
+import graft.sources.NanArray
 
 /** Tile rendering: value grid → RGBA → PNG (reference F3/F4/K1:
   * the numba `map_colors` kernel at xcube_server/im/tiledimage.py:638-665
@@ -70,18 +71,24 @@ object Render {
 
   /** The fused mask+normalize+palette kernel (map_colors, F3): one pass,
     * no allocation beyond the output. NaN / fill / out-of-valid-range →
-    * fully transparent pixel. */
+    * fully transparent pixel. The fill and valid-range options are read
+    * into primitives before the loop, so no cell is boxed. */
   def mapColors(values: Array[Double], m: ColorMapping): Array[Int] = {
     val n = m.palette.length
     val scale = n / (m.vmax - m.vmin)
+    val hasFill = m.fillValue.isDefined
+    val fill = m.fillValue.getOrElse(0.0)
+    val hasMin = m.validMin.isDefined
+    val lo = m.validMin.getOrElse(0.0)
+    val hasMax = m.validMax.isDefined
+    val hi = m.validMax.getOrElse(0.0)
     val out = new Array[Int](values.length)
     var i = 0
     while (i < values.length) {
       val v = values(i)
       val invalid = java.lang.Double.isNaN(v) ||
         java.lang.Double.isInfinite(v) ||
-        m.fillValue.exists(_ == v) ||
-        m.validMin.exists(v < _) || m.validMax.exists(v > _)
+        (hasFill && v == fill) || (hasMin && v < lo) || (hasMax && v > hi)
       out(i) =
         if (invalid) 0x00000000
         else {
@@ -196,7 +203,7 @@ object Render {
         }
         Iterator.single((idx.result(), vals.result()))
       }.collect()
-    val out = Array.fill(e.cells.toInt)(Double.NaN)
+    val out = NanArray(e.cells.toInt)
     parts.foreach { case (idx, vals) =>
       var i = 0
       while (i < idx.length) { out(idx(i)) = vals(i); i += 1 }
@@ -209,7 +216,7 @@ object Render {
     * are NaN. A new array: `read` is not written. */
   def slice(read: Array[Double], e: Extent, step: Int, y0: Int, x0: Int,
             h: Int, w: Int): Array[Double] = {
-    val out = Array.fill(h * w)(Double.NaN)
+    val out = NanArray(h * w)
     val xa = math.max(x0, e.x0)
     val xb = math.min(x0 + w, e.x0 + e.w)
     var y = math.max(y0, e.y0)

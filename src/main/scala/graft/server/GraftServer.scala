@@ -157,11 +157,10 @@ class GraftServer(ctx: ServiceContext, port: Int = 0) {
               dateRange(q, d.cube.timeCalendar))
           }
           // the operator call is query work: its direct arm reads and
-          // aggregates before collect
+          // aggregates the rows with no plan; the Spark arm collects
           val rows = trace.stage("query")(
-            TimeSeries.point(cube, v, lon, lat, start, end).collect())
-          val body = trace.stage("encode")(
-            Json.obj("results" -> Json.arr(rows.map(tsRowJson))))
+            TimeSeries.pointRows(cube, v, lon, lat, start, end))
+          val body = trace.stage("encode")(GraftServer.tsJson(rows))
           trace.stage("send")(send(ex, 200, body, "application/json"))
           trace.done()
         }
@@ -183,9 +182,8 @@ class GraftServer(ctx: ServiceContext, port: Int = 0) {
             (cubeFor(d, q), geom, dateRange(q, d.cube.timeCalendar))
           }
           val rows = trace.stage("query")(
-            TimeSeries.zonal(cube, v, geom, start, end).collect())
-          val respBody = trace.stage("encode")(
-            Json.obj("results" -> Json.arr(rows.map(tsRowJson))))
+            TimeSeries.zonalRows(cube, v, geom, start, end))
+          val respBody = trace.stage("encode")(GraftServer.tsJson(rows))
           trace.stage("send")(send(ex, 200, respBody, "application/json"))
           trace.done()
         }
@@ -605,21 +603,6 @@ class GraftServer(ctx: ServiceContext, port: Int = 0) {
     }
   }
 
-  private def tsRowJson(r: org.apache.spark.sql.Row): String =
-    Json.obj(
-      "date" -> Json.str(r.getAs[String]("date")),
-      "result" -> Json.obj(
-        "totalCount" -> r.getAs[Long]("total_count").toString,
-        "validCount" -> r.getAs[Long]("valid_count").toString,
-        // finite averages keep Double.toString (golden formatting);
-        // NaN/Infinity (e.g. +Inf cube cells survive nanToNull) become
-        // null — a bare NaN token would invalidate the WHOLE response
-        "average" -> (if (r.isNullAt(r.fieldIndex("average"))) "null"
-                      else {
-                        val a = r.getAs[Double]("average")
-                        if (a.isNaN || a.isInfinite) "null" else a.toString
-                      })))
-
   /** Shared find-places response for GET (WKT/bbox) and POST (GeoJSON
     * body): None = no query geometry → the WHOLE collection, exactly
     * like __find_places returning the raw place group
@@ -665,10 +648,10 @@ class GraftServer(ctx: ServiceContext, port: Int = 0) {
 
   /** Fan-out response: results = array of per-geometry result arrays
     * (reference _get_time_series_for_geometries, time_series.py:208-219)
-    * — one [[TimeSeries.zonalMany]] call (its direct arm, or one Spark
-    * job over all geometries), grouped back by geometry_index on the
-    * driver. `geometries` parses the request body, inside the traced
-    * `parse` stage. */
+    * — one [[TimeSeries.zonalManyRows]] call (its direct arm, or one Spark
+    * job over all geometries), encoded by [[GraftServer.tsManyJson]].
+    * `geometries` parses the request body, inside the traced `parse`
+    * stage. */
   private def tsMany(ex: HttpExchange, d: RegisteredDataset, v: String,
                      route: String)
                     (geometries: => Seq[graft.geo.Geo.Geometry]): Unit = {
@@ -679,12 +662,10 @@ class GraftServer(ctx: ServiceContext, port: Int = 0) {
       (geoms, q, dateRange(q, d.cube.timeCalendar))
     }
     val rows = trace.stage("query")(
-      if (geoms.isEmpty) Map.empty[Int, Array[Row]]
-      else TimeSeries.zonalMany(cubeFor(d, q), v, geoms, start, end)
-        .collect().groupBy(_.getAs[Int]("geometry_index")))
-    val body = trace.stage("encode")(Json.obj("results" -> Json.arr(
-      geoms.indices.map(i => Json.arr(rows.getOrElse(i, Array.empty[Row])
-        .sortBy(_.getAs[String]("date")).map(tsRowJson))))))
+      if (geoms.isEmpty) Nil
+      else TimeSeries.zonalManyRows(cubeFor(d, q), v, geoms, start, end))
+    val body = trace.stage("encode")(
+      GraftServer.tsManyJson(geoms.length, rows))
     trace.stage("send")(send(ex, 200, body, "application/json"))
     trace.done()
   }
@@ -775,4 +756,35 @@ object GraftServer {
   /** request-body parser, shared: an `ObjectMapper` is thread-safe once
     * configured, and building one per request is not cheap */
   private val JsonMapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** The `/ts` point and geometry response body: one series, from the
+    * time-series operator's rows (reference time_series.py:133-145). */
+  private[graft] def tsJson(rows: Seq[Row]): String =
+    Json.obj("results" -> Json.arr(rows.map(tsRowJson)))
+
+  /** The `/ts` geometries and places response body: one series per
+    * geometry, in geometry order, from [[TimeSeries.zonalManyRows]]
+    * grouped back by geometry_index (reference
+    * _get_time_series_for_geometries, time_series.py:208-219). */
+  private[graft] def tsManyJson(geometries: Int, rows: Seq[Row]): String = {
+    val byGeometry = rows.groupBy(_.getAs[Int]("geometry_index"))
+    Json.obj("results" -> Json.arr((0 until geometries).map(i =>
+      Json.arr(byGeometry.getOrElse(i, Nil).sortBy(_.getAs[String]("date"))
+        .map(tsRowJson)))))
+  }
+
+  private def tsRowJson(r: Row): String =
+    Json.obj(
+      "date" -> Json.str(r.getAs[String]("date")),
+      "result" -> Json.obj(
+        "totalCount" -> r.getAs[Long]("total_count").toString,
+        "validCount" -> r.getAs[Long]("valid_count").toString,
+        // finite averages keep Double.toString (golden formatting);
+        // NaN/Infinity (e.g. +Inf cube cells survive nanToNull) become
+        // null — a bare NaN token would invalidate the WHOLE response
+        "average" -> (if (r.isNullAt(r.fieldIndex("average"))) "null"
+                      else {
+                        val a = r.getAs[Double]("average")
+                        if (a.isNaN || a.isInfinite) "null" else a.toString
+                      })))
 }

@@ -1420,7 +1420,7 @@ object Hdf5 {
     require(cellCount <= Int.MaxValue / 8,
       s"writeHdf5 builds in memory; $cellCount cells too large")
     val varData: Map[String, Array[Double]] = cube.variables.map { v =>
-      val arr = Array.fill(cellCount.toInt)(Double.NaN)
+      val arr = NanArray(cellCount.toInt)
       val extraCols = extras.map(ed => col(ed.name))
       cube.df.select(Seq(col("time"), col("y_idx"), col("x_idx"),
           col(v).cast("double")) ++ extraCols: _*).collect().foreach { r =>
@@ -1852,7 +1852,7 @@ object Hdf5 {
           eOffs(k) = rem % extraLens(k); rem /= extraLens(k); k -= 1
         }
         val t = rem
-        val slab = Array.fill(ctd * cyd * cxd)(Double.NaN)
+        val slab = NanArray(ctd * cyd * cxd)
         val tLen = math.min(ctd, nt - t * ctd)
         val yLen = math.min(cyd, nh - yc0 * cyd)
         val xLen = math.min(cxd, nw - xc0 * cxd)

@@ -367,7 +367,7 @@ object NetcdfStore {
     (0 until nw).foreach(x => out.putDouble(g.lonOfX(x)))
     // data: variables
     cube.variables.foreach { v =>
-      val arr = Array.fill(cellCount.toInt)(Double.NaN)
+      val arr = NanArray(cellCount.toInt)
       val extraCols = extras.map(ed => col(ed.name))
       cube.df.select(Seq(col("time"), col("y_idx"), col("x_idx"),
           col(v).cast("double")) ++ extraCols: _*).collect().foreach { r =>

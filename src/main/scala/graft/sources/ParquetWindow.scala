@@ -4,7 +4,7 @@ import scala.collection.concurrent.TrieMap
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.ParquetReadOptions
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.column.impl.ColumnReadStoreImpl
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
 import org.apache.parquet.filter2.compat.FilterCompat
@@ -186,7 +186,7 @@ private[graft] object ParquetWindow {
     readers.getOrLoad((file.toString, variable)) {
       val in = HadoopInputFile.fromPath(file, conf)
       ParquetFileReader.open(in, fm.footer,
-        ParquetReadOptions.builder().build(), in.newStream())
+        HadoopReadOptions.builder(conf).build(), in.newStream())
     }
 
   private[graft] def invalidate(path: String): Unit = {
@@ -225,7 +225,9 @@ private[graft] object ParquetWindow {
 
   // memoized per store: a fresh Configuration lazily re-parses the
   // Hadoop XML defaults on first use (~10-20 ms) — constructing one
-  // per tile request silently dominated the whole read
+  // per tile request silently dominated the whole read. Read options
+  // are built from it too: `ParquetReadOptions.builder()` makes its
+  // own fresh Configuration, so it would pay that parse per read.
   private val confs = TrieMap.empty[String, Configuration]
 
   private def hadoopConf(path: String): Configuration =
@@ -330,7 +332,7 @@ private[graft] object ParquetWindow {
     val conf = hadoopConf(path)
     val files = fileLists.getOrElseUpdate(dateDir, listParquet(dateDir, conf))
     if (files.isEmpty) return None
-    val out = Array.fill(h * w)(Double.NaN)
+    val out = NanArray(h * w)
     files.foreach(f =>
       readFile(path, f, conf, variable, timeUs, extra, y0, x0, h, w, out))
     Some(out)
@@ -400,10 +402,6 @@ private[graft] object ParquetWindow {
         }
       }
     }
-    val opts = ParquetReadOptions.builder()
-      .withRecordFilter(FilterCompat.get(pred))
-      .build() // stats/dictionary/column-index filters all default on
-    val in = HadoopInputFile.fromPath(file, conf)
     // DENSE fast path: when the layout marker guarantees the sort
     // order, the time is pinned by stats, and the file holds exactly
     // one full grid (rows == W×H with unique (t,y,x) ⇒ dense), the
@@ -430,6 +428,10 @@ private[graft] object ParquetWindow {
     if (dense && readFileDense(file, conf, fm, sm.get, variable,
         planeBase.get, y0, x0, h, w, out))
       return
+    val opts = HadoopReadOptions.builder(conf)
+      .withRecordFilter(FilterCompat.get(pred))
+      .build() // stats/dictionary/column-index filters all default on
+    val in = HadoopInputFile.fromPath(file, conf)
     // cached footer: no per-request footer IO/parse
     val r = ParquetFileReader.open(in, fm.footer, opts, in.newStream())
     try {

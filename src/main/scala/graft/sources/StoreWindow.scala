@@ -43,7 +43,7 @@ private[graft] object StoreWindow {
     val ct = meta.chunks(0)
     val cy = meta.chunks(rank - 2)
     val cx = meta.chunks(rank - 1)
-    val out = Array.fill(h * w)(Double.NaN)
+    val out = NanArray(h * w)
     val tc = tIdx / ct
     val tt = tIdx % ct
     // extra dims: one plane per request — chunk index + local offset

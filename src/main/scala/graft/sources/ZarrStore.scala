@@ -609,7 +609,7 @@ object ZarrStore {
     require(cellCount <= Int.MaxValue / 8,
       s"writeZarr builds in memory; $cellCount cells too large")
     cube.variables.foreach { v =>
-      val arr = Array.fill(cellCount.toInt)(Double.NaN)
+      val arr = NanArray(cellCount.toInt)
       val extraCols = extras.map(ed => col(ed.name))
       cube.df.select(Seq(col("time"), col("y_idx"), col("x_idx"),
           col(v).cast("double")) ++ extraCols: _*).collect().foreach { r =>
@@ -859,7 +859,7 @@ object ZarrStore {
       Seq(math.min(chunkY, nh), math.min(chunkX, nw))
     val nChunks = shape.zip(chunks).map { case (s, c) => (s + c - 1) / c }
     cube.variables.foreach { v =>
-      val arr = Array.fill(cellCount.toInt)(Double.NaN)
+      val arr = NanArray(cellCount.toInt)
       val extraCols = extras.map(ed => col(ed.name))
       cube.df.select(Seq(col("time"), col("y_idx"), col("x_idx"),
           col(v).cast("double")) ++ extraCols: _*).collect().foreach { r =>

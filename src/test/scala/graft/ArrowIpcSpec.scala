@@ -52,8 +52,6 @@ class ArrowIpcSpec extends SparkSpec {
 
   test("writer round-trips through its own reader, multi-partition, " +
       "with nulls and empty lists") {
-    val s = spark
-    import s.implicits._
     val schema = StructType(Seq(
       StructField("id", LongType, nullable = true),
       StructField("score", DoubleType, nullable = true),

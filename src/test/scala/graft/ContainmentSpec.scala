@@ -2,8 +2,6 @@ package graft
 
 import scala.util.Random
 
-import org.apache.spark.sql.functions._
-
 import graft.pipeline.Dedup
 
 /** Properties of the asymmetric containment join: completeness and
@@ -49,7 +47,7 @@ class ContainmentSpec extends SparkSpec {
     // base docs + planted cases: exact quote inside a longer doc,
     // partial overlap near the threshold, and unrelated noise
     val base = (0L until 30L).map(i => (i, doc(8 + rnd.nextInt(20))))
-    val planted = base.take(8).zipWithIndex.map { case ((id, t), k) =>
+    val planted = base.take(8).zipWithIndex.map { case ((_, t), k) =>
       (100L + k, s"${doc(3 + k)} $t ${doc(2)}") // t quoted wholesale
     }
     val corpus = base ++ planted

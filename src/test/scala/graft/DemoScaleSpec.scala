@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.cube.{Cube, CubeGrid}
 import graft.geo.Geo
 import graft.operators.TimeSeries

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.operators.ExactPercentile
 
 /** Exercises the iterative-narrowing percentile operator on the

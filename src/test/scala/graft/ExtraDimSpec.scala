@@ -7,7 +7,7 @@ import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.functions._
 
-import graft.cube.{Cube, CubeFrame, CubeGrid, CubeIngest, ExtraDim}
+import graft.cube.{CubeIngest, ExtraDim}
 import graft.server.{GraftServer, RegisteredDataset, ServiceContext}
 
 /** Extra non-spatial dimensions (reference P5 full parity: xcube serves

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.scalacheck.{Gen, Prop}
+import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
 /** Properties of the FastSS deletion-neighborhood fuzzy join

@@ -685,7 +685,6 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("multimodal: binary plumbing + stub features, batched") {
-    import spark.implicits._
     val media = Multimodal.asMedia(
       docs().withColumn("payload", col("text").cast("binary")),
       "doc_id", "payload", kind = "text")

@@ -19,6 +19,54 @@ class RenderSpec extends SparkSpec {
     assert((px(1) & 0xff) == 128)                   // mid-gray at half
   }
 
+  test("map_colors: the fill and valid-range checks equal the Option " +
+      "predicate pixel for pixel, each set and none set") {
+    // the kernel as it reads with Option.exists per cell
+    def reference(values: Array[Double], m: ColorMapping): Array[Int] = {
+      val n = m.palette.length
+      val scale = n / (m.vmax - m.vmin)
+      values.map { v =>
+        val invalid = v.isNaN || v.isInfinite ||
+          m.fillValue.exists(_ == v) ||
+          m.validMin.exists(v < _) || m.validMax.exists(v > _)
+        if (invalid) 0
+        else {
+          val idx0 = ((v - m.vmin) * scale).toInt
+          m.palette(if (idx0 < 0) 0 else if (idx0 >= n) n - 1 else idx0)
+        }
+      }
+    }
+    val (vmin, vmax, fill, lo, hi) = (-2.0, 8.0, 3.0, -1.0, 6.0)
+    def around(v: Double) = Seq(Math.nextDown(v), v, Math.nextUp(v))
+    val values = (Seq(Double.NaN, Double.PositiveInfinity,
+      Double.NegativeInfinity, -0.0, 0.0, Double.MaxValue, -Double.MaxValue,
+      Double.MinPositiveValue) ++
+      Seq(fill, lo, hi, vmin, vmax).flatMap(around)).toArray
+    val pal = graft.render.ColorMaps.paletteOrDefault("viridis")
+    val mappings = Seq(
+      ColorMapping(vmin, vmax, pal),
+      ColorMapping(vmin, vmax, pal, fillValue = Some(fill)),
+      ColorMapping(vmin, vmax, pal, validMin = Some(lo)),
+      ColorMapping(vmin, vmax, pal, validMax = Some(hi)),
+      ColorMapping(vmin, vmax, pal, Some(fill), Some(lo), Some(hi)),
+      // signed zeros compare equal; a NaN fill matches nothing
+      ColorMapping(vmin, vmax, pal, Some(-0.0), Some(0.0), Some(-0.0)),
+      ColorMapping(vmin, vmax, pal, fillValue = Some(Double.NaN)))
+    for (m <- mappings) {
+      val px = Render.mapColors(values, m)
+      val ref = reference(values, m)
+      for (i <- values.indices)
+        assert(px(i) == ref(i), s"${values(i)} under $m")
+    }
+    // the inputs reach both sides of every check
+    val all = Render.mapColors(values, mappings(4))
+    def at(v: Double) = all(values.indexOf(v))
+    assert(at(fill) == 0 && at(Math.nextUp(fill)) != 0)
+    assert(at(lo) != 0 && at(Math.nextDown(lo)) == 0)
+    assert(at(hi) != 0 && at(Math.nextUp(hi)) == 0)
+    assert(Render.mapColors(Array(fill, lo, hi), mappings.head).forall(_ != 0))
+  }
+
   test("alpha-ramp palette derivation (cmaps.py:133-162)") {
     val p = Render.gradientPalette(256, (0, 0, 0), (255, 255, 255),
       alphaRamp = true)

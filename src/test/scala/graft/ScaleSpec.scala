@@ -1,7 +1,5 @@
 package graft
 
-import java.sql.Timestamp
-
 import org.apache.spark.sql.functions._
 
 import graft.cube.{Cube, CubeGrid, CubeIngest}
@@ -78,7 +76,6 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("bucketed tables join without a shuffle exchange") {
-    import spark.implicits._
     val n = 10000
     spark.range(n).select(col("id").as("k"), (col("id") % 97).as("v1"))
       .write.mode("overwrite").bucketBy(8, "k").sortBy("k")

@@ -2,9 +2,8 @@ package graft
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
-import java.sql.Timestamp
 
-import graft.cube.{Cube, CubeFrame, CubeGrid, CubeIngest}
+import graft.cube.{Cube, CubeGrid, CubeIngest}
 import graft.model.ServiceConfig
 import graft.server._
 

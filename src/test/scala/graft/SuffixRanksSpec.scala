@@ -101,7 +101,7 @@ class SuffixRanksSpec extends SparkSpec {
       val toks = docs.map { case (id, t) => id -> t.split(" ", -1) }
       val all = for ((id, a) <- toks; p <- a.indices) yield (id, a, p)
       val brute = toks.map { case (id, a) =>
-        var best = new Array[Long](a.length)
+        val best = new Array[Long](a.length)
         for (p <- a.indices; (jd, b, q) <- all
              if jd != id || q != p) {
           var l = 0

@@ -1,14 +1,21 @@
 package graft
 
+import java.net.URI
+import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.sql.Timestamp
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.graft.ListenerBus
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
-import graft.cube.{Cube, CubeFrame, CubeGrid, CubeIngest}
+import graft.cube.{Cube, CubeFrame, CubeGrid, CubeIngest, ExtraDim}
 import graft.geo.Geo
 import graft.geo.Geo.{Point, Pt}
 import graft.operators.TimeSeries
+import graft.server.{GraftServer, RegisteredDataset, ServiceContext}
 import graft.sources.StoreCache
 
 /** The direct arm of the time-series operators (chunk windows read and
@@ -150,5 +157,116 @@ class TimeSeriesDirectSpec extends SparkSpec {
     val (_, exactJobs) = StoreCache.withDirectBudget(45L * 1024)(
       jobsDuring(request(cube).collect()))
     assert(exactJobs.isEmpty, "a request at the budget stays direct")
+  }
+
+  test("/ts routes on a zarr store encode the direct rows: no job, no " +
+      "query execution, the bytes of the DataFrame's collect") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-tsd-srv")
+    CubeIngest.writeCube(fixture(latAscending = false), s"$dir/c",
+      tileSize = 8)
+    // a 4-D zarr store: every request selects one depth plane
+    val base = fixture(latAscending = false)
+    val deep = base.copy(
+      df = base.df.crossJoin(spark.range(2).select(
+          (col("id") * 40.0 + 10.0).as("depth")))
+        .withColumn("v0", col("v0") + col("depth")),
+      extraDims = Seq(ExtraDim("depth", Seq(10.0, 50.0), "m")))
+    graft.sources.ZarrStore.writeZarr(deep, s"$dir/d.zarr", chunkT = 2,
+      chunkY = 8, chunkX = 8)
+    val ctx = new ServiceContext(spark)
+    ctx.register(RegisteredDataset("zarr", "zarr", zarrCube(), None))
+    ctx.register(RegisteredDataset("pq", "parquet levels",
+      CubeIngest.open(spark, s"$dir/c"), None))
+    ctx.register(RegisteredDataset("deep", "4-D zarr",
+      CubeIngest.open(spark, s"$dir/d.zarr"), None))
+    def cube(id: String): CubeFrame = ctx.dataset(id).get.cube
+    assert(cube("pq").storePath.isDefined && cube("deep").extraDims.nonEmpty)
+
+    val polygon = """{"type":"Polygon","coordinates":""" +
+      "[[[12,42],[27,44],[15,51],[12,42]]]}"
+    val geometries = Seq(polygon,
+      """{"type":"Polygon","coordinates":""" +
+        "[[[11.2,41.3],[19.7,41.3],[19.7,50.6],[11.2,50.6],[11.2,41.3]]]}",
+      """{"type":"Point","coordinates":[13.3,47.6]}""",
+      """{"type":"Polygon","coordinates":[[[50,0],[60,0],[60,10],[50,0]]]}""")
+    val collection = geometries.mkString(
+      """{"type":"GeometryCollection","geometries":[""", ",", "]}")
+    val features = geometries.map(g =>
+      s"""{"type":"Feature","properties":{},"geometry":$g}""")
+      .mkString("""{"type":"FeatureCollection","features":[""", ",", "]}")
+    // (route, body, the same request through the DataFrame API, the
+    // response body built from that frame's collect)
+    def requests(id: String, c: CubeFrame, params: Seq[String])
+        : Seq[(String, Option[String], DataFrame, Seq[Row] => String)] = {
+      def url(route: String, ps: Seq[String]) =
+        if (ps.isEmpty) s"/ts/$id/v0/$route"
+        else ps.mkString(s"/ts/$id/v0/$route?", "&", "")
+      val many = (rows: Seq[Row]) =>
+        GraftServer.tsManyJson(geometries.length, rows)
+      Seq(
+        (url("point", Seq("lon=13.3", "lat=47.6") ++ params), None,
+          TimeSeries.point(c, "v0", 13.3, 47.6), GraftServer.tsJson _),
+        (url("geometry", params), Some(polygon),
+          TimeSeries.zonal(c, "v0", Geo.parseGeoJson(polygon)),
+          GraftServer.tsJson _),
+        (url("geometries", params), Some(collection),
+          TimeSeries.zonalMany(c, "v0", geometries.map(Geo.parseGeoJson)),
+          many),
+        (url("places", params), Some(features),
+          TimeSeries.zonalMany(c, "v0", geometries.map(Geo.parseGeoJson)),
+          many))
+    }
+
+    val executions = new AtomicInteger
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        executions.incrementAndGet()
+      override def onFailure(f: String, qe: QueryExecution,
+                             e: Exception): Unit =
+        executions.incrementAndGet()
+    }
+    val srv = new GraftServer(ctx).start()
+    spark.listenerManager.register(listener)
+    try {
+      val client = HttpClient.newHttpClient()
+      def call(route: String, body: Option[String]): String = {
+        val req = HttpRequest.newBuilder(URI.create(srv.address + route))
+        val r = client.send(body.map(b =>
+            req.POST(HttpRequest.BodyPublishers.ofString(b))).getOrElse(req)
+            .build(), HttpResponse.BodyHandlers.ofString())
+        assert(r.statusCode() == 200, s"$route: ${r.body()}")
+        r.body()
+      }
+      // (expected body, served body, jobs, query executions) per route
+      def serve(id: String, c: CubeFrame, params: Seq[String] = Nil) =
+        requests(id, c, params).map { case (route, body, df, encode) =>
+          val expected = encode(df.collect().toSeq)
+          ListenerBus.drain(spark.sparkContext)
+          executions.set(0)
+          val (served, jobs) = jobsDuring(call(route, body))
+          (route, expected, served, jobs.size, executions.get)
+        }
+
+      for ((route, expected, served, jobs, runs) <- serve("zarr", cube("zarr"))) {
+        assert(jobs == 0, s"$route ran $jobs job(s)")
+        assert(runs == 0, s"$route ran $runs query execution(s)")
+        assert(served == expected, route)
+        assert(served.contains("\"totalCount\""), s"$route: $served")
+      }
+      // a parquet level and a plane-filtered 4-D frame take the Spark
+      // arm, which collects its plan (the listener sees it)
+      val plane = cube("deep").copy(
+        df = cube("deep").df.filter(col("depth") === 50.0), storePath = None)
+      for ((route, expected, served, jobs, runs) <-
+           serve("pq", cube("pq")) ++ serve("deep", plane, Seq("depth=50"))) {
+        assert(jobs > 0, s"$route ran no job")
+        assert(runs > 0, s"$route ran no query execution")
+        assert(served == expected, route)
+        assert(served.contains("\"totalCount\""), s"$route: $served")
+      }
+    } finally {
+      spark.listenerManager.unregister(listener)
+      srv.stop()
+    }
   }
 }

@@ -3,15 +3,11 @@ package graft
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.{TopK, TopKBuffer}
+import graft.functions.TopKBuffer
 
 /** Grouped top-k aggregate: buffer algebra, window-form equivalence,
   * and the partial-aggregate plan shape. */
 class TopKSpec extends SparkSpec {
-
-  private def brute(k: Int, pairs: Seq[(Long, Long)]): Seq[(Long, Long)] =
-    pairs.distinct.sortBy { case (v, id) => (-v, id) }.take(k)
-    // note: reduce() does not dedup — duplicates are distinct rows
 
   test("reduce keeps the buffer best-first and bounded") {
     val pairs = Seq((5L, 1L), (7L, 2L), (5L, 0L), (9L, 9L), (9L, 3L),

@@ -1,7 +1,7 @@
 package graft
 
 import java.io.ByteArrayOutputStream
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 import java.util.zip.GZIPOutputStream
 
 import org.apache.spark.sql.functions._
