@@ -5,9 +5,9 @@ import java.lang.management.ManagementFactory
 /** Benchmark main (driver contract): runs every registered query on
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line with per-query seconds.
   *
-  * Queries are forced through the `noop` sink — `count()` would let
-  * Catalyst prune away projected columns and skip most of the work, so
-  * noop-writing the full result is the honest measurement.
+  * Queries run through [[Measure]]: the `noop` sink, per-run
+  * housekeeping outside the timed region, and the Spark job count of
+  * each run.
   *
   * Each query runs SPARK_GRAFT_BENCH_RUNS times (default 3) in one JVM
   * and the recorded figure is the per-query MIN: the build host has
@@ -21,7 +21,14 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt.max(1)
+    val runs = Measure.runs("SPARK_GRAFT_BENCH_RUNS", 3)
+    // local iteration: SPARK_GRAFT_BENCH_ONLY=q1,q2 times just those,
+    // any registered query, including those the full bench leaves out
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+      .getOrElse(Set.empty[String])
+    val unknown = only -- SparkEntry.specs.map(_.name)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
 
     // LOAD GATE (not just a flag): three consecutive driver records
     // (r6-r8) were taken under pre-existing external load and merely
@@ -35,34 +42,23 @@ object Bench {
     // ten minutes of waiting is cheaper than a round of forensics
     val gateMaxWaitSec =
       sys.env.getOrElse("SPARK_GRAFT_LOAD_GATE_WAIT_SEC", "600").toInt
-    val osBean = ManagementFactory.getOperatingSystemMXBean
-    val gateDeadline = System.nanoTime() + gateMaxWaitSec * 1000000000L
+    val os = ManagementFactory.getOperatingSystemMXBean
+    def loadAvg: Double = os.getSystemLoadAverage
     var waitedSec = 0
-    while (osBean.getSystemLoadAverage > gate &&
-        System.nanoTime() < gateDeadline) {
+    while (loadAvg > gate && waitedSec < gateMaxWaitSec) {
       System.err.println(f"[bench] load gate: load_avg=" +
-        f"${osBean.getSystemLoadAverage}%.2f > $gate%.1f, waiting " +
+        f"$loadAvg%.2f > $gate%.1f, waiting " +
         s"(${waitedSec}s/${gateMaxWaitSec}s)")
       Thread.sleep(10000); waitedSec += 10
     }
 
     val spark = Session(cpus)
 
-    val os = ManagementFactory.getOperatingSystemMXBean
-    def loadAvg: Double = os.getSystemLoadAverage
-
     // pre-existing load is sampled BEFORE the warm-up: the warm-up
     // itself runs on all cores and pushes the 1-min average past the
     // flag threshold even on an idle host (observed 1.3 → 2.0)
     val loadStart = loadAvg
-
-    // session warm-up (JVM/codegen/FS metadata), not counted per-query
-    spark.range(1000000L).selectExpr("sum(id)").collect()
-    Tables.names.foreach(n => Tables.table(spark, sfDir, n).schema)
-    // local iteration: SPARK_GRAFT_BENCH_ONLY=q1,q2 times just those
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty[String])
+    Measure.warmUp(spark, sfDir)
     // mid-run load samples (taken between queries, never inside a
     // timed run): load_avg_start only proves the run STARTED quiet —
     // a burst landing mid-run previously self-reported only through
@@ -73,27 +69,13 @@ object Bench {
     // 32 threads, so only the EXCESS over the quietest sitting's
     // value means anything — same calibration as load_avg_end.
     var loadMidMax = 0.0
+    // a query counts as failed only if every attempt failed
     val results = SparkEntry.specs
-      .filter(q => q.bench && (only.isEmpty || only(q.name))).map { q =>
+      .filter(q => if (only.isEmpty) q.bench else only(q.name)).map { q =>
       loadMidMax = math.max(loadMidMax, loadAvg)
-      val times = (1 to runs).flatMap { _ =>
-        // drop persisted intermediates from prior runs and let the
-        // ContextCleaner reap dead broadcasts (it is GC-triggered):
-        // leftover blocks inflate GC pressure and skew later measurements
-        spark.catalog.clearCache()
-        System.gc()
-        val t0 = System.nanoTime()
-        try {
-          q.run(spark, sfDir).write.mode("overwrite").format("noop").save()
-          Some((System.nanoTime() - t0) / 1e9)
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}")
-          None
-        }
-      }
-      // a query counts as failed only if every attempt failed
-      (q.name, times, times.nonEmpty)
+      Measure.series(spark, q, sfDir, runs)
     }
+    val ok = results.filter(_.ok)
     val loadEnd = loadAvg
     // r17 postmortem: the driver archives only a BOUNDED TAIL of stdout,
     // and the 235-query full line exceeded it — PERF_r17 parsed no
@@ -105,33 +87,28 @@ object Bench {
       val r = BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP)
       r.bigDecimal.toPlainString
     }
+    def obj(rows: Seq[(String, Any)]): String =
+      rows.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     // failed queries report -1 and are excluded from total, so the one
     // JSON line can't silently pass a failure off as a timing
-    val qs = results.map { case (k, ts, ok) =>
-        "\"" + k + "\":" + (if (ok) fmt(ts.min) else "-1") }
-      .mkString("{", ",", "}")
-    val means = results.collect { case (k, ts, true) =>
-        "\"" + k + "\":" + ts.sum / ts.size }
-      .mkString("{", ",", "}")
+    def mins(f: Double => String): Seq[(String, String)] =
+      results.map(s => s.name -> (if (s.ok) f(s.min) else "-1"))
+    val minRows = mins(fmt)
+    val means = obj(ok.map(s => s.name -> s.mean))
     // medians audit the spread the min hides: a min that's far under
     // its median marks a run where external load landed on the others
-    def median(ts: Seq[Double]): Double = {
-      val s = ts.sorted
-      if (s.size % 2 == 1) s(s.size / 2)
-      else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
-    }
-    val medians = results.collect { case (k, ts, true) =>
-        "\"" + k + "\":" + median(ts) }
-      .mkString("{", ",", "}")
-    val failed = results.filter(!_._3).map("\"" + _._1 + "\"")
+    val medians = obj(ok.map(s => s.name -> s.median))
+    // Spark jobs of each query's last run (the warm steady state): jobs,
+    // not data, dominate the sf0.1 bench
+    val jobs = obj(ok.map(s => s.name -> s.jobs))
+    val failed = results.filter(!_.ok).map("\"" + _.name + "\"")
       .mkString("[", ",", "]")
     // per-query successful-attempt counts: a query that failed on SOME
     // runs but not all would otherwise read as a clean timing with no
     // trace of the flake in the auditable record
-    val attempts = results.collect { case (k, ts, _) if ts.size < runs =>
-        "\"" + k + "\":" + ts.size }
-      .mkString("{", ",", "}")
-    val total = results.filter(_._3).map(_._2.min).sum
+    val attempts = obj(results.filter(_.runs.size < runs)
+      .map(s => s.name -> s.runs.size))
+    val total = ok.map(_.min).sum
     // flag records taken under external load (BENCH_r05's driver record
     // looked like a 5× regression and was measurement: host load rose
     // 2.3→6.5 during the run) — the flag travels with the record so a
@@ -149,14 +126,12 @@ object Bench {
     // the 5 slowest queries with min AND median: a polluted record
     // self-diagnoses (median >> min, or a known-fast query in the top 5)
     // even when only the short summary line survives a tail capture
-    val slowest = results.filter(_._3).sortBy(-_._2.min).take(5)
-      .map { case (k, ts, _) =>
-        "\"" + k + "\":{\"min\":" + ts.min + ",\"median\":" + median(ts) + "}" }
-      .mkString("{", ",", "}")
+    val slowest = obj(ok.sortBy(-_.min).take(5).map(s =>
+      s.name -> ("{\"min\":" + s.min + ",\"median\":" + s.median + "}")))
     // The contract line: total + complete per-query map. (means/medians
     // moved to the file artifact in r18 — they tripled this line to
     // ~22 KB, which is what overflowed the driver's tail capture.)
-    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"runs":$runs,"attempts":$attempts,"load_avg_start":$loadStart,"load_avg_end":$loadEnd,"load_avg_mid_max":$loadMidMax,"load_flagged":$loadFlag,"load_gate_waited_sec":$waitedSec,"failed":$failed,"sf":"$sfDir"}"""
+    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":${obj(minRows)},"runs":$runs,"attempts":$attempts,"load_avg_start":$loadStart,"load_avg_end":$loadEnd,"load_avg_mid_max":$loadMidMax,"load_flagged":$loadFlag,"load_gate_waited_sec":$waitedSec,"failed":$failed,"sf":"$sfDir"}"""
     println(fullLine)
     // Tail-survivable redundancy (r18, VERDICT r17 #1): the same
     // per-query map again, chunked into ~40-query lines so that a
@@ -164,27 +139,23 @@ object Bench {
     // data from whatever complete lines fall inside its window. Chunks
     // carry metric "queries_chunk" so no parser mistakes a fragment
     // for the headline record.
-    val chunkRows = results.map { case (k, ts, ok) =>
-      "\"" + k + "\":" + (if (ok) fmt(ts.min) else "-1") }
-    val nChunks = (chunkRows.size + 39) / 40
-    chunkRows.grouped(40).zipWithIndex.foreach { case (g, i) =>
-      println(s"""{"metric":"queries_chunk","chunk":${i + 1},"chunks":$nChunks,"queries":${g.mkString("{", ",", "}")},"sf":"$sfDir"}""")
+    val nChunks = (minRows.size + 39) / 40
+    minRows.grouped(40).zipWithIndex.foreach { case (g, i) =>
+      println(s"""{"metric":"queries_chunk","chunk":${i + 1},"chunks":$nChunks,"queries":${obj(g)},"sf":"$sfDir"}""")
     }
     // BENCH_r04's tail capture truncated the line above and destroyed
     // the total. Repeat the headline figures in a second, short line so
     // they survive any tail-only capture of stdout.
     println(s"""{"metric":"total","value":$total,"unit":"sec","runs":$runs,"attempts":$attempts,"load_avg_start":$loadStart,"load_avg_end":$loadEnd,"load_avg_mid_max":$loadMidMax,"load_flagged":$loadFlag,"load_gate_waited_sec":$waitedSec,"slowest":$slowest,"failed":$failed,"sf":"$sfDir","summary":true}""")
     // First-class artifact path: the FULL record (per-query map at full
-    // precision, means and medians included) goes straight to a file,
-    // so the auditable per-query evidence never depends on how stdout
-    // was captured (BENCH_r15_local.json was summary-only for exactly
-    // that reason).
-    val qsFull = results.map { case (k, ts, ok) =>
-        "\"" + k + "\":" + (if (ok) ts.min else -1) }
-      .mkString("{", ",", "}")
+    // precision, means, medians and job counts included) goes straight
+    // to a file, so the auditable per-query evidence never depends on
+    // how stdout was captured (BENCH_r15_local.json was summary-only for
+    // exactly that reason).
+    val qsFull = obj(mins(_.toString))
     sys.env.get("SPARK_GRAFT_BENCH_OUT").foreach { f =>
       java.nio.file.Files.writeString(java.nio.file.Paths.get(f),
-        s"""{"metric":"total","value":$total,"unit":"sec","queries":$qsFull,"means":$means,"medians":$medians,"runs":$runs,"attempts":$attempts,"load_avg_start":$loadStart,"load_avg_end":$loadEnd,"load_avg_mid_max":$loadMidMax,"load_flagged":$loadFlag,"load_gate_waited_sec":$waitedSec,"slowest":$slowest,"failed":$failed,"sf":"$sfDir"}""" + "\n")
+        s"""{"metric":"total","value":$total,"unit":"sec","queries":$qsFull,"means":$means,"medians":$medians,"jobs":$jobs,"runs":$runs,"attempts":$attempts,"load_avg_start":$loadStart,"load_avg_end":$loadEnd,"load_avg_mid_max":$loadMidMax,"load_flagged":$loadFlag,"load_gate_waited_sec":$waitedSec,"slowest":$slowest,"failed":$failed,"sf":"$sfDir"}""" + "\n")
     }
     spark.stop()
   }

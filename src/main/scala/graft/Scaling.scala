@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
 /** Scaling-ratio probe: times the heaviest registered queries at two
   * scale factors in one JVM and records t(10×)/t(1×) per query.
   *
@@ -11,6 +13,10 @@ package graft
   * a super-linear ratio (≳12) flags a plan whose work grows faster than
   * its input — e.g. an unbounded candidate-pair join — and fails this
   * probe loudly.
+  *
+  * Each run goes through [[Measure]] (noop sink, per-run housekeeping);
+  * a query that fails every run at either SF is listed under "failed"
+  * and fails the probe.
   *
   * Usage: runMain graft.Scaling [outFile] (defaults to SCALING.json).
   * Env: SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_SCALE_RUNS (default 3).
@@ -34,52 +40,83 @@ object Scaling {
   def targets: Seq[String] =
     SparkEntry.specs.map(_.name).filterNot(excluded)
 
+  /** A ratio above this on a 10× data step is super-linear growth. */
+  val SuperLinear = 12.0
+
+  /** Min-of-runs seconds of one query at the small and the big SF. */
+  final case class Row(name: String, small: Double, big: Double) {
+    def ratio: Double = big / small
+  }
+
+  /** Times each registered query of `names` `runs` times on `small` and
+    * on `big` through [[Measure]]. Returns the rows and, apart, the
+    * names of the queries that failed every run at either SF. */
+  def measure(spark: SparkSession, names: Seq[String], small: String,
+              big: String, runs: Int): (Seq[Row], Seq[String]) = {
+    val byName = SparkEntry.specs.map(q => q.name -> q).toMap
+    names.flatMap(byName.get).partitionMap { q =>
+      val (a, b) = (Measure.series(spark, q, small, runs),
+        Measure.series(spark, q, big, runs))
+      if (!a.ok || !b.ok) Right(q.name)
+      else {
+        println(f"${q.name}%-28s ${a.min}%8.3f s  ${b.min}%8.3f s  ratio ${b.min / a.min}%6.2f")
+        Left(Row(q.name, a.min, b.min))
+      }
+    }
+  }
+
+  /** The `"worst"` and `"failed"` fields of a record: the largest ratio
+    * outside `expected` (the plan-defect signal), and the failed queries. */
+  def summary(rows: Seq[Row], failed: Seq[String],
+              expected: Map[String, String]): String = {
+    val worst = rows.filterNot(r => expected.contains(r.name))
+      .maxByOption(_.ratio)
+      .fold("null")(w => f"""{"name":"${w.name}","ratio":${w.ratio}%.2f}""")
+    s""""worst":$worst,"failed":""" +
+      failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+  }
+
+  /** Reports every ratio above [[SuperLinear]], with its reason when
+    * `expected` names the query. True when the probe fails: a failed
+    * query (logged by [[Measure.run]]) or an unexpected super-linear row. */
+  def check(rows: Seq[Row], failed: Seq[String],
+            expected: Map[String, String]): Boolean = {
+    val over = rows.filter(_.ratio > SuperLinear)
+    over.foreach { r =>
+      expected.get(r.name) match {
+        case Some(why) =>
+          println(f"expected super-linear: ${r.name} ratio ${r.ratio}%.2f — $why")
+        case None =>
+          System.err.println(
+            f"SUPER-LINEAR: ${r.name} ratio ${r.ratio}%.2f > $SuperLinear%.0f")
+      }
+    }
+    failed.nonEmpty || over.exists(r => !expected.contains(r.name))
+  }
+
   def main(args: Array[String]): Unit = {
     val outFile = args.headOption.getOrElse("SCALING.json")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val runs = sys.env.getOrElse("SPARK_GRAFT_SCALE_RUNS", "3").toInt
+    val runs = Measure.runs("SPARK_GRAFT_SCALE_RUNS", 3)
     val sfSmall = "/root/testdata/sf0.01"
     val sfBig = "/root/testdata/sf0.1"
     val spark = Session(cpus)
-    // warm-up: JVM/codegen/FS metadata for both SF dirs
-    spark.range(1000000L).selectExpr("sum(id)").collect()
-    Seq(sfSmall, sfBig).foreach(d =>
-      Tables.names.foreach(n => Tables.table(spark, d, n).schema))
-
-    val specs = SparkEntry.specs.filter(q => targets.contains(q.name))
-    def time(name: String, dir: String): Double = {
-      val q = specs.find(_.name == name).get
-      (1 to runs).map { _ =>
-        val t0 = System.nanoTime()
-        q.run(spark, dir).collect()
-        (System.nanoTime() - t0) / 1e9
-      }.min
-    }
+    Measure.warmUp(spark, sfSmall, sfBig)
     val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
     val loadStart = os.getSystemLoadAverage
-    val rows = targets.filter(n => specs.exists(_.name == n)).map { n =>
-      val tSmall = time(n, sfSmall)
-      val tBig = time(n, sfBig)
-      (n, tSmall, tBig, tBig / tSmall)
-    }
-    val json = rows.map { case (n, a, b, r) =>
-      f""""$n":{"sf001_sec":$a%.3f,"sf01_sec":$b%.3f,"ratio":$r%.2f}"""
-    }.mkString(",")
-    val worst = rows.maxBy(_._4)
+    val (rows, failed) = measure(spark, targets, sfSmall, sfBig, runs)
+    val json = rows.map(r =>
+      f""""${r.name}":{"sf001_sec":${r.small}%.3f,"sf01_sec":${r.big}%.3f,"ratio":${r.ratio}%.2f}"""
+    ).mkString(",")
     val out =
       f"""{"data_ratio":10,"runs":$runs,"cpus":$cpus,""" +
         f""""load_avg_start":$loadStart%.2f,""" +
         f""""load_avg_end":${os.getSystemLoadAverage}%.2f,""" +
-        f""""worst":{"name":"${worst._1}","ratio":${worst._4}%.2f},""" +
-        s""""queries":{$json}}"""
+        summary(rows, failed, Map.empty) + s""","queries":{$json}}"""
     java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
       out.getBytes("UTF-8"))
     println(out)
     spark.stop()
-    // a ratio ≳ 12 means super-linear growth on a 10× data step
-    rows.filter(_._4 > 12.0).foreach { case (n, _, _, r) =>
-      System.err.println(f"SUPER-LINEAR: $n ratio $r%.2f > 12")
-    }
-    if (rows.exists(_._4 > 12.0)) sys.exit(1)
+    if (check(rows, failed, Map.empty)) sys.exit(1)
   }
 }

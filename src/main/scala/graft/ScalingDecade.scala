@@ -110,8 +110,8 @@ object ScalingDecade {
   /** Rows whose super-linear decade ratio is EXPECTED — output-bound or
     * problem-bound, not a plan defect. Measured and recorded like every
     * other row (the reason rides into the JSON), but exempt from the
-    * super-linear abort. Everything NOT in this map must stay ≤ the
-    * abort threshold. */
+    * super-linear abort. Everything NOT in this map must stay ≤
+    * [[Scaling.SuperLinear]]. */
   val expectedSuperLinear: Map[String, String] = Map(
     "pipeline_curate" -> ("composition-bound: the curation pipeline " +
       "rides the same Sigma df^2 inverted-index join and minhash pair " +
@@ -271,7 +271,7 @@ object ScalingDecade {
   def main(args: Array[String]): Unit = {
     val outFile = args.headOption.getOrElse("SCALING.json")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val runs = sys.env.getOrElse("SPARK_GRAFT_SCALE_RUNS", "2").toInt
+    val runs = Measure.runs("SPARK_GRAFT_SCALE_RUNS", 2)
     val sfBig = "/root/testdata/sf0.1"
     val sf1 = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "/tmp/graft_sf1")
     val spark = Session(cpus)
@@ -279,45 +279,17 @@ object ScalingDecade {
       println(s"synthesizing sf1 decade at $sf1 …")
       synthesize(spark, sfBig, sf1)
     }
-    spark.range(1000000L).selectExpr("sum(id)").collect() // JVM warmup
-    Seq(sfBig, sf1).foreach(d =>
-      Tables.names.foreach(n => Tables.table(spark, d, n).schema))
-    val specs = SparkEntry.specs.filter(q => panel.contains(q.name))
-    def time(name: String, dir: String): Double = {
-      val q = specs.find(_.name == name).get
-      (1 to runs).map { _ =>
-        val t0 = System.nanoTime()
-        q.run(spark, dir).collect()
-        (System.nanoTime() - t0) / 1e9
-      }.min
-    }
-    val rows = panel.filter(n => specs.exists(_.name == n)).map { n =>
-      val t01 = time(n, sfBig)
-      val t1 = time(n, sf1)
-      println(f"$n%-22s sf0.1 $t01%7.3f s   sf1 $t1%7.3f s   ratio ${t1 / t01}%5.2f")
-      // between queries (never inside a timed run): broadcast blocks —
-      // sf1 packed-edge arrays, CSRs, TopK shortlists — are reaped by
-      // the GC-driven ContextCleaner; in one shared local[*] JVM the
-      // 48-query panel allocates them faster than organic GC frees
-      // them (the 8g-heap r14 first attempt OOMed 22 queries in), so
-      // nudge the cleaner once per panel entry
-      System.gc()
-      (n, t01, t1, t1 / t01)
-    }
-    val json = rows.map { case (n, a, b, r) =>
-      val expected = expectedSuperLinear.get(n)
+    Measure.warmUp(spark, sfBig, sf1)
+    val (rows, failed) = Scaling.measure(spark, panel, sfBig, sf1, runs)
+    val json = rows.map { r =>
+      val expected = expectedSuperLinear.get(r.name)
         .map(why => s""","expected":"$why"""").getOrElse("")
-      f""""$n":{"sf01_sec":$a%.3f,"sf1_sec":$b%.3f,"ratio":$r%.2f$expected}"""
+      f""""${r.name}":{"sf01_sec":${r.small}%.3f,"sf1_sec":${r.big}%.3f,"ratio":${r.ratio}%.2f$expected}"""
     }.mkString(",")
-    // headline worst = worst UNEXPECTED ratio (the plan-defect signal);
-    // the expected output-/problem-bound rows keep their numbers and
-    // reasons in the per-query records above
-    val unexpect = rows.filterNot(r => expectedSuperLinear.contains(r._1))
-    val worst = unexpect.maxBy(_._4)
     val decade =
       f""""decade":{"data_ratio":10,"runs":$runs,"cpus":$cpus,""" +
-        f""""worst":{"name":"${worst._1}","ratio":${worst._4}%.2f},""" +
-        s""""queries":{$json}}"""
+        Scaling.summary(rows, failed, expectedSuperLinear) +
+        s""","queries":{$json}}"""
     val path = java.nio.file.Paths.get(outFile)
     val merged =
       if (java.nio.file.Files.exists(path)) {
@@ -332,16 +304,6 @@ object ScalingDecade {
     java.nio.file.Files.writeString(path, merged)
     println(merged.takeRight(400))
     spark.stop()
-    val offenders = rows.filter(r =>
-      r._4 > 12.0 && !expectedSuperLinear.contains(r._1))
-    offenders.foreach { case (n, _, _, r) =>
-      System.err.println(f"SUPER-LINEAR at the sf1 decade: $n ratio $r%.2f > 12")
-    }
-    rows.filter(r => r._4 > 12.0 && expectedSuperLinear.contains(r._1))
-      .foreach { case (n, _, _, r) =>
-        println(f"expected super-linear: $n ratio $r%.2f — " +
-          expectedSuperLinear(n))
-      }
-    if (offenders.nonEmpty) sys.exit(1)
+    if (Scaling.check(rows, failed, expectedSuperLinear)) sys.exit(1)
   }
 }

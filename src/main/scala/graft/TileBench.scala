@@ -34,14 +34,21 @@ object TileBench {
     val srv = new graft.server.GraftServer(ctx).start()
     try {
       val client = java.net.http.HttpClient.newHttpClient()
-      def fetch(z: Int, x: Int, y: Int): Int = {
+      def fetch(path: String): Unit = {
+        val url = s"${srv.address}$path"
         val resp = client.send(
-          java.net.http.HttpRequest.newBuilder(java.net.URI.create(
-            s"${srv.address}/datasets/bench/vars/v0/tiles/$z/$x/$y.png"))
-            .build(),
+          java.net.http.HttpRequest.newBuilder(java.net.URI.create(url)).build(),
           java.net.http.HttpResponse.BodyHandlers.ofByteArray())
-        require(resp.statusCode() == 200, s"tile $z/$x/$y -> ${resp.statusCode()}")
-        resp.body().length
+        require(resp.statusCode() == 200, s"$url -> ${resp.statusCode()}")
+      }
+      def tile(ds: String, z: Int, x: Int, y: Int, query: String = "") =
+        s"/datasets/$ds/vars/v0/tiles/$z/$x/$y.png$query"
+      def pass(paths: Seq[String]): Double =
+        Measure.seconds(paths.foreach(fetch))._2
+      // a pass with the PNG tile cache emptied first: every tile renders
+      def renderPass(paths: Seq[String]): Double = {
+        srv.invalidateTiles()
+        pass(paths)
       }
       val t = ctx.dataset("bench").get.tileGrid
       val tiles = for {
@@ -50,18 +57,16 @@ object TileBench {
         // and a capped window of the fine ones
         x <- 0 until math.min(1 << (z + 1), 8)
         y <- 0 until math.min(1 << z, 4)
-      } yield (z, x, y)
-      fetch(0, 0, 0) // JVM/codegen warm-up, not measured
+      } yield tile("bench", z, x, y)
+      fetch(tile("bench", 0, 0, 0)) // JVM/codegen warm-up, not measured
+      val cold = renderPass(tiles) // every tile renders from the cube
+      val warm = pass(tiles) // every tile is an LRU cache hit
 
-      def timeAll(): Double = {
-        val t0 = System.nanoTime()
-        tiles.foreach { case (z, x, y) => fetch(z, x, y) }
-        (System.nanoTime() - t0) / 1e9
+      // the finest level's 4×2 tile window of a registered dataset
+      def fineTiles(ds: String, query: String = ""): Seq[String] = {
+        val z = ctx.dataset(ds).get.tileGrid.numLevels - 1
+        for (x <- 0 until 4; y <- 0 until 2) yield tile(ds, z, x, y, query)
       }
-      srv.invalidateTiles()
-      val cold = timeAll() // every tile renders from the cube
-      val warm = timeAll() // every tile is an LRU cache hit
-
       // store-backed dataset: the finest level serves by DIRECT chunk
       // reads (no Spark job) — the reference's own tile architecture
       val zdir = java.nio.file.Files.createTempDirectory("graft-tb").toString
@@ -69,28 +74,12 @@ object TileBench {
         chunkT = 1, chunkY = 256, chunkX = 256)
       ctx.register(graft.server.RegisteredDataset("benchz", "store bench",
         graft.sources.ZarrStore.openCube(spark, s"$zdir/c.zarr"), None))
-      val zfine = ctx.dataset("benchz").get.tileGrid.numLevels - 1
-      def fetchZ(x: Int, y: Int): Int = {
-        val resp = client.send(
-          java.net.http.HttpRequest.newBuilder(java.net.URI.create(
-            s"${srv.address}/datasets/benchz/vars/v0/tiles/$zfine/$x/$y.png"))
-            .build(),
-          java.net.http.HttpResponse.BodyHandlers.ofByteArray())
-        require(resp.statusCode() == 200)
-        resp.body().length
-      }
-      val zTiles = for (x <- 0 until 4; y <- 0 until 2) yield (x, y)
-      fetchZ(0, 0) // warm the store metadata caches
-      srv.invalidateTiles()
-      val t0d = System.nanoTime()
-      zTiles.foreach { case (x, y) => fetchZ(x, y) }
-      val direct = (System.nanoTime() - t0d) / 1e9
+      val zTiles = fineTiles("benchz")
+      fetch(zTiles.head) // warm the store metadata caches
+      val direct = renderPass(zTiles)
       // warm direct pass: PNG cache invalidated again, but the decoded-
       // chunk LRU is hot — isolates decompress cost from render cost
-      srv.invalidateTiles()
-      val t0w = System.nanoTime()
-      zTiles.foreach { case (x, y) => fetchZ(x, y) }
-      val directWarm = (System.nanoTime() - t0w) / 1e9
+      val directWarm = renderPass(zTiles)
       // graft's OWN materialized parquet levels (the ingest serving
       // surface): direct row-group window reads, no Spark job
       val pdir = java.nio.file.Files.createTempDirectory("graft-tbp").toString
@@ -98,27 +87,12 @@ object TileBench {
       ctx.register(graft.server.RegisteredDataset("benchp", "parquet bench",
         cube, None,
         levels = graft.cube.CubeIngest.openLevels(spark, s"$pdir/c.levels")))
-      val pfine = ctx.dataset("benchp").get.tileGrid.numLevels - 1
-      def fetchP(x: Int, y: Int): Int = {
-        val resp = client.send(
-          java.net.http.HttpRequest.newBuilder(java.net.URI.create(
-            s"${srv.address}/datasets/benchp/vars/v0/tiles/$pfine/$x/$y.png"))
-            .build(),
-          java.net.http.HttpResponse.BodyHandlers.ofByteArray())
-        require(resp.statusCode() == 200)
-        resp.body().length
-      }
-      fetchP(0, 0) // warm footer/listing caches (+ latestTime job)
-      srv.invalidateTiles()
-      val t0p = System.nanoTime()
-      zTiles.foreach { case (x, y) => fetchP(x, y) }
-      val parquet = (System.nanoTime() - t0p) / 1e9
+      val pTiles = fineTiles("benchp")
+      fetch(pTiles.head) // warm footer/listing caches (+ latestTime job)
+      val parquet = renderPass(pTiles)
       // steady-state pass: PNG cache invalidated again; footer/listing
       // caches and JIT are warm — the serving-loop figure
-      srv.invalidateTiles()
-      val t0pw = System.nanoTime()
-      zTiles.foreach { case (x, y) => fetchP(x, y) }
-      val parquetWarm = (System.nanoTime() - t0pw) / 1e9
+      val parquetWarm = renderPass(pTiles)
       // 4-D ingested store (time × depth × y × x): per-plane direct
       // window reads with the extra-dim predicate / dense plane shift
       import org.apache.spark.sql.functions.{explode, typedLit}
@@ -130,21 +104,9 @@ object TileBench {
       graft.cube.CubeIngest.writeCube(cube4, s"$p4dir/c")
       ctx.register(graft.server.RegisteredDataset("bench4", "4d bench",
         graft.cube.CubeIngest.open(spark, s"$p4dir/c"), None))
-      val f4 = ctx.dataset("bench4").get.tileGrid.numLevels - 1
-      def fetch4(x: Int, y: Int): Int = {
-        val resp = client.send(
-          java.net.http.HttpRequest.newBuilder(java.net.URI.create(
-            s"${srv.address}/datasets/bench4/vars/v0/tiles/$f4/$x/$y.png" +
-              "?depth=50")).build(),
-          java.net.http.HttpResponse.BodyHandlers.ofByteArray())
-        require(resp.statusCode() == 200)
-        resp.body().length
-      }
-      fetch4(0, 0) // warm footer/listing caches
-      srv.invalidateTiles()
-      val t04 = System.nanoTime()
-      zTiles.foreach { case (x, y) => fetch4(x, y) }
-      val plane4 = (System.nanoTime() - t04) / 1e9
+      val tiles4 = fineTiles("bench4", "?depth=50")
+      fetch(tiles4.head) // warm footer/listing caches
+      val plane4 = renderPass(tiles4)
       // bulk pre-render: the whole pyramid — every level × every time
       // step — as ONE distributed job (TileMaterialize.renderLevels),
       // so the fixed planning/scheduling floor that dominated the old
@@ -162,13 +124,10 @@ object TileBench {
         z * times.length + ti, lv, tv)
       val style = graft.render.Render.ColorMapping(0.0, 1.0, // server default
         graft.render.ColorMaps.paletteOrDefault("viridis"))
-      def runBatch(): (Long, Double) = {
-        val t0 = System.nanoTime()
-        val n = graft.render.TileMaterialize.renderLevels(
+      def runBatch(): (Long, Double) = Measure.seconds(
+        graft.render.TileMaterialize.renderLevels(
           batchJobs, "v0", 256, 256, style,
-          flipY = levels.head.grid.latAscending).count()
-        (n, (System.nanoTime() - t0) / 1e9)
-      }
+          flipY = levels.head.grid.latAscending).count())
       val (batchTiles, batchCold) = runBatch()
       val (_, batch) = runBatch()
       println(f"""{"metric":"tile_latency","tiles":${tiles.size},"levels":${t.numLevels},"cold_sec_per_tile":${cold / tiles.size}%.4f,"warm_sec_per_tile":${warm / tiles.size}%.4f,"direct_sec_per_tile":${direct / zTiles.size}%.4f,"direct_warm_sec_per_tile":${directWarm / zTiles.size}%.4f,"parquet_sec_per_tile":${parquet / zTiles.size}%.4f,"parquet_warm_sec_per_tile":${parquetWarm / zTiles.size}%.4f,"parquet_4d_plane_sec_per_tile":${plane4 / zTiles.size}%.4f,"batch_sec_per_tile":${batch / batchTiles}%.4f,"batch_cold_sec_per_tile":${batchCold / batchTiles}%.4f,"batch_tiles":$batchTiles,"batch_members":${batchJobs.size},"cold_total_sec":$cold%.2f,"warm_total_sec":$warm%.2f}""")

@@ -6,8 +6,7 @@ import org.apache.logging.log4j.LogManager
 import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
 import org.apache.logging.log4j.core.appender.AbstractAppender
 import org.apache.logging.log4j.core.config.Property
-import org.apache.spark.graft.ListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.SparkListenerJobStart
 import org.apache.spark.sql.SparkSession
 import org.scalatest.{Failed, Outcome, Succeeded}
 import org.scalatest.funsuite.AnyFunSuite
@@ -84,22 +83,7 @@ abstract class SparkSpec extends AnyFunSuite {
     }
   }
 
-  /** Runs `body` and returns its value with the Spark jobs it started,
-    * in start order. The listener bus is drained before the listener
-    * is added (no earlier job leaks in) and after the body (no late
-    * event is missed), so a zero-job assertion is deterministic. */
-  def jobsDuring[T](body: => T): (T, Seq[SparkListenerJobStart]) = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.add(j)
-    }
-    ListenerBus.drain(sc)
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      ListenerBus.drain(sc)
-      (out, jobs.asScala.toSeq)
-    } finally sc.removeSparkListener(listener)
-  }
+  /** [[Measure.jobsDuring]] on the suite's session. */
+  def jobsDuring[T](body: => T): (T, Seq[SparkListenerJobStart]) =
+    Measure.jobsDuring(spark.sparkContext)(body)
 }
