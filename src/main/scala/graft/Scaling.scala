@@ -85,7 +85,7 @@ object Scaling {
     over.foreach { r =>
       expected.get(r.name) match {
         case Some(why) =>
-          println(f"expected super-linear: ${r.name} ratio ${r.ratio}%.2f — $why")
+          println(f"expected super-linear: ${r.name} ratio ${r.ratio}%.2f - $why")
         case None =>
           System.err.println(
             f"SUPER-LINEAR: ${r.name} ratio ${r.ratio}%.2f > $SuperLinear%.0f")

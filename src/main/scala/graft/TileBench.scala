@@ -32,6 +32,13 @@ object TileBench {
     ctx.register(graft.server.RegisteredDataset("bench", "tile bench",
       cube, None, levels = levels))
     val srv = new graft.server.GraftServer(ctx).start()
+    // the stores the bench writes, deleted on exit
+    val stores = scala.collection.mutable.ArrayBuffer.empty[java.io.File]
+    def tmpStore(prefix: String): String = {
+      val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+      stores += d
+      d.toString
+    }
     try {
       val client = java.net.http.HttpClient.newHttpClient()
       def fetch(path: String): Unit = {
@@ -69,7 +76,7 @@ object TileBench {
       }
       // store-backed dataset: the finest level serves by DIRECT chunk
       // reads (no Spark job) — the reference's own tile architecture
-      val zdir = java.nio.file.Files.createTempDirectory("graft-tb").toString
+      val zdir = tmpStore("graft-tb")
       graft.sources.ZarrStore.writeZarr(cube, s"$zdir/c.zarr",
         chunkT = 1, chunkY = 256, chunkX = 256)
       ctx.register(graft.server.RegisteredDataset("benchz", "store bench",
@@ -82,7 +89,7 @@ object TileBench {
       val directWarm = renderPass(zTiles)
       // graft's OWN materialized parquet levels (the ingest serving
       // surface): direct row-group window reads, no Spark job
-      val pdir = java.nio.file.Files.createTempDirectory("graft-tbp").toString
+      val pdir = tmpStore("graft-tbp")
       graft.cube.CubeIngest.writeLevels(cube, s"$pdir/c.levels")
       ctx.register(graft.server.RegisteredDataset("benchp", "parquet bench",
         cube, None,
@@ -97,7 +104,7 @@ object TileBench {
       // window reads with the extra-dim predicate / dense plane shift
       import org.apache.spark.sql.functions.{explode, typedLit}
       val depths = Seq(0.0, 10.0, 50.0)
-      val p4dir = java.nio.file.Files.createTempDirectory("graft-tb4").toString
+      val p4dir = tmpStore("graft-tb4")
       val cube4 = cube.copy(
         df = cube.df.withColumn("depth", explode(typedLit(depths))),
         extraDims = Seq(graft.cube.ExtraDim("depth", depths, "m")))
@@ -132,7 +139,10 @@ object TileBench {
       val (_, batch) = runBatch()
       println(f"""{"metric":"tile_latency","tiles":${tiles.size},"levels":${t.numLevels},"cold_sec_per_tile":${cold / tiles.size}%.4f,"warm_sec_per_tile":${warm / tiles.size}%.4f,"direct_sec_per_tile":${direct / zTiles.size}%.4f,"direct_warm_sec_per_tile":${directWarm / zTiles.size}%.4f,"parquet_sec_per_tile":${parquet / zTiles.size}%.4f,"parquet_warm_sec_per_tile":${parquetWarm / zTiles.size}%.4f,"parquet_4d_plane_sec_per_tile":${plane4 / zTiles.size}%.4f,"batch_sec_per_tile":${batch / batchTiles}%.4f,"batch_cold_sec_per_tile":${batchCold / batchTiles}%.4f,"batch_tiles":$batchTiles,"batch_members":${batchJobs.size},"cold_total_sec":$cold%.2f,"warm_total_sec":$warm%.2f}""")
       System.out.flush()
-    } finally { srv.stop(); spark.stop() }
+    } finally {
+      srv.stop(); spark.stop()
+      stores.foreach(org.apache.commons.io.FileUtils.deleteDirectory)
+    }
     // the JDK HttpClient keeps non-daemon worker threads alive; don't
     // let them pin an in-process sbt runner after the record is out
     System.exit(0)

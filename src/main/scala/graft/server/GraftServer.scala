@@ -546,9 +546,10 @@ class GraftServer(ctx: ServiceContext, port: Int = 0) {
     *    decode ~one row group), values identical to the Spark scan by
     *    construction (the reference's own tile path is an in-process
     *    array slice);
-    *  - `spark level load` / `spark level hit`: a level with no store
-    *    behind it (persisted, derived or transformed frames) whose every
-    *    time step, over the grid rounded up to whole tiles, fits
+    *  - `spark level load` / `spark level hit`: a level the direct arm
+    *    does not serve (persisted, derived or transformed frames, or a
+    *    store-backed level whose direct read declines or fails) whose
+    *    every time step, over the grid rounded up to whole tiles, fits
     *    `StoreCache.directBudgetBytes` (the budget the time-series direct
     *    arm uses too). One Spark job reads the whole level
     *    ([[Render.Extent.level]]), memoized in the chunk LRU by
@@ -558,14 +559,12 @@ class GraftServer(ctx: ServiceContext, port: Int = 0) {
     *  - `spark window load` / `spark window hit`: such a level too large
     *    for the budget reads one tile window per job
     *    ([[Render.Extent.window]]), memoized the same way, so a repeat
-    *    with another colour range (`vmin`/`vmax`/`cbar`) runs no job;
-    *  - `spark scan`: a store-backed level whose direct read declines or
-    *    fails takes the window read, not memoized (the store's own
-    *    invalidation seam would not reach it).
+    *    with another colour range (`vmin`/`vmax`/`cbar`) runs no job.
     * The Spark reads filter one plane per extra dim, which pushes to the
     * store scan as a chunk-plane prune; the plane is part of the memo
-    * key. At most one load per key runs at a time. The returned window
-    * is shared: read it, never write it. */
+    * key, and a store-backed level's reads go with the store's
+    * `StoreCache.invalidate`. At most one load per key runs at a time.
+    * The returned window is shared: read it, never write it. */
   private def readWindow(d: RegisteredDataset, cube: graft.cube.CubeFrame,
                          v: String, t: java.sql.Timestamp, keyUs: Long,
                          x: Int, y: Int, extraSel: Seq[(String, Double, Int)])
@@ -580,25 +579,21 @@ class GraftServer(ctx: ServiceContext, port: Int = 0) {
       }
     }
     val window = Render.Extent.window(t, x, y, 256, 256)
-    def read(e: Render.Extent): Array[Double] =
-      Render.sparkRead(planeFiltered(cube, extraSel), v, e)
     def memo(e: Render.Extent): (Array[Double], Boolean) =
-      graft.sources.StoreCache.frameRead(cube.df, v, e,
-        extraSel.map { case (n, vv, _) => (n, vv) })(read(e))
+      graft.sources.StoreCache.frameRead(cube.df, cube.storePath, v, e,
+        extraSel.map { case (n, vv, _) => (n, vv) })(
+        Render.sparkRead(planeFiltered(cube, extraSel), v, e))
     direct.map(_ -> "direct").getOrElse {
-      if (cube.storePath.isDefined) (read(window), "spark scan")
-      else {
-        val level = Render.Extent.level(d.timeCoords, cube.grid, 256)
-        val step = d.timeCoords.indexOf(t)
-        if (step >= 0 &&
-            level.cells * 8 <= graft.sources.StoreCache.directBudgetBytes) {
-          val (stack, hit) = memo(level)
-          (Render.slice(stack, level, step, y * 256, x * 256, 256, 256),
-            if (hit) "spark level hit" else "spark level load")
-        } else {
-          val (win, hit) = memo(window)
-          (win, if (hit) "spark window hit" else "spark window load")
-        }
+      val level = Render.Extent.level(d.timeCoords, cube.grid, 256)
+      val step = d.timeCoords.indexOf(t)
+      if (step >= 0 &&
+          level.cells * 8 <= graft.sources.StoreCache.directBudgetBytes) {
+        val (stack, hit) = memo(level)
+        (Render.slice(stack, level, step, y * 256, x * 256, 256, 256),
+          if (hit) "spark level hit" else "spark level load")
+      } else {
+        val (win, hit) = memo(window)
+        (win, if (hit) "spark window hit" else "spark window load")
       }
     }
   }

@@ -42,7 +42,7 @@ private[graft] object BlobStore {
   val RemoteCacheBytes: Long = 256L << 20
 
   // one instance per store path so every reader shares cache state
-  private val stores = TrieMap.empty[String, BlobStore]
+  private val stores = StoreCache.memo[String, BlobStore](identity)
 
   // per-root Hadoop conf overrides (the reference's obs Endpoint/Region
   // descriptor keys → S3 client kwargs, context.py:218-225) — keyed by
@@ -69,9 +69,8 @@ private[graft] object BlobStore {
                                opts: Map[String, String]): Unit =
     if (opts.nonEmpty) {
       confOverrides(rootPrefix) = opts
-      stores.keys.filter(k =>
+      stores.removeIf((k, _) =>
         isAncestorOrSelf(rootPrefix, k) || isAncestorOrSelf(k, rootPrefix))
-        .foreach(stores.remove)
     }
 
   private[graft] def optionsFor(path: String): Map[String, String] =
@@ -79,20 +78,20 @@ private[graft] object BlobStore {
       case (p, o) if isAncestorOrSelf(p, path) || isAncestorOrSelf(path, p) => o
     }.foldLeft(Map.empty[String, String])(_ ++ _)
 
-  def forStore(path: String): BlobStore = stores.getOrElseUpdate(path,
+  /** The store's shared instance. [[StoreCache.invalidate]] drops it
+    * with the store's other memos: a remote store's LRU caches absent
+    * objects and its one-shot listing for the instance's lifetime. */
+  def forStore(path: String): BlobStore = stores.getOrLoad(path)(
     if (path.contains("://"))
       new CachingBlobStore(new HadoopBlobStore(path, optionsFor(path)),
         RemoteCacheBytes)
     else new LocalBlobStore(path))
 
-  private[graft] def drop(path: String): Unit = stores.remove(path)
-
-  /** Drop every cached store. Config reloads call this: a remote
-    * store's LRU caches absent objects and its one-shot listing for
-    * the JVM lifetime, so without invalidation a reload would keep
-    * serving pre-publication state (missing sidecars, empty levels). */
+  /** Drop every cached store and conf override. Config reloads call
+    * this, so a reload never keeps serving pre-publication state
+    * (missing sidecars, empty levels). */
   private[graft] def dropAll(): Unit = {
-    stores.clear(); confOverrides.clear(); StoreCache.clear()
+    confOverrides.clear(); StoreCache.clear()
   }
 
   /** one file by full path-or-URI (splits into parent store + name, so

@@ -5,7 +5,6 @@ import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.{Files, Paths}
 import java.util.zip.{Deflater, Inflater}
 
-import scala.collection.concurrent.TrieMap
 import scala.collection.mutable.ArrayBuffer
 
 /** Minimal pure-JVM HDF5 reader + NetCDF-4-style writer (SURVEY S1 —
@@ -82,40 +81,14 @@ object Hdf5 {
                            textAttrs: Map[String, String] = Map.empty)
   final case class Hdf5File(datasets: Map[String, Dataset])
 
-  private val fileCache = TrieMap.empty[String, Hdf5File]
+  // parsed headers and chunk indexes per file, dropped by
+  // [[StoreCache.invalidate]] of the file's path
+  private val fileCache = StoreCache.memo[String, Hdf5File](identity)
   private val chunkCache =
-    TrieMap.empty[(String, String), Map[Seq[Long], (Long, Int)]]
+    StoreCache.memo[(String, String), Map[Seq[Long], (Long, Int)]](_._1)
 
   def open(path: String): Hdf5File =
-    fileCache.getOrElseUpdate(path, withRaf(path)(r => parse(r)))
-
-  private[sources] def invalidate(path: String): Unit = {
-    fileCache.remove(path)
-    baseCache.remove(path)
-    chunkCache.keys.filter(_._1 == path).foreach(chunkCache.remove)
-    StoreCache.invalidate(path)
-  }
-
-  /** Format-cache-only removal for every cached file at or under
-    * `prefix` — called BY [[StoreCache.invalidate]] (the shared
-    * invalidation seam), so unlike [[invalidate]] it must not re-enter
-    * StoreCache. Before round 17 these caches survived the seam: a
-    * file rewritten by anything other than [[writeHdf5]] kept serving
-    * stale parsed headers and chunk addresses. */
-  private[sources] def invalidateUnder(prefix: String): Unit = {
-    def under(k: String) = k == prefix || k.startsWith(prefix + "/")
-    (fileCache.keys ++ baseCache.keys).filter(under).foreach { k =>
-      fileCache.remove(k)
-      baseCache.remove(k)
-      chunkCache.keys.filter(_._1 == k).foreach(chunkCache.remove)
-    }
-  }
-
-  /** drop every parsed header / superblock / chunk index — the
-    * [[StoreCache.clear]] (config reload) hook */
-  private[sources] def clearCaches(): Unit = {
-    fileCache.clear(); baseCache.clear(); chunkCache.clear()
-  }
+    fileCache.getOrLoad(path)(withRaf(path)(r => parse(r)))
 
   private def withRaf[A](path: String)(f: R => A): A = {
     val raf = new RandomAccessFile(path, "r")
@@ -757,7 +730,7 @@ object Hdf5 {
 
   private def chunkIndex(path: String,
                          ds: Dataset): Map[Seq[Long], (Long, Int)] =
-    chunkCache.getOrElseUpdate((path, ds.name), {
+    chunkCache.getOrLoad((path, ds.name)) {
       val out = scala.collection.mutable.HashMap.empty[Seq[Long], (Long, Int)]
       if (ds.index.addr != Undef) withRaf(path) { r =>
         r.base = baseOf(path)
@@ -773,7 +746,7 @@ object Hdf5 {
         }
       }
       out.toMap
-    })
+    }
 
   /** chunk-grid shape (chunks per dimension) */
   private def gridOf(ds: Dataset): Seq[Int] =
@@ -1122,9 +1095,9 @@ object Hdf5 {
 
   // base addresses are nearly always 0; re-derive (once per path) for
   // the rare userblock case so fresh RAFs match parse-time addressing
-  private val baseCache = TrieMap.empty[String, Long]
+  private val baseCache = StoreCache.memo[String, Long](identity)
   private def baseOf(path: String): Long =
-    baseCache.getOrElseUpdate(path, withRaf(path)(findSuperblock))
+    baseCache.getOrLoad(path)(withRaf(path)(findSuperblock))
 
   private def walkChunkBtree(
       r: R, nodeAddr: Long, rank: Int,
@@ -1932,7 +1905,7 @@ object Hdf5 {
 
     w.patch64(eofPatch, w.pos)
     Files.write(Paths.get(path), w.toArray)
-    invalidate(path)
+    StoreCache.invalidate(path)
   }
 
   // extensible-array fixture parameters (powers of two, as required)

@@ -1,7 +1,5 @@
 package graft.sources
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.HadoopReadOptions
@@ -78,14 +76,16 @@ private[graft] object ParquetWindow {
     }
   }
 
-  private val storeMetas = TrieMap.empty[String, Option[StoreMeta]]
+  // Every memo below is keyed by the store path first and dropped by
+  // [[StoreCache.invalidate]] of that path.
+  private val storeMetas = StoreCache.memo[String, Option[StoreMeta]](identity)
 
   // sidecar extraDims parsed INDEPENDENTLY of StoreMeta validity: the
   // 4-D refusal guard must hold even for stores whose layout/tileSize
   // fails the StoreMeta parse (else an extra=Nil read on a degenerate
   // 4-D sidecar would silently overlay every plane)
   private val sidecarExtras =
-    TrieMap.empty[String, Seq[(String, Seq[Double])]]
+    StoreCache.memo[String, Seq[(String, Seq[Double])]](identity)
 
   private def parseExtraDims(n: com.fasterxml.jackson.databind.JsonNode)
       : Seq[(String, Seq[Double])] =
@@ -98,7 +98,7 @@ private[graft] object ParquetWindow {
       }.toSeq).getOrElse(Nil)
 
   private def extrasOf(path: String): Seq[(String, Seq[Double])] =
-    sidecarExtras.getOrElseUpdate(path,
+    sidecarExtras.getOrLoad(path)(
       BlobStore.forStore(path).read("_graft_meta.json").map { b =>
         try parseExtraDims(new com.fasterxml.jackson.databind.ObjectMapper()
           .readTree(new String(b, java.nio.charset.StandardCharsets.UTF_8)))
@@ -107,7 +107,7 @@ private[graft] object ParquetWindow {
 
 
   private def storeMeta(path: String): Option[StoreMeta] =
-    storeMetas.getOrElseUpdate(path,
+    storeMetas.getOrLoad(path)(
       BlobStore.forStore(path).read("_graft_meta.json").flatMap { b =>
         try {
           val n = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -143,11 +143,10 @@ private[graft] object ParquetWindow {
         } catch { case scala.util.control.NonFatal(_) => None }
       })
 
-  // per-date-dir part-file listing and per-file schema: probed once,
-  // served per tile ([[StoreCache.invalidate]] drops them via the
-  // invalidate/clear hooks below)
-  private val fileLists = TrieMap.empty[String, Seq[Path]]
-  private val metas = TrieMap.empty[String, FileMeta]
+  // per-date-dir part-file listing and per-file footer, keyed (store,
+  // dir) and (store, file): probed once, served per tile
+  private val fileLists = StoreCache.memo[(String, String), Seq[Path]](_._1)
+  private val metas = StoreCache.memo[(String, String), FileMeta](_._1)
 
   // pooled open readers for the dense path: ParquetFileReader.open
   // costs ~10 ms even with a cached footer (codec/stream/allocator
@@ -165,77 +164,51 @@ private[graft] object ParquetWindow {
   // membership inside it and re-acquire if they lost the race. Closing
   // costs the next request on that file one ~10 ms reopen.
   //
-  // Keyed by (file, variable): parquet-mr builds a row group's column
-  // index store once, for the columns requested FIRST, and keeps it —
-  // a reader switched to another variable by setRequestedSchema finds
-  // no offset index for it and readFilteredRowGroup throws.
+  // Keyed by (store, file, variable): parquet-mr builds a row group's
+  // column index store once, for the columns requested FIRST, and
+  // keeps it — a reader switched to another variable by
+  // setRequestedSchema finds no offset index for it and
+  // readFilteredRowGroup throws.
   private[graft] var ReaderPoolCap = 128 // var: test seam only
-  private val readers = new graft.Lru[(String, String), ParquetFileReader](
+  private type ReaderKey = (String, String, String)
+  private val readers = StoreCache.memo[ReaderKey, ParquetFileReader](_._1,
     ReaderPoolCap, release = rd => rd.synchronized {
       try rd.close() catch { case scala.util.control.NonFatal(_) => () }
     })
-  // offset index per (file, column) — one footer-section parse; parsed
-  // DATA (not an open resource), so it survives reader eviction and a
-  // reopened reader reuses it
-  private val offsetIndexes = TrieMap.empty[(String, String), AnyRef]
+  // offset index per (store, file, column), None when the file has
+  // none — one footer-section parse; parsed DATA (not an open
+  // resource), so it survives reader eviction and a reopened reader
+  // reuses it
+  private val offsetIndexes = StoreCache.memo[ReaderKey, Option[
+    org.apache.parquet.internal.column.columnindex.OffsetIndex]](_._1)
 
-  /** get-or-open the pooled reader for (`file`, `variable`) */
-  private def acquireReader(file: Path, variable: String,
+  /** get-or-open the pooled reader for `key` */
+  private def acquireReader(key: ReaderKey, file: Path,
                             conf: Configuration,
                             fm: FileMeta): ParquetFileReader =
-    readers.getOrLoad((file.toString, variable)) {
+    readers.getOrLoad(key) {
       val in = HadoopInputFile.fromPath(file, conf)
       ParquetFileReader.open(in, fm.footer,
         HadoopReadOptions.builder(conf).build(), in.newStream())
     }
 
-  private[graft] def invalidate(path: String): Unit = {
-    // metas/readers/offsetIndexes are keyed by listStatus paths, which
-    // the FileSystem scheme-qualifies ('file:/tmp/…' for a raw '/tmp/…'
-    // store) — matching the raw prefix alone would leak pooled open
-    // readers (fds on deleted part files) across a store rewrite
-    val prefixes = {
-      val qualified =
-        try {
-          val p = new Path(path)
-          p.getFileSystem(hadoopConf(path)).makeQualified(p).toString
-        } catch { case scala.util.control.NonFatal(_) => path }
-      Seq(path, qualified).distinct
-    }
-    def hit(k: String): Boolean = prefixes.exists(k.startsWith)
-    confs.remove(path)
-    fileLists.keys.filter(hit).foreach(fileLists.remove)
-    metas.keys.filter(hit).foreach(metas.remove)
-    storeMetas.keys.filter(hit).foreach(storeMetas.remove)
-    sidecarExtras.keys.filter(hit).foreach(sidecarExtras.remove)
-    offsetIndexes.keys.filter(k => hit(k._1)).foreach(offsetIndexes.remove)
-    readers.removeIf((k, _) => hit(k._1))
-  }
-
   /** test seam: the file path of each pooled open reader */
   private[graft] def pooledReaderPaths: Seq[String] =
-    readers.keys.map(_._1)
-
-  private[graft] def clear(): Unit = {
-    confs.clear(); fileLists.clear(); metas.clear(); storeMetas.clear()
-    sidecarExtras.clear()
-    offsetIndexes.clear()
-    readers.clear()
-  }
+    readers.keys.map(_._2)
 
   // memoized per store: a fresh Configuration lazily re-parses the
   // Hadoop XML defaults on first use (~10-20 ms) — constructing one
   // per tile request silently dominated the whole read. Read options
   // are built from it too: `ParquetReadOptions.builder()` makes its
   // own fresh Configuration, so it would pay that parse per read.
-  private val confs = TrieMap.empty[String, Configuration]
+  private val confs = StoreCache.memo[String, Configuration](identity)
 
   private def hadoopConf(path: String): Configuration =
-    confs.getOrElseUpdate(path, {
+    confs.getOrLoad(path) {
       val c = new Configuration()
       BlobStore.optionsFor(path).foreach { case (k, v) => c.set(k, v) }
       c
-    })
+    }
 
   private def listParquet(dir: String, conf: Configuration): Seq[Path] = {
     val p = new Path(dir)
@@ -267,13 +240,7 @@ private[graft] object ParquetWindow {
       fs.listStatus(d.getPath)
         .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
         .foreach { f =>
-          val fm = metas.getOrElseUpdate(f.getPath.toString, {
-            val r = ParquetFileReader.open(
-              HadoopInputFile.fromPath(f.getPath, conf))
-            try FileMeta(r.getFooter.getFileMetaData.getSchema,
-              r.getFooter.getFileMetaData.getCreatedBy, r.getFooter)
-            finally r.close()
-          })
+          val fm = fileMeta(path, f.getPath, conf)
           val ti = try fm.schema.getFieldIndex("time")
             catch { case _: Exception => return None }
           val tf = fm.schema.getFields.get(ti)
@@ -330,7 +297,8 @@ private[graft] object ParquetWindow {
     val date = java.time.LocalDate.ofEpochDay(Math.floorDiv(timeUs, DayUs))
     val dateDir = s"$path/p_date=$date"
     val conf = hadoopConf(path)
-    val files = fileLists.getOrElseUpdate(dateDir, listParquet(dateDir, conf))
+    val files =
+      fileLists.getOrLoad((path, dateDir))(listParquet(dateDir, conf))
     if (files.isEmpty) return None
     val out = NanArray(h * w)
     files.foreach(f =>
@@ -338,17 +306,22 @@ private[graft] object ParquetWindow {
     Some(out)
   }
 
+  /** `file`'s footer, read once per (store, file) */
+  private def fileMeta(storePath: String, file: Path,
+                       conf: Configuration): FileMeta =
+    metas.getOrLoad((storePath, file.toString)) {
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+      try FileMeta(r.getFooter.getFileMetaData.getSchema,
+        r.getFooter.getFileMetaData.getCreatedBy, r.getFooter)
+      finally r.close()
+    }
+
   private def readFile(storePath: String, file: Path, conf: Configuration,
                        variable: String, timeUs: Long,
                        extra: Seq[(String, Double)],
                        y0: Int, x0: Int, h: Int, w: Int,
                        out: Array[Double]): Unit = {
-    val fm = metas.getOrElseUpdate(file.toString, {
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
-      try FileMeta(r.getFooter.getFileMetaData.getSchema,
-        r.getFooter.getFileMetaData.getCreatedBy, r.getFooter)
-      finally r.close()
-    })
+    val fm = fileMeta(storePath, file, conf)
     // (getFields route: GroupType.getType(String) is overload-ambiguous
     // from Scala against MessageType.getType(String*))
     def field(n: String): org.apache.parquet.schema.Type =
@@ -425,7 +398,7 @@ private[graft] object ParquetWindow {
     }
     val dense = timeUniform && fm.footer.getBlocks.size() == 1 &&
       planeBase.isDefined
-    if (dense && readFileDense(file, conf, fm, sm.get, variable,
+    if (dense && readFileDense(storePath, file, conf, fm, sm.get, variable,
         planeBase.get, y0, x0, h, w, out))
       return
     val opts = HadoopReadOptions.builder(conf)
@@ -508,7 +481,8 @@ private[graft] object ParquetWindow {
   /** returns false when the file lacks what the fast path needs (no
     * offset index / unknown column) — the caller then runs the generic
     * reader instead of serving an empty window */
-  private def readFileDense(file: Path, conf: Configuration, fm: FileMeta,
+  private def readFileDense(storePath: String, file: Path,
+                            conf: Configuration, fm: FileMeta,
                             m: StoreMeta, variable: String,
                             planeBase: Long,
                             y0: Int, x0: Int, h: Int, w: Int,
@@ -542,32 +516,30 @@ private[graft] object ParquetWindow {
     // under us; one that lost the race (evicted between acquire and
     // lock — needs 128 other files touched in that window) is simply
     // re-acquired.
-    val r = acquireReader(file, variable, conf, fm)
+    val key = (storePath, file.toString, variable)
+    val r = acquireReader(key, file, conf, fm)
     r.synchronized {
-      if (!readers.holds((file.toString, variable), r))
-        return readFileDense(file, conf, fm, m, variable, planeBase,
-          y0, x0, h, w, out)
+      if (!readers.holds(key, r))
+        return readFileDense(storePath, file, conf, fm, m, variable,
+          planeBase, y0, x0, h, w, out)
       r.setRequestedSchema(proj)
-      val oi = offsetIndexes.getOrElseUpdate((file.toString, variable),
-        r.readOffsetIndex(vChunk)).asInstanceOf[
-        org.apache.parquet.internal.column.columnindex.OffsetIndex]
-      val pages =
-        if (oi == null) return false // no offset index: generic path
-        else {
-          def lastRow(p: Int): Long =
-            if (p + 1 < oi.getPageCount) oi.getFirstRowIndex(p + 1) - 1
-            else rowCount - 1
-          val sel = (0 until oi.getPageCount).filter { p =>
-            val lo = oi.getFirstRowIndex(p)
-            val hi = lastRow(p)
-            wanted.exists { case (a, b) => a <= hi && b >= lo }
-          }
-          (r.readFilteredRowGroup(0,
-            org.apache.parquet.internal.filter2.columnindex.RowRanges
-              .create(rowCount,
-                java.util.stream.IntStream.of(sel.toArray: _*).iterator(),
-                oi))): org.apache.parquet.column.page.PageReadStore
-        }
+      val oi = offsetIndexes.getOrLoad(key)(Option(r.readOffsetIndex(vChunk)))
+        .getOrElse(return false) // no offset index: generic path
+      def lastRow(p: Int): Long =
+        if (p + 1 < oi.getPageCount) oi.getFirstRowIndex(p + 1) - 1
+        else rowCount - 1
+      val sel = (0 until oi.getPageCount).filter { p =>
+        val lo = oi.getFirstRowIndex(p)
+        val hi = lastRow(p)
+        wanted.exists { case (a, b) => a <= hi && b >= lo }
+      }
+      // typed as the public interface: the returned class is
+      // package-private, so Scala cannot emit calls against it
+      val pages: org.apache.parquet.column.page.PageReadStore =
+        r.readFilteredRowGroup(0,
+          org.apache.parquet.internal.filter2.columnindex.RowRanges
+            .create(rowCount,
+              java.util.stream.IntStream.of(sel.toArray: _*).iterator(), oi))
       if (pages == null) return false
       val n = pages.getRowCount
       if (n == 0) return true

@@ -1,5 +1,7 @@
 package graft.sources
 
+import java.util.concurrent.CopyOnWriteArrayList
+
 import scala.collection.concurrent.TrieMap
 import scala.concurrent.{Await, Future, Promise}
 import scala.concurrent.duration.Duration
@@ -26,23 +28,52 @@ import graft.render.Render
   *     tile crossing several chunks paid decompress + mask-and-scale on
   *     every PNG-cache miss. The same LRU and byte budget hold the
   *     parquet path's decoded tile windows and the Spark reads of
-  *     levels with no store behind them ([[frameRead]]): whole level
-  *     stacks, or single tile windows.
+  *     levels the direct arms do not serve ([[frameRead]]): whole
+  *     level stacks, or single tile windows.
   *
   * [[directBudgetBytes]] is the one driver-side budget of a single
   * request's read: the time-series direct arm and the whole-level
   * Spark read both stay under it.
   *
-  * Writers and config reloads call [[invalidate]]/[[clear]] (wired into
-  * `ZarrStore.invalidateMeta` and `BlobStore.dropAll`), so a reload
-  * re-observes the world like the blob seam does.
+  * THE invalidation seam: every per-store memo of the source layer —
+  * these three tiers, parsed HDF5 headers and chunk indexes, zarr
+  * consolidated metadata and shard indexes, parquet sidecars, listings,
+  * footers, offset indexes and pooled readers, and the per-store
+  * [[BlobStore]] instances with their remote LRUs — is a [[graft.Lru]]
+  * made by [[memo]], whose `storeOf(key)` names the store path an
+  * entry belongs to. [[invalidate]]`(path)` drops every entry whose
+  * store is `path` or lies under `path/` (`…/c` does not cover the
+  * sibling `…/c2`); [[clear]] drops every entry, store-less ones
+  * included. Writers call [[invalidate]] on the store they rewrote;
+  * config reloads call [[clear]] through `BlobStore.dropAll`.
   */
 private[graft] object StoreCache {
 
-  private val opsMap = TrieMap.empty[String, StoreOps]
+  /** Entry bound of every per-store memo: far above the stores, part
+    * files and shards a serving registry touches, so it bounds a
+    * long-running server's driver state without evicting in use. */
+  private val MemoEntries: Long = 1L << 16
+
+  // each registered memo's drop: removes the entries whose store the
+  // predicate covers
+  private val memos = new CopyOnWriteArrayList[(String => Boolean) => Unit]
+
+  /** A [[graft.Lru]] registered with [[invalidate]] and [[clear]]:
+    * `storeOf(key)` is the store path an entry belongs to (null for
+    * none: only [[clear]] drops it). Bounded at [[MemoEntries]] entries
+    * unless the caller sizes it. */
+  def memo[K, V](storeOf: K => String, capacity: => Long = MemoEntries,
+                 weightOf: V => Long = (_: V) => 1L,
+                 release: V => Unit = (_: V) => ()): graft.Lru[K, V] = {
+    val m = new graft.Lru[K, V](capacity, weightOf, release)
+    memos.add(covers => m.removeIf((k, _) => covers(storeOf(k))))
+    m
+  }
+
+  private val opsMap = memo[String, StoreOps](identity)
   // (decoded epoch-us axis, is-ascending) — ascending axes (the CF
   // norm) binary-search; anything else falls back to a linear scan
-  private val axisMap = TrieMap.empty[String, (Array[Long], Boolean)]
+  private val axisMap = memo[String, (Array[Long], Boolean)](identity)
 
   private[graft] val chunkCapacityBytes: Long =
     sys.props.getOrElse("graft.chunkCache.mb", "256").toLong << 20
@@ -72,37 +103,35 @@ private[graft] object StoreCache {
                                      timeUs: Long, y0: Int, x0: Int,
                                      h: Int, w: Int,
                                      extra: Seq[(String, Double)])
-  /** Spark reads of a level with no store behind it, keyed by the
-    * level's unfiltered frame: `Dataset` keeps Object's identity
-    * `equals`/`hashCode`, and a registration's levels are fixed
-    * objects */
-  private final case class FrameKey(df: DataFrame, variable: String,
+  /** Spark reads of a level, keyed by the level's unfiltered frame:
+    * `Dataset` keeps Object's identity `equals`/`hashCode`, and a
+    * registration's levels are fixed objects. `store` is the level's
+    * store path, null when no store is behind it. */
+  private final case class FrameKey(df: DataFrame, store: String,
+                                    variable: String,
                                     extent: Render.Extent,
                                     extra: Seq[(String, Double)])
-  private val chunks =
-    new graft.Lru[AnyRef, Array[Double]](chunkCapacityBytes, _.length * 8L)
+  private val chunks = memo[AnyRef, Array[Double]]({
+    case c: ChunkKey => c.path
+    case w: WindowKey => w.path
+    case f: FrameKey => f.store
+  }, chunkCapacityBytes, _.length * 8L)
   /** the [[frameRead]] loads running now, one per key (entries live only
     * while their load runs) */
   private val frameLoads = TrieMap.empty[FrameKey, Future[Array[Double]]]
 
-  private def keyPath(k: AnyRef): String = k match {
-    case c: ChunkKey => c.path
-    case w: WindowKey => w.path
-    case _: FrameKey => null // no store behind it
-  }
-
   def ops(path: String): StoreOps =
-    opsMap.getOrElseUpdate(path, StoreOps.forPath(path))
+    opsMap.getOrLoad(path)(StoreOps.forPath(path))
 
   /** decoded time axis, cached; (values, ascending) */
   def timeAxis(path: String): (Array[Long], Boolean) =
-    axisMap.getOrElseUpdate(path, {
+    axisMap.getOrLoad(path) {
       val ax = ops(path).read1dLongs("time")
       var asc = true
       var i = 1
       while (i < ax.length) { if (ax(i) <= ax(i - 1)) asc = false; i += 1 }
       (ax, asc)
-    })
+    }
 
   /** index of `timeUs` on the cached axis, -1 when absent */
   def timeIndex(path: String, timeUs: Long): Int = {
@@ -129,18 +158,20 @@ private[graft] object StoreCache {
     chunks.get(key).orElse(load.map(chunks.put(key, _)))
   }
 
-  /** The Spark read of `extent` of a level with no store behind it,
-    * memoized in the same LRU: `df` is the level's UNFILTERED frame
-    * (compared by reference), `extra` the resolved extra-dim plane, and
-    * `load` runs the read with its plane filter. Returns the read and
-    * whether this call found it cached, or waited for another call's
-    * load of it: at most one load per key runs at a time (the
-    * reference opens a level once, under a lock, mldataset.py:87-109).
+  /** The Spark read of `extent` of a level, memoized in the same LRU:
+    * `df` is the level's UNFILTERED frame (compared by reference),
+    * `store` its store path (None when no store is behind it; a stored
+    * level's reads go with the store's [[invalidate]]), `extra` the
+    * resolved extra-dim plane, and `load` runs the read with its plane
+    * filter. Returns the read and whether this call found it cached,
+    * or waited for another call's load of it: at most one load per key
+    * runs at a time (the reference opens a level once, under a lock,
+    * mldataset.py:87-109).
     * The read is shared read-only between requests. */
-  def frameRead(df: DataFrame, variable: String, extent: Render.Extent,
-                extra: Seq[(String, Double)])
+  def frameRead(df: DataFrame, store: Option[String], variable: String,
+                extent: Render.Extent, extra: Seq[(String, Double)])
                (load: => Array[Double]): (Array[Double], Boolean) = {
-    val key = FrameKey(df, variable, extent, extra)
+    val key = FrameKey(df, store.orNull, variable, extent, extra)
     chunks.get(key) match {
       case Some(read) => (read, true)
       case None =>
@@ -168,28 +199,14 @@ private[graft] object StoreCache {
 
   private[graft] def cachedChunkBytes: Long = chunks.weight
 
-  /** drop everything cached under one store path (writers re-writing a
-    * fixture, metadata invalidation hooks). This is THE invalidation
-    * seam — every format-level cache hangs off it, so a caller that
-    * invalidates a store never keeps reading stale parsed headers,
-    * chunk indexes or consolidated metadata from a format cache the
-    * seam forgot (the round-17 review found Hdf5's and ZarrStore's
-    * caches surviving it). */
+  /** Drops every registered memo's entries whose store is `path` or
+    * lies under `path/` (writers re-writing a store, metadata
+    * invalidation). */
   def invalidate(path: String): Unit = {
-    opsMap.remove(path)
-    axisMap.remove(path)
-    chunks.removeIf((k, _) => keyPath(k) == path)
-    ParquetWindow.invalidate(path)
-    Hdf5.invalidateUnder(path)
-    ZarrStore.invalidateMetaUnder(path)
+    val under = path + "/"
+    memos.forEach(_(s => s != null && (s == path || s.startsWith(under))))
   }
 
-  def clear(): Unit = {
-    opsMap.clear()
-    axisMap.clear()
-    chunks.clear()
-    ParquetWindow.clear()
-    Hdf5.clearCaches()
-    ZarrStore.clearMetaCaches()
-  }
+  /** Drops every registered memo's entries (config reloads). */
+  def clear(): Unit = memos.forEach(_(_ => true))
 }

@@ -67,10 +67,9 @@ object ZarrStore {
     * array listing. This is what makes remote stores usable — without
     * it every array costs a metadata round-trip (the reference relies
     * on xr.open_zarr's consolidated read for the same reason). Cached
-    * per store path; [[invalidateMeta]] drops the entry (writers call
-    * it). */
-  private val zmetaCache =
-    new scala.collection.concurrent.TrieMap[String, Option[JsonNode]]
+    * per store path until [[StoreCache.invalidate]] of the store
+    * (writers call it). */
+  private val zmetaCache = StoreCache.memo[String, Option[JsonNode]](identity)
 
   /** every byte in or out of the store goes through this seam —
     * local paths hit the filesystem, `scheme://` URIs go through the
@@ -82,35 +81,11 @@ object ZarrStore {
       new String(b, java.nio.charset.StandardCharsets.UTF_8)))
 
   private def consolidated(store: String): Option[JsonNode] =
-    zmetaCache.getOrElseUpdate(store, {
+    zmetaCache.getOrLoad(store) {
       val node = readJson(store, ".zmetadata")
       if (node.isDefined) metaFileReads.incrementAndGet()
       node.flatMap(n => Option(n.get("metadata")))
-    })
-
-  private[graft] def invalidateMeta(store: String): Unit = {
-    zmetaCache.remove(store)
-    shardIndexCache.removeIf((k, _) => k._1 == store)
-    BlobStore.drop(store)
-    StoreCache.invalidate(store)
-  }
-
-  /** Meta-cache-only removal for every store at or under `prefix` —
-    * called BY [[StoreCache.invalidate]] (the shared seam), so unlike
-    * [[invalidateMeta]] it must not re-enter StoreCache/BlobStore.
-    * Before round 17 the consolidated-metadata and shard-index caches
-    * survived the seam (and config reloads), serving pre-publication
-    * ArrayMetas against republished objects. */
-  private[graft] def invalidateMetaUnder(prefix: String): Unit = {
-    def under(k: String) = k == prefix || k.startsWith(prefix + "/")
-    zmetaCache.keys.filter(under).foreach(zmetaCache.remove)
-    shardIndexCache.removeIf((k, _) => under(k._1))
-  }
-
-  /** the [[StoreCache.clear]] (config reload) hook */
-  private[graft] def clearMetaCaches(): Unit = {
-    zmetaCache.clear(); shardIndexCache.clear()
-  }
+    }
 
   def readArrayMeta(store: String, name: String): ArrayMeta = {
     // per-array attributes (.zattrs / v3 "attributes"): numbers feed
@@ -356,10 +331,10 @@ object ZarrStore {
     * wants exactly its chunk. Missing shard or unallocated inner chunk
     * (index entry 2^64-1) reads as fill. */
   /** shard footer indexes are ~KB and read once per inner chunk
-    * without this cache; entries vanish on [[invalidateMeta]] (64 Ki
-    * indexes ≈ tens of MB) */
+    * without this cache; entries vanish on [[StoreCache.invalidate]]
+    * of the store (64 Ki indexes ≈ tens of MB) */
   private val shardIndexCache =
-    new graft.Lru[(String, String), Array[Byte]](1L << 16)
+    StoreCache.memo[(String, String), Array[Byte]](_._1)
 
   private def readShardedChunk(store: String, name: String, meta: ArrayMeta,
                                chunkIdx: Seq[Int]): Array[Double] = {
@@ -627,7 +602,7 @@ object ZarrStore {
         dims)
     }
     writeConsolidated(dir)
-    invalidateMeta(path)
+    StoreCache.invalidate(path)
   }
 
   /** Emit `.zmetadata` (zarr_consolidated_format 1) aggregating every
@@ -949,7 +924,7 @@ object ZarrStore {
         }
       }
     }
-    invalidateMeta(path)
+    StoreCache.invalidate(path)
   }
 
   private def gzipBytes(data: Array[Byte]): Array[Byte] = {

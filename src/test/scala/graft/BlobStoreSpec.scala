@@ -94,7 +94,7 @@ class BlobStoreSpec extends SparkSpec {
       assert(opened.grid == grid && opened.variables == Seq("v0"))
       assert(opened.df.count() == 32L * 16 * 2)
     } finally {
-      graft.sources.BlobStore.drop(s"mock-s3://bucket$dir/c")
+      graft.sources.StoreCache.invalidate(s"mock-s3://bucket$dir/c")
       spark.sparkContext.hadoopConfiguration.unset("fs.mock-s3.impl")
     }
   }
@@ -159,7 +159,7 @@ class BlobStoreSpec extends SparkSpec {
       assert(bs.fetches.get() == f0 + 2,
         s"expected exactly 2 inner fetches, got ${bs.fetches.get() - f0}")
     } finally {
-      BlobStore.drop(root)
+      graft.sources.StoreCache.invalidate(root)
       spark.sparkContext.hadoopConfiguration.unset("fs.mock-s3.impl")
     }
   }

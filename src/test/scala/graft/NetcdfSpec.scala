@@ -340,7 +340,7 @@ class NetcdfSpec extends SparkSpec {
     java.nio.file.Files.write(tdir.resolve("0"), bb.array())
     java.nio.file.Files.deleteIfExists(
       java.nio.file.Paths.get(s"$dir/m.zarr/.zmetadata"))
-    graft.sources.ZarrStore.invalidateMeta(s"$dir/m.zarr")
+    graft.sources.StoreCache.invalidate(s"$dir/m.zarr")
     assert(axisUsOf(graft.sources.ZarrStore.openCube(spark, s"$dir/m.zarr"))
       == expectedUs)
     // catalogue labels format the decoded axis correctly

@@ -266,12 +266,12 @@ class TileWindowSpec extends SparkSpec {
     val key = Render.Extent(Seq(day1), 0, 0, 1, 1)
     val df = spark.range(1).toDF()
     val a = new java.util.concurrent.FutureTask[(Array[Double], Boolean)](
-      () => StoreCache.frameRead(df, "v", key, Nil) {
+      () => StoreCache.frameRead(df, None, "v", key, Nil) {
         started.countDown(); release.await(); first })
     new Thread(a).start()
     started.await()
     val b = new java.util.concurrent.FutureTask[(Array[Double], Boolean)](
-      () => StoreCache.frameRead(df, "v", key, Nil)(Array(2.0)))
+      () => StoreCache.frameRead(df, None, "v", key, Nil)(Array(2.0)))
     new Thread(b).start()
     Thread.sleep(200)
     assert(!b.isDone, "the second caller waits for the running load")

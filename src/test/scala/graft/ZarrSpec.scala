@@ -270,7 +270,7 @@ class ZarrSpec extends SparkSpec {
       """{"scale_factor": 0.5, "add_offset": 3.0, "units": "K"}""")
     java.nio.file.Files.deleteIfExists(
       java.nio.file.Paths.get(s"$dir/c.zarr/.zmetadata"))
-    ZarrStore.invalidateMeta(s"$dir/c.zarr")
+    graft.sources.StoreCache.invalidate(s"$dir/c.zarr")
     val meta = ZarrStore.readArrayMeta(s"$dir/c.zarr", "v0")
     assert(meta.attrs.get("scale_factor").contains(Seq(0.5)))
     assert(!meta.attrs.contains("units")) // text attrs are not numeric
@@ -284,7 +284,7 @@ class ZarrSpec extends SparkSpec {
       if (o.isNaN) assert(v.isNaN, s"NaN hole lost at $k")
       else assert(java.lang.Double.compare(v, o * 0.5 + 3.0) == 0, s"cell $k")
     }
-    ZarrStore.invalidateMeta(s"$dir/c.zarr")
+    graft.sources.StoreCache.invalidate(s"$dir/c.zarr")
   }
 
   test("mixed packing: per-variable CF attrs apply per variable") {
@@ -309,7 +309,7 @@ class ZarrSpec extends SparkSpec {
       """{"scale_factor": 2.0, "add_offset": 1.0}""")
     java.nio.file.Files.deleteIfExists(
       java.nio.file.Paths.get(s"$dir/c.zarr/.zmetadata"))
-    ZarrStore.invalidateMeta(s"$dir/c.zarr")
+    graft.sources.StoreCache.invalidate(s"$dir/c.zarr")
     both().foreach { case (k, (s0, s1)) =>
       val (p0, p1) = plain(k)
       if (!p0.isNaN)
@@ -319,7 +319,7 @@ class ZarrSpec extends SparkSpec {
         assert(java.lang.Double.compare(s1, p1) == 0,
           s"v1 must NOT inherit v0's attrs at $k")
     }
-    ZarrStore.invalidateMeta(s"$dir/c.zarr")
+    graft.sources.StoreCache.invalidate(s"$dir/c.zarr")
   }
 
   test("zarr CF time units: 'days since' axis decodes to timestamps") {
@@ -349,14 +349,14 @@ class ZarrSpec extends SparkSpec {
     java.nio.file.Files.write(tdir.resolve("0"), bb.array())
     java.nio.file.Files.deleteIfExists(
       java.nio.file.Paths.get(s"$dir/c.zarr/.zmetadata"))
-    ZarrStore.invalidateMeta(s"$dir/c.zarr")
+    graft.sources.StoreCache.invalidate(s"$dir/c.zarr")
     assert(rows() == expected, "CF-units axis must decode identically")
     // a 360_day calendar decodes to calendar-native epoch-us (days
     // counted in the 360-day year): base 2017-01-01 = (2017-1970)*360
     // = 16920 calendar days from the epoch
     java.nio.file.Files.writeString(tdir.resolve(".zattrs"),
       """{"units": "days since 2017-01-01", "calendar": "360_day"}""")
-    ZarrStore.invalidateMeta(s"$dir/c.zarr")
+    graft.sources.StoreCache.invalidate(s"$dir/c.zarr")
     val opened360 = ZarrStore.openCube(spark, s"$dir/c.zarr")
     val day = 86400000000L
     assert(opened360.timeCalendar.contains("360_day"))
@@ -372,11 +372,11 @@ class ZarrSpec extends SparkSpec {
     // a genuinely unknown calendar still fails loudly
     java.nio.file.Files.writeString(tdir.resolve(".zattrs"),
       """{"units": "days since 2017-01-01", "calendar": "lunar"}""")
-    ZarrStore.invalidateMeta(s"$dir/c.zarr")
+    graft.sources.StoreCache.invalidate(s"$dir/c.zarr")
     val e = intercept[Exception](rows())
     assert(e.getMessage != null && e.getMessage.contains("calendar") ||
       e.getCause != null, s"got: $e")
-    ZarrStore.invalidateMeta(s"$dir/c.zarr")
+    graft.sources.StoreCache.invalidate(s"$dir/c.zarr")
   }
 
   test("numcodecs lz4 compressor decodes (v2)") {
@@ -411,7 +411,7 @@ class ZarrSpec extends SparkSpec {
     java.nio.file.Files.write(tdir.resolve("0"), bb.array())
     java.nio.file.Files.deleteIfExists(
       java.nio.file.Paths.get(s"$dir/c.zarr/.zmetadata"))
-    ZarrStore.invalidateMeta(s"$dir/c.zarr")
+    graft.sources.StoreCache.invalidate(s"$dir/c.zarr")
     val got = ZarrStore.openCube(spark, s"$dir/c.zarr").df
       .select("time", "y_idx", "x_idx", "v0")
       .collect().map(_.toString).sorted.toSeq
@@ -573,7 +573,7 @@ class ZarrSpec extends SparkSpec {
     val root = java.nio.file.Paths.get(s"$dir/v3.zarr/zarr.json")
     java.nio.file.Files.writeString(root,
       """{"zarr_format": 3, "node_type": "group", "attributes": {}}""")
-    ZarrStore.invalidateMeta(s"$dir/v3.zarr")
+    graft.sources.StoreCache.invalidate(s"$dir/v3.zarr")
     val derived = ZarrStore.openCube(spark, s"$dir/v3.zarr")
     assert(derived.grid == grid)
     assert(derived.df.count() == 16L * 8 * 3)
@@ -670,7 +670,7 @@ class ZarrSpec extends SparkSpec {
       java.nio.file.Paths.get(store, ".zmetadata")))
 
     def metaCost(body: => Unit): Long = {
-      ZarrStore.invalidateMeta(store)
+      graft.sources.StoreCache.invalidate(store)
       val before = ZarrStore.metaFileReads.get()
       body
       ZarrStore.metaFileReads.get() - before
@@ -694,7 +694,7 @@ class ZarrSpec extends SparkSpec {
     // NaN fill values defeat case-class equality; compare via toString
     assert(ZarrStore.readArrayMeta(store, "v0").toString == meta.toString)
     // cube still round-trips with the consolidated view gone
-    ZarrStore.invalidateMeta(store)
+    graft.sources.StoreCache.invalidate(store)
     assert(ZarrStore.openCube(spark, store).df.count() == 16L * 8 * 2)
   }
 
